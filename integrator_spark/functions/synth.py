@@ -1,10 +1,11 @@
 """Deterministic synthetic data kernels for the at-scale harnesses.
 
-Scale measurements (scripts/knn_at_scale.py, scripts/ann_at_scale.py)
-need multi-million-row embedding tables that are bit-reproducible
-across runs and across executors WITHOUT shipping RNG state: these
-kernels derive every value from integer counters through the splitmix64
-finalizer, so the same (id, column) always yields the same float. The
+Scale measurements (the 1.1M-row kNN and ANN runs, measured in round 5
+(SCALING.md)) need multi-million-row embedding tables that are
+bit-reproducible across runs and across executors WITHOUT shipping RNG
+state: these kernels derive every value from integer counters through
+the splitmix64 finalizer, so the same (id, column) always yields the
+same float. The
 module lives inside the package (not the scripts) because the closures
 that use it execute on executor Python workers, which import the
 package via the addPyFile ride-along (session.py) — a script-local

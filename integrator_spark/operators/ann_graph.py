@@ -38,34 +38,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import budget
 from .ckpt import truncated_checkpoint
-
 from .knn import _dot_expr
-
-#: Broadcast-matrix scoring cutover for the graph BUILD: if the whole
-#: normalized corpus fits this many bytes as float64 (n x dim x 8), the
-#: per-round candidate scoring gathers rows from one broadcast numpy
-#: matrix (skinny (src, dst) pairs shuffle; vectors never do) instead
-#: of attaching vectors via two joins — which at 1.1M x 64 would
-#: shuffle ~60 GB of vector payload PER ROUND. Same size-routing
-#: discipline as operators/knn.py MAX_BROADCAST_CELLS; above the
-#: budget the join path keeps working at any n.
-MATRIX_BUDGET_BYTES = 1 << 30
-
-#: Per-TASK budget for the fused navigate kernel's precomputed
-#: query-batch × corpus score matrix (nq_local × n × 8 bytes). Within
-#: it, every hop's scoring is one fancy-index gather instead of
-#: re-materializing two candidate-sized float64 gather arrays per hop;
-#: past it (huge corpora or fat query batches) the kernel falls back to
-#: the per-pair einsum, which works at any n. The matrix's per-element
-#: reduction runs the same sequential-j einsum order as the per-pair
-#: form, so scores are bit-identical on both routes. Caveat (r12
-#: ADVICE): NumPy does not *guarantee* identical accumulation across
-#: einsum signatures on every platform/build (SIMD/stride dependent) —
-#: cross-route determinism is pinned by the parity tests on THIS
-#: build, not promised universally; a near-tie beam selection could in
-#: principle differ on another platform.
-SCORE_MATRIX_BUDGET_BYTES = 256 << 20
 
 
 def _sorted_lookup(ids_sorted: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -91,7 +66,6 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
                      id_col: str = "vec_id",
                      vec_col: str = "embedding",
                      exclude_self: bool = False,
-                     matrix_budget_bytes: int = MATRIX_BUDGET_BYTES,
                      entries: DataFrame | None = None,
                      fused: bool = True) -> DataFrame:
     """Batch beam search over a k-NN graph for OUT-OF-SAMPLE queries —
@@ -124,8 +98,8 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
     Either way the per-hop frontier afterwards stays Q · beam · degree,
     independent of n.
 
-    Scoring is size-routed like the build: under ``matrix_budget_bytes``
-    the normalized corpus + query matrices broadcast once and every
+    Scoring is size-routed like the build: while the normalized corpus
+    + query matrices fit the driver budget they broadcast once and every
     round scores via numpy gather+rowdot (no vector shuffle); above it,
     vectors attach via joins. Returns (query_id, neighbor_id, cos_sim,
     rank) with the usual (cos DESC, id ASC) tie-break."""
@@ -164,7 +138,7 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
     # would let an oversized query batch blow the driver through the
     # module's own size-routing contract (r6 advisor, medium).
     nq = q.count()
-    if (n + nq) * dim * 8 <= matrix_budget_bytes:
+    if budget.fits_driver((n + nq) * dim * 8):
         # float32 storage (the source embeddings' own precision) halves
         # the per-worker broadcast residency; gathered rows widen to
         # float64 before the dot, so only storage rounding (~5e-7 on a
@@ -197,7 +171,7 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
     # pin the two routes byte-equal on the fixture corpus.)
     if fused and mat_bc is not None and entries is None:
         g_rows = graph.count()
-        if g_rows * 16 <= matrix_budget_bytes:
+        if budget.fits_driver(g_rows * 16):
             ent_ids = np.array(
                 [r.cand for r in
                  b.select("cand")
@@ -212,6 +186,11 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
                 (src_arr[aorder], dst_arr[aorder]))
             kk, bm_w, hops_n, excl = int(k), int(beam), int(hops), \
                 bool(exclude_self)
+            # A task's query batch holds at most maxRecordsPerBatch
+            # rows, so this bounds every batch's nq_l × n score matrix.
+            batch_rows = min(nq, int(spark.conf.get(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", "10000")))
+            score_fits = budget.fits_driver(batch_rows * n * 8)
 
             def navigate(batches: Iterator[pd.DataFrame]
                          ) -> Iterator[pd.DataFrame]:
@@ -219,15 +198,12 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
                 srcs, dsts = adj_bc.value
                 # Hoist the float64 corpus copy ONCE per task (r13,
                 # ADVICE): the old per-batch bmat.astype(float64) was
-                # an unbudgeted n×dim×8 transient re-cast for every
-                # query batch. The copy is made only when its own
-                # bytes fit the score-matrix budget — over budget the
-                # per-pair path casts candidate-sized slices as
-                # before. Cast-then-gather equals gather-then-cast
-                # elementwise, so scores are unchanged on both routes.
-                bmat64 = None
-                if bmat.size * 8 <= SCORE_MATRIX_BUDGET_BYTES:
-                    bmat64 = bmat.astype(np.float64)
+                # an n×dim×8 transient re-cast for every query batch.
+                # Its bytes are within the (n + nq)×dim×8 the matrix
+                # route already fit to the budget. Cast-then-gather
+                # equals gather-then-cast elementwise, so scores are
+                # unchanged.
+                bmat64 = bmat.astype(np.float64)
 
                 for pdf in batches:
                     qids_local = pdf["qid"].to_numpy(dtype=np.int64)
@@ -241,20 +217,22 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
                         continue
                     qloc = _sorted_lookup(qids_s, qids_local)
                     # Precompute this batch's query × corpus score
-                    # matrix ONCE when it fits the per-task budget
+                    # matrix ONCE when it fits the budget (score_fits,
+                    # decided on the driver for the largest batch)
                     # (r12: kernel profile showed the per-hop
                     # gather+cast+dot materializing two ~800k × dim
                     # float64 arrays per hop — 60% of the kernel wall;
                     # the matrix form runs the SAME sequential-j einsum
                     # reduction per element, so every looked-up cosine
                     # is bit-identical to the per-pair form, verified
-                    # by the fused-vs-relational parity tests). Above
-                    # the budget (huge corpora / fat batches) the
-                    # per-pair path below keeps working at any n.
+                    # by the fused-vs-relational parity tests; NumPy
+                    # does not promise identical accumulation across
+                    # einsum signatures on every build, so that
+                    # equality is pinned on this build, not universal).
+                    # Above the budget (huge corpora / fat batches)
+                    # the per-pair path below keeps working at any n.
                     S = None
-                    if (bmat64 is not None
-                            and nq_l * len(bids_s) * 8
-                            <= SCORE_MATRIX_BUDGET_BYTES):
+                    if score_fits:
                         S = np.einsum("ij,kj->ik",
                                       qmat[qloc].astype(np.float64),
                                       bmat64)
@@ -281,8 +259,7 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
                             cos = np.einsum(
                                 "ij,ij->i",
                                 qmat[qloc[qr]].astype(np.float64),
-                                bmat64[ci] if bmat64 is not None
-                                else bmat[ci].astype(np.float64))
+                                bmat64[ci])
                         order = np.lexsort((cd, -cos, qr))
                         qr, cd, cos = qr[order], cd[order], cos[order]
                         if drop_dups:
@@ -414,7 +391,6 @@ CELL_INIT_MIN_ROWS = 100_000
 def nn_descent(emb: DataFrame, k: int = 10, iters: int = 4,
                id_col: str = "vec_id", vec_col: str = "embedding",
                seed: int = 42,
-               matrix_budget_bytes: int = MATRIX_BUDGET_BYTES,
                init: str = "auto") -> DataFrame:
     """Build an approximate k-NN graph (vec_id, neighbor_id, cos_sim,
     rank) by NN-Descent. Ids need not be contiguous: the random init
@@ -426,8 +402,9 @@ def nn_descent(emb: DataFrame, k: int = 10, iters: int = 4,
     (hash-seeded draws; the cell path's k-means is the deterministic
     train_centroids sampler).
 
-    Scoring is size-routed (see MATRIX_BUDGET_BYTES): under the budget
-    the normalized corpus rides one broadcast float64 matrix and each
+    Scoring is size-routed on the driver budget (operators/budget.py):
+    while the n×dim float64 corpus fits, it rides one broadcast matrix
+    and each
     round's candidate pairs are scored by a C-level gather+rowdot in a
     mapInPandas kernel — the shuffle carries only (src, dst, cos), not
     vectors; above it, vectors attach via joins (works at any n).
@@ -454,7 +431,7 @@ def nn_descent(emb: DataFrame, k: int = 10, iters: int = 4,
 
     dim = len(base.select("_v").first()[0])
     mat_bc = None
-    if n * dim * 8 <= matrix_budget_bytes:
+    if budget.fits_driver(n * dim * 8):
         # Bounded driver collect (<= budget bytes by the route check),
         # sorted by id so executor-side lookups are one searchsorted.
         # float32 storage halves every worker's broadcast residency;
@@ -552,7 +529,7 @@ def nn_descent(emb: DataFrame, k: int = 10, iters: int = 4,
     # Spark expressions (xxhash64 draws / cell seeding), collected
     # bounded at n·(k+2) rows. Above the budget the relational rounds
     # below run unchanged at any n.
-    if mat_bc is not None and n * n * 8 <= SCORE_MATRIX_BUDGET_BYTES:
+    if mat_bc is not None and budget.fits_driver(n * n * 8):
         ipdf = init_edges.toPandas()
         isrc = ipdf["src"].to_numpy(dtype=np.int64)
         idst = ipdf["dst"].to_numpy(dtype=np.int64)

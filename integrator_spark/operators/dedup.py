@@ -21,7 +21,6 @@ moderate cases; drop top-frequency shingles for pathological corpora.
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator, Sequence
 
 import numpy as np
@@ -29,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import budget
 from .ckpt import truncated_checkpoint
 
 from ..functions.text import word_shingles
@@ -461,29 +461,22 @@ def exact_dedup_keep_first(df: DataFrame, key_cols: list[str],
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-#: Driver union-find budget for the CC operators, in EDGE ROWS of the
-#: deduped edge frame. Under it, components are contracted in one
-#: bounded Arrow collect + a path-halving union-find (attach larger
-#: root under smaller, so every root IS its component min — the exact
-#: output contract of both distributed fixpoints below); over it, the
-#: distributed loops run unchanged (the 100 TB route). Same pattern and
-#: ceiling class as graph.py's MAX_DRIVER_CONTRACT_EDGES (r12-verified
-#: legitimate small-side-fits kernel); route parity is pinned in
-#: tests/test_operators.py.
-MAX_DRIVER_CC_EDGES = int(os.environ.get(
-    "SPARK_GRAFT_MAX_DRIVER_CC_EDGES", "2000000"))
+#: Driver bytes per edge row of :func:`_driver_components` — the Arrow
+#: frame, the Python int lists, the parent dict and the output tuples:
+#: tracemalloc peak measured 180-190 B/row on 1M random edges.
+UF_EDGE_ROW_BYTES = 192
 
 
-def _driver_components(edges: DataFrame) -> DataFrame | None:
-    """(u, v) long edge frame → (doc_id, cluster_id = component min)
-    via driver union-find when the edge count fits
-    MAX_DRIVER_CC_EDGES, else None (callers fall back to their
-    distributed loop). The node set is exactly the ids appearing in
-    ``edges`` — each operator passes its own prepped edge frame, so
-    per-operator self-loop semantics are preserved. ``edges`` should
-    be checkpointed (the gate counts it)."""
-    if edges.count() > MAX_DRIVER_CC_EDGES:
-        return None
+def _driver_components(edges: DataFrame) -> DataFrame:
+    """Two-column long edge frame → (doc_id, cluster_id = component
+    min) via one bounded Arrow collect and a path-halving union-find
+    (attach larger root under smaller, so every root IS its component
+    min — the exact output contract of both distributed fixpoints
+    below). The node set is exactly the ids appearing in ``edges`` —
+    each operator passes its own prepped edge frame, so per-operator
+    self-loop semantics are preserved. Takes no routing decision:
+    callers gate it with ``budget.fits_driver(n_edges *
+    UF_EDGE_ROW_BYTES)`` on the edge count they already hold."""
     pdf = edges.toPandas()
     parent: dict = {}
 
@@ -554,9 +547,8 @@ def connected_components_star(pairs: DataFrame, a_col: str = "d1",
     # job-barrier overhead. Under the driver budget the whole
     # contraction is one Arrow collect; over it the loop below is the
     # scale route. Output row sets are identical (parity-tested).
-    fast = _driver_components(edges)
-    if fast is not None:
-        return fast
+    if budget.fits_driver(edges.count() * UF_EDGE_ROW_BYTES):
+        return _driver_components(edges)
     prev_sig = None
     for _ in range(max_iterations):
         # large-star over the symmetric neighborhood
@@ -592,6 +584,10 @@ def connected_components_star(pairs: DataFrame, a_col: str = "d1",
         if prev_sig == (sig.n, sig.h):
             break
         prev_sig = (sig.n, sig.h)
+    else:
+        raise RuntimeError(
+            f"connected_components_star: max_iterations={max_iterations} "
+            f"exhausted before the edge set reached its fixpoint")
     return (edges.select(F.col("u").alias("doc_id"),
                          F.col("v").alias("cluster_id"))
             .unionByName(edges.select(F.col("v").alias("doc_id"),
@@ -634,9 +630,8 @@ def connected_components(pairs: DataFrame, a_col: str = "d1",
     # included: the symmetrized edge frame retains them, so they
     # register as singletons either way). Distributed loop below is
     # the at-scale fallback.
-    fast = _driver_components(edges)
-    if fast is not None:
-        return fast
+    if budget.fits_driver(edges.count() * UF_EDGE_ROW_BYTES):
+        return _driver_components(edges)
     labels = labels.localCheckpoint(eager=True)
     prev_sum: object = object()   # sentinel unequal to any sum
     for _ in range(max_iterations):
@@ -667,6 +662,13 @@ def connected_components(pairs: DataFrame, a_col: str = "d1",
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        # Truncated labels would differ from the driver route's exact
+        # components: fail instead of returning a partial labeling.
+        raise RuntimeError(
+            f"connected_components: max_iterations={max_iterations} "
+            f"exhausted before the labels reached their fixpoint — raise "
+            f"max_iterations (min labels move one hop per round)")
     return labels.select(F.col("node").alias("doc_id"),
                          F.col("label").alias("cluster_id"))
 
@@ -1388,7 +1390,7 @@ def _cosine_residual(cand: DataFrame, emb_a: DataFrame, emb_b: DataFrame,
 
     ``est_cells`` (r12, guide §8 — ship ids, not payloads): a caller's
     no-job estimate of the larger embedding frame's rows × dims. When
-    given and within operators.knn's MAX_BROADCAST_CELLS, the two
+    given and its float64 matrix fits the driver budget, the two
     vector fetch-joins (which shipped ~0.5 KB of array payload per
     CANDIDATE PAIR through the join and the Arrow boundary — 1.6 GB at
     3M pairs) are replaced by a broadcast of the raw matrices and an
@@ -1420,8 +1422,7 @@ def _cosine_residual(cand: DataFrame, emb_a: DataFrame, emb_b: DataFrame,
         with np.errstate(divide="ignore", invalid="ignore"):
             return np.where(den > 0, num / den, -2.0)
 
-    from .knn import MAX_BROADCAST_CELLS
-    if est_cells is not None and est_cells <= MAX_BROADCAST_CELLS:
+    if est_cells is not None and budget.fits_driver(est_cells * 8):
         spark = cand.sparkSession
         ids_a, mat_a = _raw_id_matrix(emb_a, id_col, vec_col)
         if emb_b is emb_a:

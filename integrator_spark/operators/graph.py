@@ -16,7 +16,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import budget
 from .ckpt import truncated_checkpoint
+from .dedup import (
+    UF_EDGE_ROW_BYTES,
+    _driver_components,
+    connected_components_star,
+)
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -190,7 +196,7 @@ def triangle_census(edges: DataFrame, src: str = "src",
     # r12 kernel (guide §4.2, the common_neighbor_pairs precedent): the
     # wedge join materializes every oriented wedge as a shuffle row
     # (~50M at sf0.1) only to probe it against the edge set. When the
-    # oriented edge list fits MAX_CSR_EDGES it broadcasts once
+    # oriented edge list's CSR fits the driver budget it broadcasts once
     # (sorted-CSR adjacency + sorted dense-packed edge keys) and edge
     # chunks count their wedge hits with vectorized CSR gathers +
     # searchsorted membership in a mapInPandas kernel — wedges never
@@ -200,7 +206,7 @@ def triangle_census(edges: DataFrame, src: str = "src",
     m_edges = o.count()   # cheap: o is eagerly checkpointed
     spark = edges.sparkSession
     tri = None
-    if 0 < m_edges <= MAX_CSR_EDGES:
+    if m_edges > 0 and budget.fits_driver(m_edges * CSR_EDGE_ROW_BYTES):
         import numpy as np
         import pandas as pd
 
@@ -456,14 +462,6 @@ def label_propagation(edges: DataFrame, src: str = "src",
     return labels
 
 
-#: Driver budget for Borůvka's contraction step: collected chosen-edge
-#: endpoint pairs (two longs each; 1M pairs ≈ 16 MB + row overhead —
-#: same ceiling philosophy as MAX_CSR_EDGES below). The chosen-edge
-#: graph has <= one edge per component, so only graphs with more than
-#: a million live components pay the relational star-CC fallback.
-MAX_DRIVER_CONTRACT_EDGES = 1_000_000
-
-
 def boruvka_msf(edges: DataFrame, src: str = "s", dst: str = "d",
                 w_col: str = "w", maximum: bool = False,
                 max_rounds: int = 40) -> DataFrame:
@@ -485,10 +483,10 @@ def boruvka_msf(edges: DataFrame, src: str = "s", dst: str = "d",
     Scale shape: per round, the edge relabel is two hash joins on the
     node key; the best-edge pick is one window over edge endpoints
     keyed by component; the contraction runs on the CHOSEN edges only
-    (<= one per component — a graph that halves each round): a driver
-    union-find when the chosen edges fit MAX_DRIVER_CONTRACT_EDGES,
-    star CC otherwise. Labels are lineage-truncated per round
-    (operators/ckpt).
+    (<= one per component — a graph that halves each round): the
+    driver union-find of operators/dedup when the chosen edges fit the
+    driver budget, star CC otherwise. Labels are lineage-truncated per
+    round (operators/ckpt).
     ``maximum=True`` negates the comparison (maximum spanning forest
     — e.g. the strongest-affinity backbone of a similarity graph)."""
     spark = edges.sparkSession
@@ -533,52 +531,23 @@ def boruvka_msf(edges: DataFrame, src: str = "s", dst: str = "d",
         # per-round checkpoints + signature collects cost ~6-10 Spark
         # jobs per MST round for a graph this shape contracts in
         # microseconds (r12, guide §1.2: the decision data is tiny,
-        # only the relabel join is data-proportional). Attaching the
-        # larger root under the smaller keeps every set's root = its
-        # min, the exact (doc_id -> component min) contract of
-        # connected_components_star, which remains the over-budget
-        # 100 TB fallback.
-        if n_chosen <= MAX_DRIVER_CONTRACT_EDGES:
-            parent: dict = {}
-
-            def _find(x: int) -> int:
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            # Arrow transfer, not py4j Row deserialization (r13,
-            # ADVICE): at the 1M-edge ceiling collect() is an order of
-            # magnitude slower and more driver-heap-hungry than
-            # toPandas() + two int64 numpy columns.
-            cpdf = chosen.select("cs", "cd").toPandas()
-            for a, b in zip(cpdf["cs"].to_numpy().tolist(),
-                            cpdf["cd"].to_numpy().tolist()):
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = _find(a), _find(b)
-                if ra != rb:
-                    if ra < rb:
-                        parent[rb] = ra
-                    else:
-                        parent[ra] = rb
-            cc = spark.createDataFrame(
-                [(c, _find(c)) for c in parent], "comp long, newc long")
-            ms = F.broadcast(cc.select(F.col("comp").alias("cs"),
-                                       F.col("newc").alias("_ns")))
-            md = F.broadcast(cc.select(F.col("comp").alias("cd"),
-                                       F.col("newc").alias("_nd")))
-        else:
-            from .dedup import connected_components_star
-            cc = connected_components_star(
-                chosen.select(F.col("cs").alias("d1"),
-                              F.col("cd").alias("d2")), "d1", "d2")
-            # No broadcast hint: the round-1 component map is ~n/2 rows
-            # (AQE broadcasts it only once contraction shrinks it).
-            ms = cc.select(F.col("doc_id").alias("cs"),
-                           F.col("cluster_id").alias("_ns"))
-            md = cc.select(F.col("doc_id").alias("cd"),
-                           F.col("cluster_id").alias("_nd"))
+        # only the relabel join is data-proportional). Both routes
+        # return the (doc_id -> component min) map;
+        # connected_components_star remains the over-budget 100 TB
+        # fallback, gated on the count this round already holds.
+        pairs = chosen.select(F.col("cs").alias("d1"),
+                              F.col("cd").alias("d2"))
+        driver = budget.fits_driver(n_chosen * UF_EDGE_ROW_BYTES)
+        cc = (_driver_components(pairs) if driver
+              else connected_components_star(pairs, "d1", "d2"))
+        # Broadcast only the driver route's map: the star route's
+        # round-1 map is ~n/2 rows (AQE broadcasts it only once
+        # contraction shrinks it).
+        hint = F.broadcast if driver else (lambda df: df)
+        ms = hint(cc.select(F.col("doc_id").alias("cs"),
+                            F.col("cluster_id").alias("_ns")))
+        md = hint(cc.select(F.col("doc_id").alias("cd"),
+                            F.col("cluster_id").alias("_nd")))
         ecur = truncated_checkpoint(
             ecur.join(ms, "cs", "left").join(md, "cd", "left")
             .select("s", "d", "w",
@@ -600,11 +569,10 @@ def boruvka_msf(edges: DataFrame, src: str = "s", dst: str = "d",
     return msf
 
 
-#: Broadcast budget for the CSR common-neighbor kernel: collected edge
-#: endpoint pairs. 32M edges ≈ 512 MB of int64 endpoint arrays on the
-#: driver — the same ceiling philosophy as operators/knn's
-#: MAX_BROADCAST_CELLS; past it the caller's relational wedge plan runs.
-MAX_CSR_EDGES = 32_000_000
+#: Driver bytes per edge row of the CSR kernels (collected endpoints,
+#: unique ids, index arrays, CSR order): tracemalloc peak measured
+#: 137 B/row (common neighbors) and 97 B/row (triangles) on 1M edges.
+CSR_EDGE_ROW_BYTES = 144
 
 
 def _csr_gather(indices, indptr, nodes, cnt):
@@ -630,9 +598,9 @@ def common_neighbor_pairs(edges: DataFrame, src: str = "s",
 
     Why the kernel (r12, guide §4.2): the wedge join materializes
     Σ_z deg(z)² rows (298M at sf0.1, the whole 25 s wall) only to
-    count them per pair. When the edge list fits the broadcast budget
-    (``est_edges`` ≤ MAX_CSR_EDGES, double-checked against the actual
-    collected size), the counting runs as a broadcast-CSR bincount in
+    count them per pair. When the edge list's CSR fits the driver
+    budget (checked on ``est_edges``, then on the actual collected
+    size), the counting runs as a broadcast-CSR bincount in
     numpy over node chunks via mapInPandas: wedges never become rows,
     adjacency/self pairs are zeroed in the count matrix (exactly the
     old anti-join + n1 < n2 cut), and only the surviving
@@ -646,9 +614,11 @@ def common_neighbor_pairs(edges: DataFrame, src: str = "s",
     sdf = edges.select(F.col(src).cast("long").alias("s"),
                        F.col(dst).cast("long").alias("d"))
     pdf = None
-    if est_edges is not None and est_edges <= MAX_CSR_EDGES:
+    if (est_edges is not None
+            and budget.fits_driver(est_edges * CSR_EDGE_ROW_BYTES)):
         pdf = sdf.toPandas()      # budget-gated driver collect
-        if len(pdf) > MAX_CSR_EDGES or len(pdf) == 0:
+        if (len(pdf) == 0 or not
+                budget.fits_driver(len(pdf) * CSR_EDGE_ROW_BYTES)):
             pdf = None            # estimate lied / nothing to index
     if pdf is None:
         # Relational wedge plan — the pre-r12 formulation, and the

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import budget
+
 KNN_SCHEMA = "vec_id long, neighbor_id long, cos_sim double"
 
 
@@ -179,7 +181,7 @@ def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
     vectorized astype instead of a per-row ``tolist()`` walk. The
     driver still holds one matrix copy (inherent to sc.broadcast), but
     the transfer and decode are columnar end-to-end, bounded by the
-    caller's MAX_BROADCAST_CELLS routing budget.
+    caller's driver-budget route check (operators/budget.py).
     """
     tbl = emb.select(id_col, vec_col).toArrow()
     ids = tbl.column(id_col).to_numpy()
@@ -235,51 +237,47 @@ def knn_blocked(emb: DataFrame, id_col: str = "vec_id",
     return emb.select(id_col, vec_col).mapInPandas(topk_batches, KNN_SCHEMA)
 
 
-#: Broadcast-plan ceiling: candidate cells (rows x dims) the driver may
-#: collect + broadcast. 64M float64 cells ~ 512 MB — the documented
-#: knn_blocked bound (~1e6 x dim-64). Above it, knn_exact switches to
-#: the two-sided blocked plan automatically.
-MAX_BROADCAST_CELLS = 64_000_000
-
-
 def route_exact_plan(n: int, dim: int,
-                     max_broadcast_cells: int = MAX_BROADCAST_CELLS,
                      min_tasks: int = 1) -> tuple[str, int]:
     """Pure physical-plan routing decision shared by ``knn_exact`` and
     ``cosine_pairs_exact``: returns ``("broadcast", 1)`` when the
-    n×dim candidate matrix fits the broadcast budget, else
+    n×dim float64 candidate matrix fits the driver budget, else
     ``("twosided", n_blocks)`` with n_blocks sized so one block stays
     under the budget. Unit-testable without a session; the scale tests
-    pin the boundary (== budget → broadcast, budget+1 cell → twosided).
+    pin the boundary (== budget → broadcast, one row over → twosided).
 
-    ``min_tasks`` (callers pass the cluster's default parallelism) lifts
-    n_blocks to ~sqrt(min_tasks) so the cogrouped plan yields at least
-    ~min_tasks block-pair tasks — a 70M-cell input on a 1000-core
-    cluster should not run as 4 giant tasks. Block count trades shuffle
-    replication (n_blocks× the data) for per-task memory and
-    parallelism; the budget term is the floor, the parallelism term
-    only ever raises it.
+    The budget term is capped at ceil(√n) blocks: past it the
+    n_blocks² block pairs outnumber the rows, so smaller blocks only
+    add groups (this is what a zero budget, which forces the two-sided
+    plan at any n, runs). ``min_tasks`` (callers pass the cluster's
+    default parallelism) lifts n_blocks to ~sqrt(min_tasks) so the
+    cogrouped plan yields at least ~min_tasks block-pair tasks — a
+    70M-cell input on a 1000-core cluster should not run as 4 giant
+    tasks. Block count trades shuffle replication (n_blocks× the data)
+    for per-task memory and parallelism; the budget term is the floor,
+    the parallelism term only ever raises it.
     """
     import math
 
-    if n * dim <= max_broadcast_cells:
+    nbytes = n * dim * 8
+    if budget.fits_driver(nbytes):
         return ("broadcast", 1)
+    by_budget = math.ceil(nbytes / max(1, budget.DRIVER_BUDGET_BYTES))
     n_blocks = max(2,
-                   math.ceil(n * dim / max_broadcast_cells),
+                   min(by_budget, math.ceil(math.sqrt(n))),
                    math.ceil(math.sqrt(max(1, min_tasks))))
     return ("twosided", n_blocks)
 
 
 def knn_exact(emb: DataFrame, id_col: str = "vec_id",
               vec_col: str = "embedding", k: int = 1,
-              max_broadcast_cells: int = MAX_BROADCAST_CELLS,
               est_cells: int | None = None) -> DataFrame:
     """Exact top-k with automatic physical-plan selection.
 
-    Routes on a size estimate: below ``max_broadcast_cells`` the
-    broadcast matmul plan (zero exchanges); above it, the two-sided
-    blocked plan with ``n_blocks`` sized so a single candidate block
-    stays under the broadcast budget. All three exact strategies are
+    Routes on a size estimate: while the float64 matrix fits the
+    driver budget, the broadcast matmul plan (zero exchanges); above
+    it, the two-sided blocked plan with ``n_blocks`` sized so a single
+    candidate block stays under the budget. All three exact strategies are
     bit-identical, so routing is purely physical — the 100 TB corpus
     takes the cogrouped path without the driver ever materializing the
     matrix.
@@ -288,13 +286,13 @@ def knn_exact(emb: DataFrame, id_col: str = "vec_id",
     source parquet bytes / 4) without running any job; when omitted, a
     cheap count+dim aggregate provides the estimate.
     """
-    if est_cells is not None and est_cells <= max_broadcast_cells:
+    if est_cells is not None and budget.fits_driver(est_cells * 8):
         return knn_blocked(emb, id_col, vec_col, k)
     stats = emb.agg(F.count(F.lit(1)).alias("n"),
                     F.first(F.size(F.col(vec_col))).alias("dim")).first()
     n, dim = int(stats["n"] or 0), int(stats["dim"] or 0)
     plan, n_blocks = route_exact_plan(
-        n, dim, max_broadcast_cells,
+        n, dim,
         min_tasks=emb.sparkSession.sparkContext.defaultParallelism)
     if plan == "broadcast":
         return knn_blocked(emb, id_col, vec_col, k)
@@ -400,20 +398,19 @@ def cosine_pairs_twosided(emb: DataFrame, threshold: float,
 
 def cosine_pairs_exact(emb: DataFrame, threshold: float,
                        id_col: str = "vec_id", vec_col: str = "embedding",
-                       max_broadcast_cells: int = MAX_BROADCAST_CELLS,
                        est_cells: int | None = None) -> DataFrame:
     """Threshold pair scan with the same automatic physical-plan routing
-    as ``knn_exact``: under the broadcast budget, the one-sided
+    as ``knn_exact``: under the driver budget, the one-sided
     broadcast matmul (``cosine_pairs_blocked``); above it, the
     two-sided cogrouped block plan — never an unconditional full-matrix
     collect (the round-3 verdict's one scale-killer)."""
-    if est_cells is not None and est_cells <= max_broadcast_cells:
+    if est_cells is not None and budget.fits_driver(est_cells * 8):
         return cosine_pairs_blocked(emb, threshold, id_col, vec_col)
     stats = emb.agg(F.count(F.lit(1)).alias("n"),
                     F.first(F.size(F.col(vec_col))).alias("dim")).first()
     n, dim = int(stats["n"] or 0), int(stats["dim"] or 0)
     plan, n_blocks = route_exact_plan(
-        n, dim, max_broadcast_cells,
+        n, dim,
         min_tasks=emb.sparkSession.sparkContext.defaultParallelism)
     if plan == "broadcast":
         return cosine_pairs_blocked(emb, threshold, id_col, vec_col)

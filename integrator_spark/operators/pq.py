@@ -31,8 +31,7 @@ offset); encode breaks argmin ties at the lowest centroid id
 Scale posture: the codebook is m × ksub × dsub floats (8×16×8 = 8 KB
 at the registered dials; 256×256 subspace dials are < 2 MB) — always
 broadcastable. Query LUTs are Q × m × ksub doubles and are
-SIZE-ROUTED (``LUT_BUDGET_BYTES``, same discipline as
-knn.MAX_BROADCAST_CELLS / ann_graph.MATRIX_BUDGET_BYTES): under the
+SIZE-ROUTED on the driver budget (operators/budget.py): under the
 budget the whole LUT block is collected + broadcast once (zero
 shuffle); above it the LUT rows are computed executor-side in a
 ``mapInPandas`` and meet code blocks in a cogrouped grid — the driver
@@ -51,6 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import budget
 from .knn import _collect_matrix, _dot_expr
 
 
@@ -206,14 +206,6 @@ def pq_encode(emb: DataFrame, codebook: np.ndarray,
         encode, f"{id_col} long, codes binary")
 
 
-#: Query-side routing budget for the flat-PQ scan: the broadcast route
-#: collects the query matrix (nq × dim float64) and broadcasts the LUT
-#: block (nq × m × ksub float64); when their sum exceeds this many
-#: bytes, pq_search switches to the blocked-cogroup route, which never
-#: collects anything query-sized to the driver. 1 GiB — the same order
-#: as knn.MAX_BROADCAST_CELLS (64M float64 cells ≈ 512 MB).
-LUT_BUDGET_BYTES = 1 << 30
-
 #: Code rows per cogroup block on the blocked route: applyInPandas
 #: materializes one (query-block × code-block) group per task, so this
 #: bounds the per-task code residency (~(8 + m) bytes/row packed;
@@ -227,7 +219,6 @@ def pq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
               codebook: np.ndarray, k: int = 1, shortlist: int = 32,
               id_col: str = "vec_id", vec_col: str = "embedding",
               exclude_self: bool = False,
-              lut_budget_bytes: int = LUT_BUDGET_BYTES,
               code_block_rows: int = CODE_BLOCK_ROWS) -> DataFrame:
     """ADC scan + exact rerank: queries build m × ksub inner-product
     LUTs once, every code row is scored by m table lookups (no float
@@ -238,19 +229,20 @@ def pq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
     vector queries; quantization only affects which candidates reach
     the rerank (measured as recall, pinned in tests).
 
-    The query side is size-routed on ``lut_budget_bytes``: a query
-    batch whose collected matrix + LUT broadcast fit the budget takes
-    the zero-shuffle broadcast route; a larger batch (e.g. corpus-as-
-    queries at the 1e9-vector posture) computes LUT rows executor-side
-    and scores them against hash-blocked code groups in a cogrouped
-    grid — no driver collect of anything query-sized, per-task
-    residency bounded by ``lut_budget_bytes`` (query blocks) and
-    ``code_block_rows`` (code blocks). Both routes produce
-    byte-identical rows: LUTs are float64 on both, per-pair ADC sums
-    are the same gather+sum, and every truncation is tie-exact by
-    (quantized score DESC, id ASC) — block-level tops are supersets of
-    the global top the final window extracts (route-equivalence pinned
-    in tests with a collect-forbidding monkeypatch)."""
+    The query side is size-routed on the driver budget: a query batch
+    whose collected matrix (nq × dim float64) + LUT broadcast
+    (nq × m × ksub float64) fit the budget takes the zero-shuffle
+    broadcast route; a larger batch (e.g. corpus-as-queries at the
+    1e9-vector posture) computes LUT rows executor-side and scores them
+    against hash-blocked code groups in a cogrouped grid — no driver
+    collect of anything query-sized, per-task residency bounded by the
+    budget (query blocks) and ``code_block_rows`` (code blocks). Both
+    routes produce byte-identical rows: LUTs are float64 on both,
+    per-pair ADC sums are the same gather+sum, and every truncation is
+    tie-exact by (quantized score DESC, id ASC) — block-level tops are
+    supersets of the global top the final window extracts
+    (route-equivalence pinned in tests with a collect-forbidding
+    monkeypatch)."""
     spark = codes.sparkSession
     m, ksub, dsub = codebook.shape
     dim = m * dsub
@@ -258,13 +250,13 @@ def pq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
     if nq == 0:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cos_sim double, rank int")
-    if nq * (m * ksub * 8 + dim * 8) <= lut_budget_bytes:
+    if budget.fits_driver(nq * (m * ksub * 8 + dim * 8)):
         scored = _adc_scan_broadcast(codes, queries, codebook, shortlist,
                                      id_col, vec_col, exclude_self)
     else:
         scored = _adc_scan_blocked(codes, queries, codebook, shortlist,
                                    id_col, vec_col, exclude_self,
-                                   nq, lut_budget_bytes, code_block_rows)
+                                   nq, code_block_rows)
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     w_short = Window.partitionBy("query_id").orderBy(
@@ -358,15 +350,14 @@ def _adc_scan_broadcast(codes: DataFrame, queries: DataFrame,
 def _adc_scan_blocked(codes: DataFrame, queries: DataFrame,
                       codebook: np.ndarray, shortlist: int,
                       id_col: str, vec_col: str, exclude_self: bool,
-                      nq: int, lut_budget_bytes: int,
-                      code_block_rows: int) -> DataFrame:
+                      nq: int, code_block_rows: int) -> DataFrame:
     """Over-budget ADC scan: LUT rows are computed executor-side
     (mapInPandas — only the tiny codebook broadcasts) and meet the code
     table in a (query-block × code-block) cogrouped grid, the same
     two-sided blocked shape as knn.cosine_pairs_twosided / the ivfpq
     bucket cogroup. Zero driver collects of query- or corpus-sized
     data; per-task residency ≤ one query block's float64 LUTs
-    (≤ lut_budget_bytes) + one code block (≤ code_block_rows rows).
+    (≤ the driver budget) + one code block (≤ code_block_rows rows).
     Shuffle: LUT rows replicate ×n_code_blocks and code rows
     ×n_query_blocks — the price of a flat full scan at a Q that
     doesn't fit anywhere whole. Emits per-(block-pair)
@@ -378,12 +369,14 @@ def _adc_scan_blocked(codes: DataFrame, queries: DataFrame,
     bc = spark.sparkContext.broadcast(codebook)
     offsets = (np.arange(m) * ksub).astype(np.int64)
     # Block counts: query blocks sized so one block's LUTs fit the same
-    # budget the broadcast route enforces; code blocks by row count.
+    # budget the broadcast route enforces (at most one block per query,
+    # which is what a zero budget runs); code blocks by row count.
     # The count on `codes` is one scan of the (32×-compressed) code
     # table — metadata-cheap when the index is a persisted parquet
     # layout, which is the over-budget serving posture.
     n_codes = codes.count()
-    qb_n = max(2, -(-(nq * m * ksub * 8) // max(1, lut_budget_bytes)))
+    qb_n = max(2, min(nq, -(-(nq * m * ksub * 8)
+                          // max(1, budget.DRIVER_BUDGET_BYTES))))
     cb_n = max(1, -(-n_codes // max(1, code_block_rows)))
     # Parallelism floor (same rationale as knn.route_exact_plan): the
     # grid should yield at least ~defaultParallelism tasks.

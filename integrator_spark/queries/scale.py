@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.num import DEC, dsum, sql_dsum
 from ..io import derived_dir, load_table
+from ..operators import budget
 from ..operators.skew import salted_aggregate
 from ..registry import register
 
@@ -321,20 +322,6 @@ ORDER BY vec_id
     return _ivf_det_chain_sql(k, iters) + tail
 
 
-#: Driver-side det-Lloyd kernel budget (bytes of the n×dim int64
-#: quantized matrix). Under budget the fit collects the matrix through
-#: ONE Arrow transfer and replays the exact integer Lloyd loop in
-#: numpy — collapsing the per-round driver-synchronized Spark jobs
-#: (seed TakeOrdered + iters× assignment/sum collects, ~6 jobs per fit,
-#: ~40 across vec_ann_ivfpq_det's 9 fits) into one collect. Over
-#: budget, the distributed per-round loop below runs unchanged — the
-#: at-scale route (k-means training over a 100 TB corpus samples to a
-#: bounded training set anyway; this gate IS that bound). Route parity
-#: is pinned bit-exactly in tests/test_operators.py.
-DET_FIT_BUDGET_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_DET_FIT_BUDGET_BYTES", str(256 << 20)))
-
-
 def _ivf_det_quantize(e: DataFrame) -> DataFrame:
     """The shared floor(x·2²⁰) integer-grid projection (eagerly
     checkpointed: every fit/serve consumer re-reads it)."""
@@ -347,14 +334,16 @@ def _ivf_det_quantize(e: DataFrame) -> DataFrame:
 
 def _det_collect_q(q: DataFrame, dim: int):
     """Bounded collect of the quantized frame for the driver-side
-    Lloyd kernel: (ids int64[n], mat int64[n×dim]) when n×dim×8 fits
-    DET_FIT_BUDGET_BYTES, else None (callers take the distributed
-    route). One cheap count job (q is checkpointed) gates the Arrow
-    transfer so the over-budget case never ships data."""
+    Lloyd kernel (r13: one Arrow collect replaces ~6 driver-synchronized
+    jobs per fit; k-means training at 100 TB samples to a bounded set
+    anyway, and this gate IS that bound): (ids int64[n], mat
+    int64[n×dim]) when n×dim×8 fits the driver budget, else None
+    (callers take the distributed route). One cheap count job (q is
+    checkpointed) gates the Arrow transfer so the over-budget case
+    never ships data."""
     import numpy as np
 
-    cap = max(1, DET_FIT_BUDGET_BYTES // (max(dim, 1) * 8))
-    if q.count() > cap:
+    if not budget.fits_driver(q.count() * dim * 8):
         return None
     pdf = q.select("vec_id", "q").toPandas()
     ids = pdf["vec_id"].to_numpy()
@@ -448,15 +437,6 @@ def _np_det_rank_pdf(ids, mat, cent: dict[int, list[int]], max_rn: int):
         "bucket": np.asarray(buckets, dtype=np.int32)[order.ravel()],
         "_rn": np.tile(np.arange(1, r + 1, dtype=np.int32), n),
     })
-
-
-#: Driver-side ADC budget: the PQ compressed-domain scan is allowed on
-#: the driver only while an n×n float64 score matrix would fit — flat
-#: PQ is an EXHAUSTIVE scan by design, so this bounds exactly the
-#: computation's own size, not an auxiliary. Over budget the
-#: relational scan below runs unchanged (the at-scale route).
-DET_ADC_BUDGET_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_DET_ADC_BUDGET_BYTES", str(512 << 20)))
 
 
 def _np_codebook_arrays(cent: dict[int, list[int]]):
@@ -589,8 +569,8 @@ def _np_pq_shortlist(ids, mat, cents, shortlist, m, sub_dim):
     """Driver replay of vec_ann_pq_det's exhaustive compressed-domain
     ADC scan (codes, LUT dots, score/|x̂| ranking) → top-``shortlist``
     pairs. Flat PQ scans every (q, x) pair BY DESIGN, so the n×n score
-    matrix is the computation itself — gated by DET_ADC_BUDGET_BYTES,
-    with the relational scan as the over-budget route."""
+    matrix is the computation itself — gated on its n×n×8 bytes by the
+    driver budget, with the relational scan as the over-budget route."""
     import numpy as np
 
     ids = np.asarray(ids, dtype=np.int64)
@@ -625,8 +605,8 @@ def _ivf_det_fit(e: DataFrame, k: int, iters: int,
     """Deterministic integer-grid Lloyd k-means shared by
     vec_ann_ivf_det and the dedup twin (queries/dedup.py): quantize
     the corpus to the floor(x·2²⁰) grid (checkpointed once), then fit
-    via the driver numpy kernel when the matrix fits
-    DET_FIT_BUDGET_BYTES (one Arrow collect, r13 optimization round —
+    via the driver numpy kernel when the matrix fits the driver
+    budget (one Arrow collect, r13 optimization round —
     guide §1.2: the per-round job barriers were the wall, not the
     arithmetic), else the distributed loop (seed TakeOrdered + per-
     round bounded k×dim collects — the documented ml_logreg posture).
@@ -844,7 +824,8 @@ def vec_ann_ivf_det(spark: SparkSession, sf_dir: str, k: int = 16,
     if e.isEmpty():
         return spark.createDataFrame(
             [], "vec_id long, neighbor_id long, approx_cos double")
-    q, cent, ranked = _ivf_det_fit_ranked(e, k, iters, max_rn=n_probe)
+    q, cent, ranked = _ivf_det_fit_ranked(e, k, iters,
+                                          max_rn=max(n_assign, n_probe))
     assigned = (ranked.filter(F.col("_rn") <= n_assign)
                 .select(F.col("vec_id").alias("neighbor_id"), "bucket"))
     probed = (ranked.filter(F.col("_rn") <= n_probe)
@@ -891,8 +872,8 @@ def vec_ann_ivf_deletes(spark: SparkSession, sf_dir: str, k: int = 16,
     if e.isEmpty():
         return spark.createDataFrame(
             [], "vec_id long, neighbor_id long, approx_cos double")
-    q, cent, ranked = _ivf_det_fit_ranked(e, k, iters,
-                                          max_rn=n_probe)  # pre-delete fit
+    q, cent, ranked = _ivf_det_fit_ranked(
+        e, k, iters, max_rn=max(n_assign, n_probe))  # pre-delete fit
     tomb = (e.filter(F.col("vec_id") % 7 == 3).select("vec_id"))
     live = ranked.join(F.broadcast(tomb), "vec_id", "left_anti")
     assigned = (live.filter(F.col("_rn") <= n_assign)
@@ -1089,7 +1070,7 @@ def vec_ann_pq_det(spark: SparkSession, sf_dir: str, m: int = 8,
         # matrix is gated by the n×n score-matrix budget; the
         # exact-cosine rerank stays in Spark. Over budget (or over the
         # fit budget) → the relational scan below, unchanged.
-        if len(ids) * len(ids) * 8 <= DET_ADC_BUDGET_BYTES:
+        if budget.fits_driver(len(ids) * len(ids) * 8):
             short = spark.createDataFrame(
                 _np_pq_shortlist(ids, mat, cents, shortlist, m, sub_dim),
                 "vec_id long, neighbor_id long")
@@ -1394,7 +1375,7 @@ def vec_ann_ivfpq_det(spark: SparkSession, sf_dir: str,
     # r13 (guide §1.2): the whole training side — coarse fit, cell
     # ranking, top-1 residuals, all m residual codebook fits — runs in
     # the driver numpy kernel from ONE Arrow collect when the corpus
-    # fits DET_FIT_BUDGET_BYTES. The old shape paid the coarse fit's 6
+    # fits the driver budget. The old shape paid the coarse fit's 6
     # jobs + 2 checkpoint jobs + m×(r_iters+1) residual-fit collects
     # (~40 driver-synchronized jobs — the query's wall at sf0.1, where
     # every job is fixed scheduling overhead). Residuals are exact
@@ -1421,7 +1402,7 @@ def vec_ann_ivfpq_det(spark: SparkSession, sf_dir: str,
         # over the already-collected matrix is milliseconds. Spark
         # keeps the exact-cosine rerank. Over budget → the r12
         # relational scan below, unchanged.
-        if len(ids) * len(ids) * 8 <= DET_ADC_BUDGET_BYTES:
+        if budget.fits_driver(len(ids) * len(ids) * 8):
             short = spark.createDataFrame(
                 _np_ivfpq_shortlist(ids, mat, coarse, rcents, n_assign,
                                     n_probe, shortlist, m, sub_dim),

@@ -37,9 +37,14 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 #   duplicated by the driver's queries() sweep.
 # - named fixture-synthesis / multi-session / stream-drain /
 #   fuzz-property tests: the measured heavy tail (5-35 s each, from
-#   `--durations`), none of which guard a route the fast tests leave
-#   uncovered.
-# Route-parity, recall-floor, kernel and unit tests all stay active.
+#   `--durations`).
+# - the "second shave" block below: recall-floor pins, some
+#   route-parity tests and some plan audits. These are NOT duplicated
+#   by the driver's oracle check (it runs each query on its default
+#   route only), so under the plain invocation those routes and floors
+#   go unchecked.
+# Every other route-parity, recall-floor, kernel and unit test stays
+# active.
 SLOW_NODE_PATTERNS = (
     "tests/test_oracle.py::*",
     "tests/test_schema_parity.py::*",
@@ -56,7 +61,6 @@ SLOW_NODE_PATTERNS = (
     "tests/test_property.py::test_kcore_peel_matches_python_reference",
     "tests/test_property.py::test_signlsh_buckets_match_python_reference",
     "tests/test_foundations.py::test_bpe_train_deep_prefix_stable_and_deterministic",
-    "tests/test_operators.py::test_cc_star_matches_label_propagation_on_fuzzed_graphs",
     "tests/test_operators.py::test_label_propagation_separates_bridged_cliques",
     "tests/test_operators.py::test_graph_delete_consolidation_semantics",
     "tests/test_operators.py::test_pca_power_direction_matches_numpy",
@@ -76,8 +80,6 @@ SLOW_NODE_PATTERNS = (
     "tests/test_operators.py::test_graph_ann_search_fused_matches_relational_rounds",
     "tests/test_operators.py::test_graph_serve_deletes_promotes_and_recalls",
     "tests/test_operators.py::test_ivfpq_hot_bucket_split_is_result_invariant",
-    "tests/test_operators.py::test_knn_exact_routes_by_size_and_matches",
-    "tests/test_operators.py::test_knn_exact_routes_to_twosided_plan",
     "tests/test_operators.py::test_graph_ann_search_nonmember_ids_agree_across_routes",
     "tests/test_analytics.py::test_survival_is_monotone_nonincreasing",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_ivfpq_det]",
@@ -85,6 +87,13 @@ SLOW_NODE_PATTERNS = (
     "tests/test_plans.py::test_plan_has_no_scale_violations[text_bpe_train_deep]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_graph_det]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_graph_det_deletes]",
+    # Forced-distributed (zero driver budget) route checks that take
+    # 16-17 s each on 4 cores.
+    "tests/test_operators.py::test_boruvka_star_fallback_matches_driver_contraction",
+    "tests/test_operators.py::test_ivf_det_assign_wider_than_probe_matches_oracle",
+    # One case per oracle-backed query: 361 cases, 7.6 min at sf0.001
+    # on 4 cores (342 skip after building their query, 25 take > 5 s).
+    "tests/test_operators.py::test_forced_distributed_route_parity*",
 )
 
 

@@ -97,23 +97,26 @@ def test_simhash_batch_kernel_matches_scalar_reference():
         [_simhash64(big_vocab.iloc[i]) for i in sample_idx]
 
 
-def test_route_exact_plan_boundary():
-    """The broadcast/twosided routing decision at the documented budget:
-    exactly at MAX_BROADCAST_CELLS stays broadcast, one cell over goes
-    two-sided with a block count sized to fit the budget."""
-    from integrator_spark.operators.knn import (
-        MAX_BROADCAST_CELLS,
-        route_exact_plan,
-    )
+def test_route_exact_plan_boundary(monkeypatch):
+    """The broadcast/twosided routing decision at the driver budget:
+    a float64 matrix of exactly DRIVER_BUDGET_BYTES stays broadcast,
+    one row over goes two-sided with a block count sized to fit the
+    budget, capped at ceil(sqrt(n)) blocks (what a zero budget runs)."""
+    import math
 
+    from integrator_spark.operators import budget
+    from integrator_spark.operators.knn import route_exact_plan
+
+    cap_rows = budget.DRIVER_BUDGET_BYTES // 8
     assert route_exact_plan(1_000_000, 64) == ("broadcast", 1)
-    assert route_exact_plan(MAX_BROADCAST_CELLS, 1) == ("broadcast", 1)
-    plan, nb = route_exact_plan(MAX_BROADCAST_CELLS + 1, 1)
+    assert route_exact_plan(cap_rows, 1) == ("broadcast", 1)
+    plan, nb = route_exact_plan(cap_rows + 1, 1)
     assert (plan, nb) == ("twosided", 2)
-    plan, nb = route_exact_plan(1_100_000, 64)  # 70.4M cells > 64M
+    plan, nb = route_exact_plan(1_100_000, 64)  # 563 MB > 512 MiB
     assert plan == "twosided" and nb == 2
-    plan, nb = route_exact_plan(10_000_000, 64)  # 640M cells
-    assert plan == "twosided" and nb == 10
+    plan, nb = route_exact_plan(10_000_000, 64)  # 5.12 GB
+    assert plan == "twosided" and nb == math.ceil(
+        10_000_000 * 64 * 8 / budget.DRIVER_BUDGET_BYTES)
     # parallelism floor: a 1000-core cluster must not get 4 giant tasks —
     # n_blocks lifts to ceil(sqrt(min_tasks)) so the pair fan-out covers
     # the cluster; broadcast decisions are unaffected by min_tasks.
@@ -122,6 +125,10 @@ def test_route_exact_plan_boundary():
     plan, nb = route_exact_plan(1_100_000, 64, min_tasks=1000)
     assert plan == "twosided" and nb == 32
     assert route_exact_plan(1_000_000, 64, min_tasks=1000) == ("broadcast", 1)
+    # zero budget: every size goes two-sided, at most ceil(sqrt(n)) blocks
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+    assert route_exact_plan(500, 64) == ("twosided", 23)
+    assert route_exact_plan(1, 1) == ("twosided", 2)
 
 
 def test_q_chunks_bound_sims_buffer():
@@ -142,19 +149,23 @@ def test_q_chunks_bound_sims_buffer():
     assert list(_q_chunks(0, 10)) == []
 
 
-def test_knn_exact_routes_to_twosided_plan(spark):
-    """Above the cell budget knn_exact must select the cogrouped
+def test_knn_exact_routes_to_twosided_plan(spark, monkeypatch):
+    """Above the driver budget knn_exact must select the cogrouped
     two-sided physical plan (FlatMapCoGroupsInPandas), and below it the
     broadcast mapInPandas plan — asserted on the actual Spark plan."""
+    from integrator_spark.operators import budget
     from integrator_spark.operators.knn import knn_exact
 
     data = [(i, [float((i * 7 + j * 13) % 11) / 11.0 + 0.1 for j in range(8)])
             for i in range(20)]
     emb = spark.createDataFrame(data, "vec_id long, embedding array<float>")
-    small_budget = knn_exact(emb, k=1, max_broadcast_cells=40)  # 160 cells > 40
+    # 160 cells × 8 B = 1280 B over a 320 B budget -> 4 blocks
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 320)
+    small_budget = knn_exact(emb, k=1)
     assert "FlatMapCoGroupsInPandas" in small_budget._jdf.queryExecution() \
         .executedPlan().toString()
-    big_budget = knn_exact(emb, k=1, max_broadcast_cells=10_000)
+    monkeypatch.undo()
+    big_budget = knn_exact(emb, k=1)
     assert "MapInPandas" in big_budget._jdf.queryExecution() \
         .executedPlan().toString()
     # and the routed plans agree with brute force
@@ -824,29 +835,33 @@ def test_rollup_long_and_decimal_accumulators_agree(spark, monkeypatch):
     assert long_path == canonical_strings(dec_df.toPandas())
 
 
-def test_knn_exact_routes_by_size_and_matches(spark):
+def test_knn_exact_routes_by_size_and_matches(spark, monkeypatch):
     # Small budget -> two-sided blocked route; big budget -> broadcast.
     # Both must equal bruteforce exactly (ids) and to fp tolerance (sims).
+    from integrator_spark.operators import budget
     from integrator_spark.operators.knn import knn_exact
 
     data = [(i, [float((i * 7 + j * 13) % 11) / 11.0 + 0.1 for j in range(8)])
             for i in range(16)]
     emb = spark.createDataFrame(data, "vec_id long, embedding array<float>")
     brute = {(r.vec_id, r.neighbor_id) for r in knn_bruteforce(emb, k=2).collect()}
-    # 16 rows x 8 dims = 128 cells > 64 -> must take knn_blocked_twosided
-    routed = knn_exact(emb, k=2, max_broadcast_cells=64)
+    # 16 rows x 8 dims x 8 B = 1024 B > 512 -> must take knn_blocked_twosided
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 512)
+    routed = knn_exact(emb, k=2)
     assert "cogroup" in routed._jdf.queryExecution().analyzed().toString().lower()
     assert {(r.vec_id, r.neighbor_id) for r in routed.collect()} == brute
-    # comfortably under budget -> the zero-exchange broadcast plan
-    bcast = knn_exact(emb, k=2, max_broadcast_cells=1_000_000)
+    # comfortably under the default budget -> the zero-exchange broadcast plan
+    monkeypatch.undo()
+    bcast = knn_exact(emb, k=2)
     assert "cogroup" not in bcast._jdf.queryExecution().analyzed().toString().lower()
     assert {(r.vec_id, r.neighbor_id) for r in bcast.collect()} == brute
 
 
-def test_cosine_pairs_exact_routes_by_size_and_matches(spark):
+def test_cosine_pairs_exact_routes_by_size_and_matches(spark, monkeypatch):
     # Same routing contract as knn_exact: over budget -> two-sided
     # cogrouped block plan (no driver-side matrix collect); under ->
     # broadcast matmul. Both must emit the identical pair set.
+    from integrator_spark.operators import budget
     from integrator_spark.operators.knn import (
         cosine_pairs_blocked,
         cosine_pairs_exact,
@@ -858,13 +873,14 @@ def test_cosine_pairs_exact_routes_by_size_and_matches(spark):
     want = {(r.id_a, r.id_b, r.cos_sim)
             for r in cosine_pairs_blocked(emb, threshold=0.9).collect()}
     assert want and all(a < b for a, b, _ in want)
-    # 128 cells > 64 -> must route to the cogrouped two-sided plan
-    routed = cosine_pairs_exact(emb, threshold=0.9, max_broadcast_cells=64)
+    # 1024 B > 512 -> must route to the cogrouped two-sided plan
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 512)
+    routed = cosine_pairs_exact(emb, threshold=0.9)
     assert "cogroup" in routed._jdf.queryExecution().analyzed().toString().lower()
     assert {(r.id_a, r.id_b, r.cos_sim) for r in routed.collect()} == want
-    # comfortably under budget -> broadcast plan, no cogroup
-    bcast = cosine_pairs_exact(emb, threshold=0.9,
-                               max_broadcast_cells=1_000_000)
+    # comfortably under the default budget -> broadcast plan, no cogroup
+    monkeypatch.undo()
+    bcast = cosine_pairs_exact(emb, threshold=0.9)
     assert "cogroup" not in bcast._jdf.queryExecution().analyzed().toString().lower()
     assert {(r.id_a, r.id_b, r.cos_sim) for r in bcast.collect()} == want
 
@@ -974,12 +990,13 @@ def test_nn_descent_graph_shape(spark):
     assert {len(v) for v in per.values()} == {5}
 
 
-def test_nn_descent_routes_agree(spark):
+def test_nn_descent_routes_agree(spark, monkeypatch):
     # The broadcast-matrix scoring route (skinny shuffle, numpy rowdot)
     # and the vector-attach join route must build the same k-NN graph:
     # same edge set, cos to 1e-5 (float64 accumulation both ways; the
     # matrix route stores float32, ~5e-7 rounding on unit vectors).
     from integrator_spark.io import load_table
+    from integrator_spark.operators import budget
     from integrator_spark.operators.ann_graph import nn_descent
     from .conftest import TEST_SF_DIR
 
@@ -987,9 +1004,9 @@ def test_nn_descent_routes_agree(spark):
         .filter(F.col("vec_id") < 80)
     fast = {(r.vec_id, r.neighbor_id): r.cos_sim
             for r in nn_descent(emb, k=5, iters=2).collect()}
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
     slow = {(r.vec_id, r.neighbor_id): r.cos_sim
-            for r in nn_descent(emb, k=5, iters=2,
-                                matrix_budget_bytes=0).collect()}
+            for r in nn_descent(emb, k=5, iters=2).collect()}
     assert set(fast) == set(slow)
     assert all(abs(fast[e] - slow[e]) < 1e-5 for e in fast)
 
@@ -1026,12 +1043,14 @@ def test_sorted_lookup_masks_nonmembers():
                           np.array([1, 2], dtype=np.int64)).tolist() == [-1, -1]
 
 
-def test_graph_ann_search_nonmember_ids_agree_across_routes(spark):
+def test_graph_ann_search_nonmember_ids_agree_across_routes(spark,
+                                                          monkeypatch):
     # Caller-supplied `entries` with ids absent from `base`, and a graph
     # edge pointing outside `base`: the join route inner-joins such rows
     # away; the matrix route must DROP them too (not gather the
     # insertion-point row, not IndexError) — identical output both ways.
     from integrator_spark.io import load_table
+    from integrator_spark.operators import budget
     from integrator_spark.operators.ann_graph import (
         graph_ann_search,
         nn_descent,
@@ -1051,9 +1070,9 @@ def test_graph_ann_search_nonmember_ids_agree_across_routes(spark):
     kw = dict(k=1, beam=8, hops=2, exclude_self=True, entries=seeds)
     fast = {(r.query_id, r.neighbor_id): r.cos_sim
             for r in graph_ann_search(g_bad, e, e, **kw).collect()}
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
     slow = {(r.query_id, r.neighbor_id): r.cos_sim
-            for r in graph_ann_search(g_bad, e, e,
-                                      matrix_budget_bytes=0, **kw).collect()}
+            for r in graph_ann_search(g_bad, e, e, **kw).collect()}
     assert set(fast) == set(slow) and len(fast) > 0
     assert all(nbr < 60 for _, nbr in fast)
     assert all(abs(fast[p] - slow[p]) < 1e-5 for p in fast)
@@ -1067,6 +1086,7 @@ def test_graph_ann_search_budget_counts_query_matrix(spark, monkeypatch):
     from pyspark.sql import DataFrame
 
     from integrator_spark.io import load_table
+    from integrator_spark.operators import budget as bmod
     from integrator_spark.operators.ann_graph import (
         graph_ann_search,
         nn_descent,
@@ -1082,10 +1102,10 @@ def test_graph_ann_search_budget_counts_query_matrix(spark, monkeypatch):
 
     def boom(self):
         raise AssertionError("matrix route collected under-budget batch")
+    monkeypatch.setattr(bmod, "DRIVER_BUDGET_BYTES", budget)
     monkeypatch.setattr(DataFrame, "toPandas", boom)
     out = graph_ann_search(g, e, e, k=1, beam=8, hops=2,
-                           n_entries=8, exclude_self=True,
-                           matrix_budget_bytes=budget)
+                           n_entries=8, exclude_self=True)
     assert out.count() == n
 
 
@@ -1114,6 +1134,7 @@ def test_pq_search_budget_routes_query_collect(spark, monkeypatch):
     from pyspark.sql import DataFrame
 
     from integrator_spark.io import load_table
+    from integrator_spark.operators import budget as bmod
     from integrator_spark.operators.pq import pq_encode, pq_search, pq_train
     from .conftest import TEST_SF_DIR
 
@@ -1131,11 +1152,11 @@ def test_pq_search_budget_routes_query_collect(spark, monkeypatch):
 
     def boom(self):
         raise AssertionError("over-budget pq_search collected to driver")
+    monkeypatch.setattr(bmod, "DRIVER_BUDGET_BYTES", budget)
     monkeypatch.setattr(DataFrame, "toPandas", boom)
     got = sorted(
         (r.query_id, r.neighbor_id, r.cos_sim, r.rank)
         for r in pq_search(codes, e, e, cb,
-                           lut_budget_bytes=budget,
                            code_block_rows=50, **kw).collect())
     assert got == want and len(got) == 2 * nq
 
@@ -2318,6 +2339,44 @@ def test_boruvka_raises_when_rounds_exhausted_unconverged(spark):
     assert boruvka_msf(edges, max_rounds=4).count() == 3
 
 
+def test_boruvka_star_fallback_matches_driver_contraction(spark,
+                                                         monkeypatch):
+    """At a zero driver budget every Borůvka round contracts through
+    the star-CC fallback instead of the driver union-find; the
+    spanning forest must be the same (tied weights included)."""
+    from integrator_spark.operators import budget
+    from integrator_spark.operators.graph import boruvka_msf
+
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 3.0), (3, 4, 2.0), (4, 0, 2.0),
+         (5, 6, 1.0), (2, 4, 5.0)],
+        "s long, d long, w double")
+    driver = sorted(map(tuple, boruvka_msf(edges).collect()))
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+    assert sorted(map(tuple, boruvka_msf(edges).collect())) == driver
+    assert len(driver) == 5   # 7 nodes, 2 components
+
+
+def test_connected_components_raises_when_iterations_exhausted(spark,
+                                                               monkeypatch):
+    """On the distributed route (budget 0) a chain longer than
+    max_iterations cannot reach its min-label fixpoint: the loop must
+    raise, not return truncated labels the driver route would not."""
+    import pytest
+
+    from integrator_spark.operators import budget
+    from integrator_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(4)],
+                                  "d1 long, d2 long")
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+    with pytest.raises(RuntimeError, match="max_iterations=2 exhausted"):
+        connected_components(pairs, max_iterations=2)
+    got = {r.doc_id: r.cluster_id
+           for r in connected_components(pairs, max_iterations=6).collect()}
+    assert got == {i: 0 for i in range(5)}
+
+
 def test_mih_adaptive_dial_boundaries():
     """mih_adaptive_dial: chunk count = radius+1 always; width =
     ceil(log2(n/32)) floored at 4 and capped at 20 bits (codes wider
@@ -3172,21 +3231,24 @@ def test_graph_ann_search_fused_matches_relational_rounds(spark):
 def test_nn_descent_driver_rounds_match_distributed_rounds(spark, monkeypatch):
     # The r12 driver-fused build rounds (numpy CSR expansion + in-sort
     # distinct + score-matrix gathers, run when the full n x n score
-    # matrix fits SCORE_MATRIX_BUDGET_BYTES) must be BYTE-identical to
+    # matrix fits the driver budget) must be BYTE-identical to
     # the distributed relational rounds: the score matrix's per-element
     # sequential-j einsum reduction equals the per-pair einsum the
     # mapInPandas kernel runs, and candidate generation / .distinct() /
     # self filter / (cos DESC, dst ASC) row_number replicate the plan
-    # step for step.
+    # step for step. The budget sits between the n x dim corpus matrix
+    # (kept on the broadcast route) and the n x n score matrix.
     from integrator_spark.io import load_table
-    from integrator_spark.operators import ann_graph
+    from integrator_spark.operators import ann_graph, budget
     from .conftest import TEST_SF_DIR
 
     emb = load_table(spark, TEST_SF_DIR, "embeddings") \
         .filter(F.col("vec_id") < 120)
     driver = ann_graph.nn_descent(emb, k=6, iters=2) \
         .orderBy("vec_id", "rank").collect()
-    monkeypatch.setattr(ann_graph, "SCORE_MATRIX_BUDGET_BYTES", 0)
+    n = emb.count()
+    assert n * 64 * 8 < n * n * 8
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", n * 64 * 8)
     distributed = ann_graph.nn_descent(emb, k=6, iters=2) \
         .orderBy("vec_id", "rank").collect()
     assert driver == distributed
@@ -3198,6 +3260,7 @@ def test_triangle_census_kernel_matches_wedge_join(spark, monkeypatch):
     # census row the 3-way oriented wedge join computes — integer
     # counting, so equality is exact.
     from integrator_spark.io import load_table
+    from integrator_spark.operators import budget
     from integrator_spark.operators import graph as gops
     from .conftest import TEST_SF_DIR
 
@@ -3211,7 +3274,7 @@ def test_triangle_census_kernel_matches_wedge_join(spark, monkeypatch):
              .select("s", "d").distinct())
     kernel = gops.triangle_census(edges, src="s", dst="d",
                                   assume_canonical=True).collect()
-    monkeypatch.setattr(gops, "MAX_CSR_EDGES", 0)
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
     relational = gops.triangle_census(edges, src="s", dst="d",
                                       assume_canonical=True).collect()
     assert kernel == relational
@@ -3226,6 +3289,7 @@ def test_det_fit_driver_route_parity(spark, monkeypatch):
     order. Forcing the budget to 0 exercises the at-scale relational
     route on the same data."""
     from integrator_spark.io import load_table
+    from integrator_spark.operators import budget
     from integrator_spark.queries import scale as sc
     from .conftest import TEST_SF_DIR
 
@@ -3248,7 +3312,7 @@ def test_det_fit_driver_route_parity(spark, monkeypatch):
 
     # Route switch end-to-end: _ivf_det_fit_ranked under a zero budget
     # must fall back to the distributed pair and agree.
-    monkeypatch.setattr(sc, "DET_FIT_BUDGET_BYTES", 0)
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
     q2, cent2, ranked2 = sc._ivf_det_fit_ranked(e, k=8, iters=3,
                                                 max_rn=4)
     assert cent2 == cent_np
@@ -3266,6 +3330,7 @@ def test_connected_components_driver_route_parity(spark, monkeypatch):
     while the min-label loop truncates past its round budget — on
     convergent inputs, which is what every oracle-backed fixture is,
     the routes are row-identical.)"""
+    from integrator_spark.operators import budget
     from integrator_spark.operators import dedup as dd
 
     edges = [(i, i + 1) for i in range(0, 15)]           # chain
@@ -3277,7 +3342,7 @@ def test_connected_components_driver_route_parity(spark, monkeypatch):
         pairs).collect()))
     fast_prop = sorted(map(tuple, dd.connected_components(
         pairs).collect()))
-    monkeypatch.setattr(dd, "MAX_DRIVER_CC_EDGES", 0)
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
     slow_star = sorted(map(tuple, dd.connected_components_star(
         pairs).collect()))
     slow_prop = sorted(map(tuple, dd.connected_components(
@@ -3295,8 +3360,11 @@ def test_det_adc_driver_route_parity(spark, monkeypatch):
     """The r13 driver ADC kernels (codes/LUTs/probe scoring/shortlist
     in exact int64 numpy) must yield the IDENTICAL final rows as the
     relational compressed-domain scan — end-to-end equality of
-    vec_ann_pq_det and vec_ann_ivfpq_det with the ADC budget forced to
-    0 (relational route) vs default (driver route)."""
+    vec_ann_pq_det and vec_ann_ivfpq_det with the budget set between
+    the n x dim fit matrix (kept on the driver) and the n x n ADC score
+    matrix (relational route) vs default (driver route)."""
+    from integrator_spark.io import load_table
+    from integrator_spark.operators import budget
     from integrator_spark.queries import scale as sc
     from .conftest import TEST_SF_DIR
 
@@ -3304,7 +3372,9 @@ def test_det_adc_driver_route_parity(spark, monkeypatch):
         spark, TEST_SF_DIR).collect()))
     fast_ivfpq = sorted(map(tuple, sc.vec_ann_ivfpq_det(
         spark, TEST_SF_DIR).collect()))
-    monkeypatch.setattr(sc, "DET_ADC_BUDGET_BYTES", 0)
+    n = load_table(spark, TEST_SF_DIR, "embeddings").count()
+    assert n * 64 * 8 < n * n * 8
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", n * 64 * 8)
     slow_pq = sorted(map(tuple, sc.vec_ann_pq_det(
         spark, TEST_SF_DIR).collect()))
     slow_ivfpq = sorted(map(tuple, sc.vec_ann_ivfpq_det(
@@ -3312,3 +3382,63 @@ def test_det_adc_driver_route_parity(spark, monkeypatch):
     assert fast_pq == slow_pq
     assert fast_ivfpq == slow_ivfpq
     assert len(fast_pq) > 0
+
+
+def test_ivf_det_assign_wider_than_probe_matches_oracle(spark, duck,
+                                                        monkeypatch):
+    """n_assign > n_probe: every one of a vector's n_assign buckets
+    must stay in the ranking (it used to be cut at n_probe). The driver
+    and distributed (budget 0) routes agree with each other and with
+    the DuckDB replay at the same dials."""
+    from integrator_spark.operators import budget
+    from integrator_spark.queries import scale as sc
+    from integrator_spark.testing import canonical_strings
+    from .conftest import TEST_SF_DIR
+
+    dials = dict(k=4, iters=1, n_assign=3, n_probe=1)
+    driver = canonical_strings(
+        sc.vec_ann_ivf_det(spark, TEST_SF_DIR, **dials).toPandas())
+    oracle = canonical_strings(duck.execute(
+        sc._ivf_det_oracle_sql(**dials)).df())
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+    distributed = canonical_strings(
+        sc.vec_ann_ivf_det(spark, TEST_SF_DIR, **dials).toPandas())
+    assert driver == distributed == oracle
+    assert len(driver) > 0
+
+
+def _oracle_backed_query_names() -> list[str]:
+    from integrator_spark.registry import all_specs
+
+    return sorted(n for n, spec in all_specs().items()
+                  if spec.oracle is not None)
+
+
+@pytest.mark.parametrize("name", _oracle_backed_query_names())
+def test_forced_distributed_route_parity(spark, monkeypatch, name):
+    """Every oracle-backed query that asks the driver budget for a
+    route returns the same rows when the budget is 0, i.e. when every
+    gate it reaches takes its distributed route. The queries are found
+    by recording budget.fits_driver calls while the query builds on the
+    default budget; queries that never call it are skipped."""
+    from integrator_spark.operators import budget
+    from integrator_spark.registry import all_specs
+    from integrator_spark.testing import canonical_strings
+    from .conftest import TEST_SF_DIR
+
+    fn = all_specs()[name].fn
+    calls = []
+    fits_driver = budget.fits_driver
+
+    def recording_fits_driver(nbytes):
+        calls.append(nbytes)
+        return fits_driver(nbytes)
+
+    monkeypatch.setattr(budget, "fits_driver", recording_fits_driver)
+    built = fn(spark, TEST_SF_DIR)   # every gate runs while building
+    if not calls:
+        pytest.skip("takes no driver-budget route decision")
+    default = canonical_strings(built.toPandas())
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+    forced = canonical_strings(fn(spark, TEST_SF_DIR).toPandas())
+    assert forced == default
