@@ -82,11 +82,6 @@ def dsum_grid(col: Column | str) -> Column:
         .cast("double")
 
 
-def davg_grid(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return dsum_grid(c) / F.count(F.lit(1))
-
-
 def dsum_money(col: Column | str, source_bytes: int | None) -> Column:
     """Size-routed exact sum for grid-valued non-negative columns: the
     long micro-accumulator while the source is small enough to bound the

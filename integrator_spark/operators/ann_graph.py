@@ -90,8 +90,8 @@ def graph_ann_search(graph: DataFrame, base: DataFrame, queries: DataFrame,
     - ``entries`` (a (qid, cand) DataFrame): PER-QUERY seeds from a
       coarse quantizer — rank cells by query-centroid similarity and
       seed with members of the top cells (the SPANN/DiskANN-style
-      hybrid; scripts/graph_ann_at_scale.py builds these from the same
-      ivf_assign index the build's init used). This removes the
+      hybrid, measured in round 6 (SCALING.md) with seeds built from
+      the same ivf_assign index the build's init used). This removes the
       coverage cap: the seed is in the right region by construction
       and the walk only has to refine.
 

@@ -784,8 +784,8 @@ def mih_adaptive_dial(n: int, radius: int = 7,
     packs each chunk as its own signature word (word_bits =
     chunk_bits), so the dial is corpus-bounded, not type-bounded —
     the 7-bit int64 cap would saturate at n ~ 200k (bucket occupancy
-    1.5k rows -> 2.5e9 candidate pairs, measured in
-    scripts/hamming_at_scale.py). Pure/deterministic."""
+    1.5k rows -> 2.5e9 candidate pairs, measured in round 11
+    (SCALING.md)). Pure/deterministic."""
     import math
 
     n_chunks = radius + 1

@@ -22,8 +22,8 @@ module is the same index expressed the way it runs at 10⁶–10⁹ vectors:
   entire point of IVF at 100 TB.
 
 Exactness: within probed buckets the cosine is exact float64; the only
-approximation is the probe set (measured as recall in
-scripts/ann_at_scale.py and pinned ≥0.9 for the registered fixture
+approximation is the probe set (recall measured in round 5
+(SCALING.md) and pinned ≥0.9 for the registered fixture
 query by tests).
 """
 

@@ -786,6 +786,33 @@ def _ivf_det_rank(q: DataFrame, cent: dict[int, list[int]]) -> DataFrame:
             .select("vec_id", "bucket", "_rn"))
 
 
+def _ivf_det_serve(e: DataFrame, ranked: DataFrame, n_assign: int,
+                   n_probe: int) -> DataFrame:
+    """The det-IVF serve tail: candidates are the members of each
+    vector's ``n_assign`` buckets met through its ``n_probe`` probed
+    buckets, scored by exact cosine, top-1 per vector (ties by
+    neighbor_id). ``ranked`` is _ivf_det_fit_ranked's frame, possibly
+    with rows already removed (the tombstone anti-join)."""
+    from ..operators.dedup import _cosine_residual
+
+    assigned = (ranked.filter(F.col("_rn") <= n_assign)
+                .select(F.col("vec_id").alias("neighbor_id"), "bucket"))
+    probed = (ranked.filter(F.col("_rn") <= n_probe)
+              .select("vec_id", "bucket"))
+    cand = (probed.join(assigned, "bucket")
+            .filter(F.col("vec_id") != F.col("neighbor_id"))
+            .select("vec_id", "neighbor_id").distinct())
+    scored = _cosine_residual(cand, e, e, -1.0, "vec_id", "neighbor_id",
+                              "vec_id", "embedding")
+    w2 = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(),
+                                              "neighbor_id")
+    return (scored.withColumn("_rn", F.row_number().over(w2))
+            .filter(F.col("_rn") == 1)
+            .select("vec_id", "neighbor_id",
+                    F.col("cos_sim").alias("approx_cos"))
+            .orderBy("vec_id"))
+
+
 @register("vec_ann_ivf_det", oracle=_ivf_det_oracle_sql(),
           tags=("vector", "knn", "approx", "ivf"))
 def vec_ann_ivf_det(spark: SparkSession, sf_dir: str, k: int = 16,
@@ -816,32 +843,13 @@ def vec_ann_ivf_det(spark: SparkSession, sf_dir: str, k: int = 16,
     probed-bucket members only, exact cosine on candidates, never n².
     Recall at these dials is pinned >= 0.9 in tests alongside
     vec_ann_ivf's."""
-    import math
-
-    from ..operators.dedup import _cosine_residual
-
     e = load_table(spark, sf_dir, "embeddings")
     if e.isEmpty():
         return spark.createDataFrame(
             [], "vec_id long, neighbor_id long, approx_cos double")
     q, cent, ranked = _ivf_det_fit_ranked(e, k, iters,
                                           max_rn=max(n_assign, n_probe))
-    assigned = (ranked.filter(F.col("_rn") <= n_assign)
-                .select(F.col("vec_id").alias("neighbor_id"), "bucket"))
-    probed = (ranked.filter(F.col("_rn") <= n_probe)
-              .select("vec_id", "bucket"))
-    cand = (probed.join(assigned, "bucket")
-            .filter(F.col("vec_id") != F.col("neighbor_id"))
-            .select("vec_id", "neighbor_id").distinct())
-    scored = _cosine_residual(cand, e, e, -1.0, "vec_id", "neighbor_id",
-                              "vec_id", "embedding")
-    w2 = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(),
-                                              "neighbor_id")
-    return (scored.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") == 1)
-            .select("vec_id", "neighbor_id",
-                    F.col("cos_sim").alias("approx_cos"))
-            .orderBy("vec_id"))
+    return _ivf_det_serve(e, ranked, n_assign, n_probe)
 
 
 @register("vec_ann_ivf_deletes",
@@ -864,10 +872,6 @@ def vec_ann_ivf_deletes(spark: SparkSession, sf_dir: str, k: int = 16,
     (post-filtering the results would get this wrong — pinned in
     tests). Tombstone rule vec_id % 7 == 3 (static, so DuckDB replays
     it as WHERE clauses on the same pre-delete CTE chain)."""
-    import math  # noqa: F401  (parity with vec_ann_ivf_det's imports)
-
-    from ..operators.dedup import _cosine_residual
-
     e = load_table(spark, sf_dir, "embeddings")
     if e.isEmpty():
         return spark.createDataFrame(
@@ -876,22 +880,7 @@ def vec_ann_ivf_deletes(spark: SparkSession, sf_dir: str, k: int = 16,
         e, k, iters, max_rn=max(n_assign, n_probe))  # pre-delete fit
     tomb = (e.filter(F.col("vec_id") % 7 == 3).select("vec_id"))
     live = ranked.join(F.broadcast(tomb), "vec_id", "left_anti")
-    assigned = (live.filter(F.col("_rn") <= n_assign)
-                .select(F.col("vec_id").alias("neighbor_id"), "bucket"))
-    probed = (live.filter(F.col("_rn") <= n_probe)
-              .select("vec_id", "bucket"))
-    cand = (probed.join(assigned, "bucket")
-            .filter(F.col("vec_id") != F.col("neighbor_id"))
-            .select("vec_id", "neighbor_id").distinct())
-    scored = _cosine_residual(cand, e, e, -1.0, "vec_id", "neighbor_id",
-                              "vec_id", "embedding")
-    w2 = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(),
-                                              "neighbor_id")
-    return (scored.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") == 1)
-            .select("vec_id", "neighbor_id",
-                    F.col("cos_sim").alias("approx_cos"))
-            .orderBy("vec_id"))
+    return _ivf_det_serve(e, live, n_assign, n_probe)
 
 
 def _pq_det_oracle_sql(m: int = 8, sub_dim: int = 8, k: int = 64,
@@ -1669,8 +1658,8 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
                  dsum("value").alias("total_value")))
 
 
-#: Zipf-skew key derivation shared by the zipf queries and
-#: scripts/skew_bench.py: an integer-mixed pseudo-uniform bucket b in
+#: Zipf-skew key derivation shared by the zipf queries (skew measured
+#: in round 5, SCALING.md): an integer-mixed pseudo-uniform bucket b in
 #: [0, 1024) mapped through floor(1024 / (1 + b)) — ~50% of all rows
 #: land on key 1, ~17% on key 2, ... (freq ~ 1/k(k+1)), a heavy
 #: zipf-like distribution. Engine-portable by construction: the mix is
@@ -1701,8 +1690,8 @@ def agg_salted_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     one reducer with 50% of the table. Two-phase salting bounds every
     reducer at ~1/buckets of the hot key; decimal partials re-aggregate
     exactly, so the result is bit-identical to the plain plan (the
-    oracle). Measured salted-vs-unsalted wall/max-task numbers live in
-    SCALING.md (scripts/skew_bench.py)."""
+    oracle). Salted-vs-unsalted wall/max-task numbers were measured in
+    round 5 (SCALING.md)."""
     e = load_table(spark, sf_dir, "events").withColumn("skew_key", zipf_key())
     return salted_aggregate(
         e, keys=["skew_key"], salt_on="event_id",

@@ -1039,7 +1039,7 @@ def ml_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Decile assignment deliberately avoids NTILE over raw rows: that is
     a full-row single-partition sort, and the sf1 measurement caught
     it as this pack's one superlinear step (scaling exponent 0.84,
-    scripts/analytics_at_scale.py) — the red flag the measured run
+    measured in round 5 (SCALING.md)) — the red flag the measured run
     exists to raise. Instead rows collapse into score tie-groups first
     (one map-side-combinable shuffle, the ml_auc skeleton), the
     cumulative count runs over the |distinct scores| frame, and each

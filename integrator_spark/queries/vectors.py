@@ -845,8 +845,8 @@ def vec_ann_ivf_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     is each query vector's approximate top-1 over its probed buckets.
     Rows-only (k-means internals aren't ANSI-SQL-expressible);
     determinism is gate-checked and recall@1 vs exact kNN is asserted
-    >= 0.9 in tests/test_operators.py; the 1.1M-vector measured run
-    lives in SCALING.md (scripts/ann_at_scale.py)."""
+    >= 0.9 in tests/test_operators.py; the 1.1M-vector run was
+    measured in round 5 (SCALING.md)."""
     from ..operators.ivf import (bounded_sample_matrix, ivf_assign,
                                  ivf_search, train_centroids)
 

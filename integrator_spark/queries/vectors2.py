@@ -292,8 +292,8 @@ def vec_hamming_topk_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cosine rerank, top-1 per query. This is the face a
     deployment pays per request: per-query cost LINEAR in the corpus,
     the signature broadcast paid once per corpus (not per batch) —
-    measured ~11 ms/query against 200k vectors
-    (scripts/hamming_at_scale.py), where the all-pairs face is
+    measured ~11 ms/query against 200k vectors in round 11
+    (SCALING.md), where the all-pairs face is
     quadratic and the indexed ``vec_hamming_mih_adaptive`` takes over
     for corpus-wide radius jobs.
 

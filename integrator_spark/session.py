@@ -99,13 +99,30 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
 
 def build_session(app_name: str = "integrator-spark",
                   cpus: int | None = None,
-                  shuffle_partitions: int | None = None) -> SparkSession:
+                  shuffle_partitions: int | None = None,
+                  warehouse_dir: str | None = None) -> SparkSession:
     """Build a local session sized for the fixture scale factors.
 
     On a real cluster the same code runs unchanged; only master/memory
     sizing differs. ``spark.sql.shuffle.partitions`` defaults to the
     local core count — at cluster scale you would leave AQE to coalesce
     from a larger initial number (or set 2-3x total cores).
+
+    With ``warehouse_dir`` the catalog is PERSISTENT: table metadata
+    (including bucketing specs) lives in an embedded Derby metastore
+    under ``warehouse_dir``, so a ``saveAsTable(bucketBy)`` layout
+    written in one job is visible — still bucketed, still zero-Exchange
+    joinable — in every later session that points at the same
+    warehouse. This is the durable-layout strategy for repeated
+    fact-fact joins at 100 TB: pay the bucketing shuffle once at ingest,
+    reuse it across jobs (in-memory catalogs forget the bucketing spec
+    on session exit, silently reintroducing the shuffle). It uses the
+    Hive metastore jars pyspark already ships (hive-metastore 2.3 +
+    Derby); no external service. On a real cluster you'd point
+    ``ConnectionURL`` at a shared metastore DB (or use a lakehouse
+    catalog) instead of embedded Derby. Cross-session behavior is proven
+    in tests/test_bucketing.py (two separate driver processes,
+    zero-Exchange assert in the second).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     shuffle_partitions = shuffle_partitions or cpus
@@ -126,51 +143,16 @@ def build_session(app_name: str = "integrator-spark",
         .config("spark.executorEnv.NUMPY_MADVISE_HUGEPAGE",
                 os.environ.get("NUMPY_MADVISE_HUGEPAGE", "0"))
     )
-    for k, v in RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
-def build_durable_session(warehouse_dir: str,
-                          app_name: str = "integrator-spark-durable",
-                          cpus: int | None = None,
-                          shuffle_partitions: int | None = None) -> SparkSession:
-    """Like :func:`build_session`, but with a PERSISTENT catalog: table
-    metadata (including bucketing specs) lives in an embedded Derby
-    metastore under ``warehouse_dir``, so a ``saveAsTable(bucketBy)``
-    layout written in one job is visible — still bucketed, still
-    zero-Exchange joinable — in every later session that points at the
-    same warehouse. This is the durable-layout strategy for repeated
-    fact-fact joins at 100 TB: pay the bucketing shuffle once at ingest,
-    reuse it across jobs (in-memory catalogs forget the bucketing spec
-    on session exit, silently reintroducing the shuffle).
-
-    Uses the Hive metastore jars pyspark already ships (hive-metastore
-    2.3 + Derby); no external service. On a real cluster you'd point
-    ``ConnectionURL`` at a shared metastore DB (or use a lakehouse
-    catalog) instead of embedded Derby — everything else is identical.
-    Cross-session behavior is proven in tests/test_bucketing.py
-    (two separate driver processes, zero-Exchange assert in the second).
-    """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or cpus
-    wh = os.path.abspath(warehouse_dir)
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.warehouse.dir", wh)
-        # Embedded Derby db colocated with the warehouse: the metastore
-        # travels with the data directory, nothing global is touched.
-        .config("javax.jdo.option.ConnectionURL",
-                f"jdbc:derby:;databaseName={wh}/metastore_db;create=true")
-        .enableHiveSupport()
-    )
+    if warehouse_dir is not None:
+        wh = os.path.abspath(warehouse_dir)
+        b = (
+            b.config("spark.sql.warehouse.dir", wh)
+            # Embedded Derby db colocated with the warehouse: the metastore
+            # travels with the data directory, nothing global is touched.
+            .config("javax.jdo.option.ConnectionURL",
+                    f"jdbc:derby:;databaseName={wh}/metastore_db;create=true")
+            .enableHiveSupport()
+        )
     for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

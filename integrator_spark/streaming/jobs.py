@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -395,14 +396,14 @@ def stream_session_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState). stream_semantic_dedup's seen/band stores
     are its OWN batch-partitioned parquet LSM (foreachBatch), which no
     providerClass touches — its growth/compaction posture is proven
-    separately (scripts/stream_semdedup_growth.py).
+    separately (measured in round 8, SCALING.md).
 
     Round 12: CHANGELOG CHECKPOINTING is on — the conf that decides
     whether RocksDB ever wins (verdict r11 item 4). Without it every
     commit uploads full SSTs (the r11 bench's 3.2x-slower number);
     with it the commit uploads the per-batch changelog and
-    snapshotting moves to background maintenance. Measured crossover
-    (scripts/rocksdb_crossover.py, SCALING.md): at 16M resident keys
+    snapshotting moves to background maintenance. Crossover measured
+    in round 12 (SCALING.md): at 16M resident keys
     rocksdb+changelog drains 1.65x FASTER than the HDFS map store,
     whose on-heap state hits 5 GB of an 8 GB heap — and the RocksDB
     store holds ~0.3 GB native. Recommendation recorded in
@@ -1406,8 +1407,8 @@ def _semdedup_process_batch(batch_df: DataFrame, batch_id: int,
     crash-replay idempotence are preserved exactly: a replayed batch
     re-compacts (a no-op on already-compacted stores) and probes the
     identical prior row SET, which is all survivor semantics depend
-    on (byte-identical survivors asserted over a 52-batch drain in
-    scripts/stream_semdedup_growth.py)."""
+    on (byte-identical survivors asserted over a 52-batch drain,
+    measured in round 9 (SCALING.md))."""
     from ..operators.dedup import _cosine_residual, signlsh_buckets
 
     spark = batch_df.sparkSession
@@ -1484,8 +1485,8 @@ def semdedup_compact_stores(spark: SparkSession, seen_dir: str,
     batch id >= upto_batch. Survivor semantics are untouched — probes
     depend only on the SET of prior index rows, which compaction
     preserves (byte-identical next-batch survivors asserted in tests,
-    and across a whole 52-batch auto-compacted drain in
-    scripts/stream_semdedup_growth.py).
+    and across a whole 52-batch auto-compacted drain, measured in
+    round 9 (SCALING.md)).
 
     ``since_batch=0`` (default) is FULL compaction — O(corpus)
     rewrite, the round-8 maintenance call. A nonzero ``since_batch``
@@ -1600,6 +1601,77 @@ def _semdedup_recover_staged(store: str) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _stage_id_ordered_files(spark: SparkSession, sf_dir: str, dirname: str,
+                            table: str, id_col: str, cols: list[str],
+                            n_files: int = 5) -> str:
+    """Stage the ``table`` fixture's ``cols`` as ``n_files`` parquet
+    files split by ``id_col`` range and mtime-pinned in id order (one
+    per micro-batch under maxFilesPerTrigger=1) — the source of every
+    id-ordered keep-first stream. Fingerprinted against the fixture so
+    re-runs reuse the staging."""
+    import shutil
+    import time as _time
+
+    fixture = os.path.join(sf_dir, f"{table}.parquet")
+    src_dir = derived_dir(sf_dir, dirname)
+    if not _fingerprint_ok(src_dir, fixture):
+        shutil.rmtree(src_dir, ignore_errors=True)
+        os.makedirs(src_dir, exist_ok=True)
+        d = spark.read.parquet(fixture).select(*cols)
+        hi = d.agg(F.max(id_col)).first()[0]
+        step = ((int(hi) + 1) + n_files - 1) // n_files if hi is not None else 1
+        base = _time.time() - 600
+        for i in range(n_files):
+            part = d.filter((F.col(id_col) >= i * step)
+                            & (F.col(id_col) < (i + 1) * step))
+            tmp = os.path.join(src_dir, f"_tmp_{i}")
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            src_file = next(f for f in os.listdir(tmp)
+                            if f.endswith(".parquet"))
+            dst = os.path.join(src_dir, f"{i:02d}.parquet")
+            shutil.move(os.path.join(tmp, src_file), dst)
+            shutil.rmtree(tmp, ignore_errors=True)
+            # Strictly increasing mtimes: the file source orders files
+            # by timestamp, which pins micro-batch order to id order.
+            os.utime(dst, (base + 60 * i, base + 60 * i))
+        _write_fingerprint(src_dir, fixture)
+    return src_dir
+
+
+def _drain_id_ordered(
+        spark: SparkSession, sf_dir: str, src_dir: str, state_name: str,
+        schema: T.StructType | str,
+        process: Callable[[DataFrame, int, str], None]) -> DataFrame | None:
+    """Drain a staged id-ordered source one file per trigger
+    (availableNow) through ``process(batch_df, batch_id, work)``, where
+    ``work`` is this run's fresh state directory; every process writes
+    its survivors to ``work/out/batch=<id>``. Returns those survivors,
+    or None when no batch wrote any."""
+    import shutil
+
+    state_root = derived_dir(sf_dir, state_name)
+    _reap_stale_checkpoints(state_root, "run")
+    work = os.path.join(state_root, f"run_pid{os.getpid()}")
+    shutil.rmtree(work, ignore_errors=True)
+    raw = (spark.readStream.schema(schema)
+           .option("maxFilesPerTrigger", "1")
+           .parquet(src_dir))
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        process(batch_df, batch_id, work)
+
+    q = (raw.writeStream
+         .foreachBatch(run_batch)
+         .option("checkpointLocation", os.path.join(work, "_ckpt"))
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    out_dir = os.path.join(work, "out")
+    if not os.path.isdir(out_dir):
+        return None
+    return spark.read.parquet(os.path.join(out_dir, "batch=*"))
+
+
 @register("stream_semantic_dedup", oracle="""
 WITH qv AS (SELECT vec_id,
               list_transform(CAST(embedding AS DOUBLE[]),
@@ -1660,67 +1732,26 @@ def stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned outside the index join. Exactly-once comes from the
     checkpointed file source + idempotent per-batch output overwrite,
     same posture as stream_foreach_batch."""
-    import shutil
-    import time as _time
-
     ensure_runtime_confs(spark)
-    fixture = os.path.join(sf_dir, "embeddings.parquet")
-    src_dir = derived_dir(sf_dir, "semdedup_stream_src")
-    if not _fingerprint_ok(src_dir, fixture):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        os.makedirs(src_dir, exist_ok=True)
-        e = spark.read.parquet(fixture)
-        hi = e.agg(F.max("vec_id")).first()[0]
-        n_files = 5
-        step = ((int(hi) + 1) + n_files - 1) // n_files if hi is not None else 1
-        base = _time.time() - 600
-        for i in range(n_files):
-            part = e.filter((F.col("vec_id") >= i * step)
-                            & (F.col("vec_id") < (i + 1) * step))
-            tmp = os.path.join(src_dir, f"_tmp_{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src_file = next(f for f in os.listdir(tmp)
-                            if f.endswith(".parquet"))
-            dst = os.path.join(src_dir, f"{i:02d}.parquet")
-            shutil.move(os.path.join(tmp, src_file), dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            # Strictly increasing mtimes: the file source orders files
-            # by timestamp, which pins micro-batch order to id order.
-            os.utime(dst, (base + 60 * i, base + 60 * i))
-        _write_fingerprint(src_dir, fixture)
+    src_dir = _stage_id_ordered_files(spark, sf_dir, "semdedup_stream_src",
+                                      "embeddings", "vec_id",
+                                      ["vec_id", "embedding", "label"])
 
-    state_root = derived_dir(sf_dir, "semdedup_stream_state")
-    _reap_stale_checkpoints(state_root, "run")
-    work = os.path.join(state_root, f"run_pid{os.getpid()}")
-    shutil.rmtree(work, ignore_errors=True)
-    seen_dir = os.path.join(work, "seen")
-    bands_dir = os.path.join(work, "bands")
-    out_dir = os.path.join(work, "out")
-    ckpt = os.path.join(work, "_ckpt")
-
-    schema = spark.read.parquet(src_dir).schema
-    raw = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", "1")
-           .parquet(src_dir))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int, work: str) -> None:
         # compact_every=3: the 5-batch fixture drain exercises one
         # in-stream compaction (at batch 3) under the oracle gate —
         # survivor semantics are probe-set-preserving by construction.
         _semdedup_process_batch(batch_df, batch_id,
-                                seen_dir, bands_dir, out_dir,
+                                os.path.join(work, "seen"),
+                                os.path.join(work, "bands"),
+                                os.path.join(work, "out"),
                                 compact_every=3)
 
-    q = (raw.writeStream
-         .foreachBatch(process)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    if not os.path.isdir(out_dir):
+    out = _drain_id_ordered(spark, sf_dir, src_dir, "semdedup_stream_state",
+                            spark.read.parquet(src_dir).schema, process)
+    if out is None:
         return spark.createDataFrame([], "vec_id long, label int")
-    return (spark.read.parquet(os.path.join(out_dir, "batch=*"))
-            .select("vec_id", F.col("label").cast("int").alias("label"))
+    return (out.select("vec_id", F.col("label").cast("int").alias("label"))
             .orderBy("vec_id"))
 
 
@@ -1823,40 +1854,6 @@ def stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream_semantic_dedup, same store discipline (batch-partitioned
 # overwrite, strictly-below probes, id-ordered arrival makes the
 # streamed survivor set EQUAL the batch keep-first oracle).
-
-def _stage_id_ordered_doc_files(spark: SparkSession, sf_dir: str,
-                                dirname: str, n_files: int = 5) -> str:
-    """Stage the documents fixture as ``n_files`` id-ordered,
-    mtime-pinned parquet files (one per micro-batch under
-    maxFilesPerTrigger=1) — shared by stream_image_dedup and
-    stream_url_dedup. Fingerprinted against the fixture so re-runs
-    reuse the staging."""
-    import shutil
-    import time as _time
-
-    fixture = os.path.join(sf_dir, "documents.parquet")
-    src_dir = derived_dir(sf_dir, dirname)
-    if not _fingerprint_ok(src_dir, fixture):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        os.makedirs(src_dir, exist_ok=True)
-        d = spark.read.parquet(fixture).select("doc_id")
-        hi = d.agg(F.max("doc_id")).first()[0]
-        step = ((int(hi) + 1) + n_files - 1) // n_files if hi is not None else 1
-        base = _time.time() - 600
-        for i in range(n_files):
-            part = d.filter((F.col("doc_id") >= i * step)
-                            & (F.col("doc_id") < (i + 1) * step))
-            tmp = os.path.join(src_dir, f"_tmp_{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src_file = next(f for f in os.listdir(tmp)
-                            if f.endswith(".parquet"))
-            dst = os.path.join(src_dir, f"{i:02d}.parquet")
-            shutil.move(os.path.join(tmp, src_file), dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.utime(dst, (base + 60 * i, base + 60 * i))
-        _write_fingerprint(src_dir, fixture)
-    return src_dir
-
 
 def _imgdedup_process_batch(batch_df: DataFrame, batch_id: int,
                             codes_dir: str, chunks_dir: str,
@@ -1971,40 +1968,21 @@ def stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per trigger, |batch| hashing + chunk-index equality join; the
     corpus is touched only through the index and the id-keyed code
     fetch."""
-    import shutil
-    import time as _time
-
     ensure_runtime_confs(spark)
-    src_dir = _stage_id_ordered_doc_files(spark, sf_dir,
-                                          "imgdedup_stream_src")
+    src_dir = _stage_id_ordered_files(spark, sf_dir, "imgdedup_stream_src",
+                                      "documents", "doc_id", ["doc_id"])
 
-    state_root = derived_dir(sf_dir, "imgdedup_stream_state")
-    _reap_stale_checkpoints(state_root, "run")
-    work = os.path.join(state_root, f"run_pid{os.getpid()}")
-    shutil.rmtree(work, ignore_errors=True)
-    codes_dir = os.path.join(work, "codes")
-    chunks_dir = os.path.join(work, "chunks")
-    out_dir = os.path.join(work, "out")
-    ckpt = os.path.join(work, "_ckpt")
-
-    raw = (spark.readStream.schema("doc_id long")
-           .option("maxFilesPerTrigger", "1")
-           .parquet(src_dir))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int, work: str) -> None:
         _imgdedup_process_batch(batch_df, batch_id,
-                                codes_dir, chunks_dir, out_dir)
+                                os.path.join(work, "codes"),
+                                os.path.join(work, "chunks"),
+                                os.path.join(work, "out"))
 
-    q = (raw.writeStream
-         .foreachBatch(process)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    if not os.path.isdir(out_dir):
+    out = _drain_id_ordered(spark, sf_dir, src_dir, "imgdedup_stream_state",
+                            "doc_id long", process)
+    if out is None:
         return spark.createDataFrame([], "doc_id long")
-    return (spark.read.parquet(os.path.join(out_dir, "batch=*"))
-            .select("doc_id").orderBy("doc_id"))
+    return out.select("doc_id").orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -2100,33 +2078,17 @@ def stream_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever probed by equality, never scanned pairwise, and the store
     grows by |batch distinct| canonical strings per trigger. Replay
     idempotence pinned by test_urldedup_batch_replay_is_idempotent."""
-    import shutil
-
     ensure_runtime_confs(spark)
-    src_dir = _stage_id_ordered_doc_files(spark, sf_dir,
-                                          "urldedup_stream_src")
-    state_root = derived_dir(sf_dir, "urldedup_stream_state")
-    _reap_stale_checkpoints(state_root, "run")
-    work = os.path.join(state_root, f"run_pid{os.getpid()}")
-    shutil.rmtree(work, ignore_errors=True)
-    frontier_dir = os.path.join(work, "frontier")
-    out_dir = os.path.join(work, "out")
-    ckpt = os.path.join(work, "_ckpt")
+    src_dir = _stage_id_ordered_files(spark, sf_dir, "urldedup_stream_src",
+                                      "documents", "doc_id", ["doc_id"])
 
-    raw = (spark.readStream.schema("doc_id long")
-           .option("maxFilesPerTrigger", "1")
-           .parquet(src_dir))
+    def process(batch_df: DataFrame, batch_id: int, work: str) -> None:
+        _urldedup_process_batch(batch_df, batch_id,
+                                os.path.join(work, "frontier"),
+                                os.path.join(work, "out"))
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _urldedup_process_batch(batch_df, batch_id, frontier_dir, out_dir)
-
-    q = (raw.writeStream
-         .foreachBatch(process)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    if not os.path.isdir(out_dir):
+    out = _drain_id_ordered(spark, sf_dir, src_dir, "urldedup_stream_state",
+                            "doc_id long", process)
+    if out is None:
         return spark.createDataFrame([], "doc_id long")
-    return (spark.read.parquet(os.path.join(out_dir, "batch=*"))
-            .select("doc_id").orderBy("doc_id"))
+    return out.select("doc_id").orderBy("doc_id")

@@ -45,9 +45,9 @@ def test_bucketed_join_has_no_shuffle(spark):
 
 
 _WRITER = """
-import sys; sys.path.insert(0, "/root/repo")
-from integrator_spark.session import build_durable_session
-spark = build_durable_session({wh!r}, cpus=4)
+import sys; sys.path.insert(0, {repo!r})
+from integrator_spark.session import build_session
+spark = build_session(cpus=4, warehouse_dir={wh!r})
 df = spark.range(2000).selectExpr("id AS k", "id % 7 AS v")
 df.write.bucketBy(8, "k").sortBy("k").mode("overwrite").saveAsTable("bt_a")
 df.write.bucketBy(8, "k").sortBy("k").mode("overwrite").saveAsTable("bt_b")
@@ -57,10 +57,10 @@ spark.stop()
 """
 
 _READER = """
-import sys; sys.path.insert(0, "/root/repo")
+import sys; sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
-from integrator_spark.session import build_durable_session
-spark = build_durable_session({wh!r}, cpus=4)
+from integrator_spark.session import build_session
+spark = build_session(cpus=4, warehouse_dir={wh!r})
 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 a = spark.table("bt_a")
 b = spark.table("bt_b").withColumnRenamed("v", "v2")
@@ -77,16 +77,19 @@ def test_bucketed_layout_survives_session_restart(tmp_path):
     """Durable layout: a bucketBy saveAsTable written by one DRIVER
     PROCESS joins zero-Exchange in a second, completely separate driver
     process pointing at the same warehouse (embedded Derby metastore —
-    build_durable_session). Without a persistent catalog the bucketing
-    spec dies with the session and the shuffle silently comes back."""
+    build_session(warehouse_dir=...)). Without a persistent catalog the
+    bucketing spec dies with the session and the shuffle silently comes
+    back."""
+    import os
     import subprocess
     import sys as _sys
 
     wh = str(tmp_path / "wh")
-    w = subprocess.run([_sys.executable, "-c", _WRITER.format(wh=wh)],
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    w = subprocess.run([_sys.executable, "-c", _WRITER.format(repo=repo, wh=wh)],
                        capture_output=True, text=True, timeout=600)
     assert "WRITER-OK" in w.stdout, w.stdout[-2000:] + w.stderr[-2000:]
-    r = subprocess.run([_sys.executable, "-c", _READER.format(wh=wh)],
+    r = subprocess.run([_sys.executable, "-c", _READER.format(repo=repo, wh=wh)],
                        capture_output=True, text=True, timeout=600)
     assert "READER-OK-NO-EXCHANGE" in r.stdout, \
         r.stdout[-2000:] + r.stderr[-2000:]

@@ -78,3 +78,28 @@ def test_documented_totals_match_registry():
         n_rows = sum(1 for line in fh if line.startswith("| `"))
     assert n_rows == n_total, (
         f"QUERIES.md has {n_rows} rows, registry has {n_total}")
+
+
+def test_cited_scripts_exist():
+    """Every ``scripts/<name>.py`` that the package, the tests,
+    bench.py or README.md mentions must exist, so deleting a script
+    cannot leave a dangling citation behind."""
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(repo, "bench.py"), os.path.join(repo, "README.md")]
+    for top in ("integrator_spark", "tests"):
+        for root, _dirs, files in os.walk(os.path.join(repo, top)):
+            paths += [os.path.join(root, f) for f in files
+                      if f.endswith((".py", ".md"))]
+    cited: dict[str, set[str]] = {}
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            for name in re.findall(r"scripts/(\w+)\.py", fh.read()):
+                cited.setdefault(name, set()).add(os.path.relpath(path, repo))
+    assert cited, "no script citations found — the scan is broken"
+    missing = {name: sorted(where) for name, where in cited.items()
+               if not os.path.isfile(os.path.join(repo, "scripts",
+                                                  f"{name}.py"))}
+    assert not missing, f"cited scripts that do not exist: {missing}"
