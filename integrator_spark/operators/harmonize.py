@@ -19,11 +19,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+RULE_COLUMNS = ("src_value", "canonical", "rule_id")
+
+
 def rules_frame(spark: SparkSession,
                 rules: list[tuple[str, str, str]]) -> DataFrame:
     """Build a rule DataFrame from (source_value, canonical_value,
-    rule_id) triples — rules are data, exactly as in the reference."""
-    return spark.createDataFrame(rules, "src_value string, canonical string, rule_id string")
+    rule_id) triples — rules are data, exactly as in the reference.
+
+    The triples go in as an Arrow table with an explicit string schema,
+    so the frame plans as a ``LocalTableScan`` (below
+    ``spark.sql.execution.arrow.localRelationThreshold``) and reading it
+    starts no job; a list of tuples would become a scan of a
+    parallelized RDD, one Python-worker job per use."""
+    import pyarrow as pa
+
+    schema = pa.schema([(c, pa.string()) for c in RULE_COLUMNS])
+    table = pa.Table.from_pylist([dict(zip(RULE_COLUMNS, r)) for r in rules],
+                                 schema=schema)
+    return spark.createDataFrame(table)
 
 
 def apply_rules(df: DataFrame, rules: DataFrame, src_col: str,

@@ -32,12 +32,22 @@ RUNTIME_CONFS: dict[str, str] = {
     # and for UDTF evaluation (BatchEvalPythonUDTF -> ArrowEvalPythonUDTF).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
-    # Size shuffles for the local fixture scale (AQE coalesces batch
-    # shuffles anyway, but streaming state partitioning is fixed at the
-    # first checkpoint and does not go through AQE). On a cluster this
-    # would be 2-3x total cores instead.
-    "spark.sql.shuffle.partitions": "32",
+    # Batch shuffles start at 32 partitions and AQE coalesces them:
+    # with coalescing on, every batch Exchange reads this number, not
+    # spark.sql.shuffle.partitions. Streams run with AQE off and read
+    # spark.sql.shuffle.partitions instead, once, when a checkpoint is
+    # created — that count is the number of state-store partitions, each
+    # committed on every micro-batch, and it can never change for that
+    # checkpoint. ensure_runtime_confs sizes it to the cores
+    # (defaultParallelism): one state partition per core, so the state
+    # parallelism grows with the cluster and a small host does not pay
+    # 32 store commits per operator per batch.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "32",
 }
+
+#: The conf a new streaming checkpoint records as its state-partition
+#: count (see RUNTIME_CONFS above).
+STATE_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -79,7 +89,8 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     the session is configured."""
     if getattr(spark, "_integrator_confs_applied", False):
         return spark
-    for k, v in RUNTIME_CONFS.items():
+    cores = str(spark.sparkContext.defaultParallelism)
+    for k, v in {**RUNTIME_CONFS, STATE_PARTITIONS_CONF: cores}.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -99,14 +110,15 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
 
 def build_session(app_name: str = "integrator-spark",
                   cpus: int | None = None,
-                  shuffle_partitions: int | None = None,
                   warehouse_dir: str | None = None) -> SparkSession:
     """Build a local session sized for the fixture scale factors.
 
     On a real cluster the same code runs unchanged; only master/memory
-    sizing differs. ``spark.sql.shuffle.partitions`` defaults to the
-    local core count — at cluster scale you would leave AQE to coalesce
-    from a larger initial number (or set 2-3x total cores).
+    sizing differs. Batch shuffles start at AQE's 32 initial partitions
+    and coalesce from there; ``spark.sql.shuffle.partitions`` (the
+    state-partition count of new streaming checkpoints) is the core
+    count, the same value ``ensure_runtime_confs`` sets on a
+    driver-owned session (see ``RUNTIME_CONFS``).
 
     With ``warehouse_dir`` the catalog is PERSISTENT: table metadata
     (including bucketing specs) lives in an embedded Derby metastore
@@ -125,7 +137,6 @@ def build_session(app_name: str = "integrator-spark",
     zero-Exchange assert in the second).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or cpus
     # Before the JVM (and its Python-worker daemons) launch: see
     # integrator_spark.__init__._disable_numpy_thp_madvise — workers
     # inherit this env, so numpy in every worker skips the THP
@@ -134,7 +145,7 @@ def build_session(app_name: str = "integrator-spark",
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(STATE_PARTITIONS_CONF, str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")

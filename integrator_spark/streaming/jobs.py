@@ -29,7 +29,7 @@ from ..functions.num import dsum, sql_dsum
 from ..queries.events import PATTERN_MATCH_ORACLE as _PATTERN_MATCH_ORACLE
 from ..io import derived_dir, load_table, normalize_events_ts
 from ..registry import register
-from ..session import ensure_runtime_confs
+from ..session import STATE_PARTITIONS_CONF, ensure_runtime_confs
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded view of the events table via the file streaming source.
@@ -42,8 +42,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream requires an explicit schema, and the fixture's ``ts``
     physical type has changed across driver generations (raw nanos-long
     in rounds 1-2, timestamp[us]/NTZ from round 3) — so instead of
-    hardcoding it, read the staged file's footer with a zero-job batch
-    ``spark.read`` and reuse that schema, then route through the same
+    hardcoding it, infer it with a batch ``spark.read`` of the staged
+    files and reuse that schema, then route through the same
     ``normalize_events_ts`` the batch loader uses."""
     ensure_runtime_confs(spark)
     src_dir = derived_dir(sf_dir, "events_stream_src")
@@ -71,7 +71,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             shutil.copyfile(src, dst)
         _write_fingerprint(src_dir, src)
-    raw_schema = spark.read.parquet(src_dir).schema   # footer-only, no job
+    # Schema inference reads the footers in a Spark job: one job per
+    # call, so stream_join pays two.
+    raw_schema = spark.read.parquet(src_dir).schema
     raw = (spark.readStream
            .schema(raw_schema)
            .parquet(src_dir))
@@ -250,7 +252,8 @@ def run_available_now(stream_df: DataFrame, sf_dir: str, name: str,
     except Exception:
         plan = ""          # e.g. Spark Connect: no py4j handle
     LAST_STREAM_AUDITS[name] = {"plan": plan,
-                                "progress": LAST_RUN_PROGRESS}
+                                "progress": LAST_RUN_PROGRESS,
+                                "checkpoint": checkpoint}
     return stream_df.sparkSession.table(query_name)
 
 
@@ -260,11 +263,11 @@ def run_available_now(stream_df: DataFrame, sf_dir: str, name: str,
 LAST_RUN_PROGRESS: list = []
 
 #: Per-job audit artifacts of the most recent run_available_now drain:
-#: the last execution's physical plan text (explainInternal) and the
-#: progress list — the streaming face of the batch plan audit
-#: (plans/audit.py stream_violations walks these; round-9 verdict
-#: item 5). Keyed by job name so one test run can drain many jobs and
-#: audit them all.
+#: the last execution's physical plan text (explainInternal), the
+#: progress list and the checkpoint directory — the streaming face of
+#: the batch plan audit (plans/audit.py stream_violations walks these;
+#: round-9 verdict item 5). Keyed by job name so one test run can drain
+#: many jobs and audit them all.
 LAST_STREAM_AUDITS: dict[str, dict] = {}
 
 
@@ -744,13 +747,28 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     wait), so a bounded replay produces exactly the batch join and the
     oracle checks it row-for-row. At 100 TB-rate streams the state
     store holds only ~1 h of clicks + purchases per key."""
-    clicks = (events_stream(spark, sf_dir)
+    # r13 (guide §1.2): an INNER stream-stream join emits every match
+    # eagerly in the data batches — the trailing zero-row watermark
+    # batch only evicts state (measured: 5.7 s of the 16.2 s wall,
+    # pure state-store commit churn across 32 partitions × 4 stores)
+    # and this bounded replay wipes its checkpoint on every run anyway.
+    # Skip it for THIS query only: output is row-identical
+    # (oracle-checked). stream_join_outer MUST keep the no-data batch —
+    # it is what emits the null-extended rows once the watermark
+    # proves no match can arrive. The toggle goes on a session of the
+    # stream's own, never on the caller's conf; that session keeps the
+    # caller's state-partition count.
+    ensure_runtime_confs(spark)
+    own = ensure_runtime_confs(spark.newSession())
+    own.conf.set(STATE_PARTITIONS_CONF, spark.conf.get(STATE_PARTITIONS_CONF))
+    own.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    clicks = (events_stream(own, sf_dir)
               .filter(F.col("event_type") == "click")
               .select(F.col("user_id").alias("c_user"),
                       F.col("event_id").alias("click_id"),
                       F.col("ts").alias("c_ts"))
               .withWatermark("c_ts", "1 hour"))
-    purchases = (events_stream(spark, sf_dir)
+    purchases = (events_stream(own, sf_dir)
                  .filter(F.col("event_type") == "purchase")
                  .select(F.col("user_id").alias("p_user"),
                          F.col("event_id").alias("purchase_id"),
@@ -762,23 +780,7 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                "p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour"),
         "inner")
         .select(F.col("c_user").alias("user_id"), "click_id", "purchase_id"))
-    # r13 (guide §1.2): an INNER stream-stream join emits every match
-    # eagerly in the data batches — the trailing zero-row watermark
-    # batch only evicts state (measured: 5.7 s of the 16.2 s wall,
-    # pure state-store commit churn across 32 partitions × 4 stores)
-    # and this bounded replay wipes its checkpoint on every run anyway.
-    # Skip it for THIS query only: output is row-identical
-    # (oracle-checked). stream_join_outer MUST keep the no-data batch —
-    # it is what emits the null-extended rows once the watermark
-    # proves no match can arrive.
-    conf = spark.conf
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = conf.get(key, "true")
-    conf.set(key, "false")
-    try:
-        return run_available_now(joined, sf_dir, "stream_join")
-    finally:
-        conf.set(key, old)
+    return run_available_now(joined, sf_dir, "stream_join")
 
 
 @register("stream_static_join", oracle="""

@@ -124,7 +124,7 @@ changes made the ratios robust to that noise rather than hostage to it:
 
 
 def main() -> None:
-    spark = build_session("plan-report", cpus=4, shuffle_partitions=4)
+    spark = build_session("plan-report", cpus=4)
     specs = all_specs()
     sections = []
     for name in HEADLINE + FAMILY_REPS:

@@ -116,7 +116,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session("integrator-tests", cpus=8, shuffle_partitions=8)
+    s = build_session("integrator-tests", cpus=8)
     yield s
     s.stop()
 

@@ -197,6 +197,22 @@ def test_apply_rules_maps_and_flags_unmapped(spark):
                    "error": ("__unmapped__", None)}
 
 
+def test_rules_frame_is_a_local_scan_that_starts_no_job(spark):
+    """Rule tables are driver-local data: the frame plans as a
+    LocalTableScan and collecting it starts no Spark job (no Python
+    worker either)."""
+    from integrator_spark.queries.etl import EVENT_RULES
+
+    rules = rules_frame(spark, EVENT_RULES)
+    plan = rules._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    rows = rules.collect()
+    assert dag.nextJobId() == before
+    assert [tuple(r) for r in rows] == list(EVENT_RULES)
+
+
 def test_assertion_report_counts_violations(spark):
     ok = spark.range(0)
     bad = spark.range(3)

@@ -3,6 +3,9 @@ micro-batch counts and watermark drop metrics (SURVEY.md §2.9)."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from .conftest import TEST_SF_DIR
@@ -546,3 +549,69 @@ def test_urldedup_batch_replay_is_idempotent(spark, tmp_path):
     assert read_out() == want
     # frontier store carries batch 1's (identical) canon set
     assert spark.read.parquet(frontier + "/batch=1").count() == 40
+
+
+def _recorded_state_partitions(name):
+    """The state-partition count the last drain of ``name`` recorded in
+    its checkpoint: the conf map of the first offset-log entry."""
+    import json
+    import os
+
+    from integrator_spark.session import STATE_PARTITIONS_CONF
+    from integrator_spark.streaming.jobs import LAST_STREAM_AUDITS
+
+    ckpt = LAST_STREAM_AUDITS[name]["checkpoint"]
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        fh.readline()                       # log format version
+        return json.loads(fh.readline())["conf"][STATE_PARTITIONS_CONF]
+
+
+def test_fresh_checkpoint_sizes_state_to_the_cores(spark):
+    """A new checkpoint records one state partition per core, also on a
+    session that starts with Spark's default of 200 (as a driver-owned
+    session does): ensure_runtime_confs sizes it before the first
+    batch."""
+    from integrator_spark.registry import get_queries
+    from integrator_spark.session import STATE_PARTITIONS_CONF
+
+    s = spark.newSession()
+    s.conf.set(STATE_PARTITIONS_CONF, "200")
+    assert get_queries()["stream_tumbling"](s, TEST_SF_DIR).count() > 0
+    assert (_recorded_state_partitions("stream_tumbling")
+            == str(spark.sparkContext.defaultParallelism))
+
+
+def test_batch_shuffles_start_at_32_partitions(spark):
+    """Per-core state partitions leave batch plans as they were: with
+    AQE coalescing on, every batch Exchange starts from the 32 initial
+    partitions, on our session and on a driver-owned one."""
+    from integrator_spark.session import ensure_runtime_confs
+
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    for s in (spark, ensure_runtime_confs(spark.newSession())):
+        assert s.conf.get(key) == "32"
+        plan = (s.range(10).selectExpr("id % 3 AS k").groupBy("k").count()
+                ._jdf.queryExecution().executedPlan().toString())
+        assert re.search(r"hashpartitioning\(k#\d+L, 32\)", plan), plan
+
+
+@pytest.mark.parametrize("name", ["stream_tumbling", "stream_dedup",
+                                  "stream_join"])
+def test_stream_result_independent_of_state_partitions(name, spark):
+    """A stream's result must not depend on its state-partition count,
+    which its checkpoint fixes at creation: each stateful drain runs in
+    a fresh session at 3 and at 32 partitions (every drain gets a fresh
+    checkpoint) and must return the same rows."""
+    from integrator_spark.registry import get_queries
+    from integrator_spark.session import (STATE_PARTITIONS_CONF,
+                                          ensure_runtime_confs)
+    from integrator_spark.testing import canonical_strings
+
+    fn = get_queries()[name]
+    runs = {}
+    for n in ("3", "32"):
+        s = ensure_runtime_confs(spark.newSession())
+        s.conf.set(STATE_PARTITIONS_CONF, n)
+        runs[n] = canonical_strings(fn(s, TEST_SF_DIR).toPandas())
+        assert _recorded_state_partitions(name) == n
+    assert runs["3"] and runs["3"] == runs["32"]
