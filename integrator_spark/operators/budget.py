@@ -3,8 +3,8 @@
 Every operator family that has both a driver numpy kernel and a
 distributed Spark route (the det-ANN Lloyd fit and ADC scan, PQ query
 LUTs, graph-ANN matrices, union-find connected components and Borůvka
-contraction, CSR triangle and common-neighbor counting, exact kNN and
-the cosine residual) asks :func:`fits_driver` with the bytes of the
+contraction, CSR triangle and common-neighbor counting, exact kNN,
+the cosine residual and the Hamming top-m scans) asks :func:`fits_driver` with the bytes of the
 structure it is about to hold in the driver process. Under the budget
 the driver kernel runs; past it the distributed route runs. Both
 routes return the same rows (pinned by the route-parity tests), so the
@@ -13,8 +13,9 @@ budget decides where the work runs, never what it returns.
 The budget is a constant, not a function of ``spark.driver.memory``:
 the kernels hold their arrays in the Python driver process, not in the
 JVM heap. :func:`fits_driver` reads it on every call, so setting
-``DRIVER_BUDGET_BYTES`` in-process (``0`` forces every distributed
-route) reaches every gate.
+``DRIVER_BUDGET_BYTES`` in-process reaches every gate; ``0`` forces
+every distributed route whose structure is non-empty (zero bytes still
+fit a zero budget).
 """
 
 from __future__ import annotations

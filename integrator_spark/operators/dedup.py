@@ -471,12 +471,11 @@ def _driver_components(edges: DataFrame) -> DataFrame:
     """Two-column long edge frame → (doc_id, cluster_id = component
     min) via one bounded Arrow collect and a path-halving union-find
     (attach larger root under smaller, so every root IS its component
-    min — the exact output contract of both distributed fixpoints
-    below). The node set is exactly the ids appearing in ``edges`` —
-    each operator passes its own prepped edge frame, so per-operator
-    self-loop semantics are preserved. Takes no routing decision:
-    callers gate it with ``budget.fits_driver(n_edges *
-    UF_EDGE_ROW_BYTES)`` on the edge count they already hold."""
+    min — the output contract of :func:`connected_components`). The
+    node set is exactly the ids appearing in ``edges``, an id seen
+    only in a self-loop included. Takes no routing decision: callers
+    gate it with ``budget.fits_driver(n_edges * UF_EDGE_ROW_BYTES)``
+    on the edge count they already hold."""
     pdf = edges.toPandas()
     parent: dict = {}
 
@@ -501,22 +500,26 @@ def _driver_components(edges: DataFrame) -> DataFrame:
         [(n, _find(n)) for n in parent], "doc_id long, cluster_id long")
 
 
-def connected_components_star(pairs: DataFrame, a_col: str = "d1",
-                              b_col: str = "d2",
-                              max_iterations: int = 50) -> DataFrame:
-    """Planet-scale connected components via alternating large-star /
-    small-star contraction (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", 2014) — same interface and output contract
-    as :func:`connected_components` (doc_id, cluster_id = component
-    min), property-tested equivalent on fuzzed graphs.
+def connected_components(pairs: DataFrame, a_col: str = "d1",
+                         b_col: str = "d2",
+                         max_iterations: int = 50) -> DataFrame:
+    """Connected components over an undirected pair graph → (doc_id,
+    cluster_id = component min): the step that turns near-dup PAIRS
+    into dedup GROUPS (keep one representative per cluster). Every id
+    in either column gets exactly one row; an id that appears only in
+    a self-loop is its own singleton component.
 
-    Why a second path: min-label propagation needs O(diameter) rounds,
-    so a 100 TB corpus whose dup graph has a long chain (boilerplate
-    templates often do) stalls it. Star contraction converges in
-    O(log² n) rounds *independent of diameter*, and every round is the
-    same primitive — one groupBy-min plus one join — so it inherits
-    AQE skew handling. At fixpoint the edge set IS the answer: every
-    edge points (node → component-min) and one extra pass labels roots.
+    Under the driver budget the distinct edges are collected once and
+    closed by :func:`_driver_components`. Past it the components come
+    from alternating large-star / small-star contraction (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", 2014), which
+    converges in O(log² n) rounds *independent of diameter* — a long
+    boilerplate chain would stall min-label propagation, whose rounds
+    grow with the diameter — and every round is the same primitive,
+    one groupBy-min plus one join, so it inherits AQE skew handling.
+    At fixpoint the edge set IS the answer: every edge points
+    (node → component min), and a left join from the node set labels
+    roots and self-loop singletons with themselves.
 
     - large-star: for each node u, hook every LARGER neighbor v > u to
       m = min(Γ(u) ∪ {u}). Keeps large components shrinking in
@@ -527,31 +530,31 @@ def connected_components_star(pairs: DataFrame, a_col: str = "d1",
     Convergence detection is a (count, xxhash64-sum) checksum of the
     edge set — one cheap aggregate per round instead of a full
     ``exceptAll``; the fixpoint is exact because the edge set itself
-    stops changing.
+    stops changing. Raises ``RuntimeError`` when ``max_iterations``
+    ends first: truncated labels would differ from the driver route.
     """
-    # Lineage is truncated each round with the stats-resetting
-    # checkpoint (operators/ckpt.py): the logical plan otherwise
-    # doubles per iteration (edges appears twice per round) and
-    # exponential plans OOM the driver long before the data does —
-    # and a plain localCheckpoint still inherits origin Catalyst
-    # stats whose join products compound geometrically per round. On a real cluster swap in reliable checkpointing
-    # (spark.sparkContext.setCheckpointDir + .checkpoint()) to also
-    # survive executor loss.
     edges = (pairs.select(F.col(a_col).cast("long").alias("u"),
                           F.col(b_col).cast("long").alias("v"))
-             .filter(F.col("u") != F.col("v")).distinct()
-             .localCheckpoint(eager=True))
-    # r13 (guide §1.2): each star round costs 3-4 shuffles plus a
-    # signature collect, and percolated components (spatial_dbscan's
-    # one 15k-node cluster at sf0.1) need several rounds of pure
-    # job-barrier overhead. Under the driver budget the whole
-    # contraction is one Arrow collect; over it the loop below is the
-    # scale route. Output row sets are identical (parity-tested).
+             .distinct().localCheckpoint(eager=True))
+    # Each star round costs 3-4 shuffles plus a signature collect, and
+    # percolated components (spatial_dbscan's one 15k-node cluster at
+    # sf0.1) need several rounds of pure job-barrier overhead; under
+    # the driver budget the whole closure is one Arrow collect.
     if budget.fits_driver(edges.count() * UF_EDGE_ROW_BYTES):
         return _driver_components(edges)
+    nodes = (edges.select("u")
+             .unionByName(edges.select(F.col("v").alias("u"))).distinct())
+    # Lineage is truncated each round with the stats-resetting
+    # checkpoint (operators/ckpt.py): the logical plan otherwise
+    # doubles per iteration (edges appears twice per round), and a plain
+    # localCheckpoint still inherits origin Catalyst stats whose join
+    # products compound geometrically per round. On a real cluster
+    # swap in reliable checkpointing to also survive executor loss.
+    first = edges
     prev_sig = None
     for _ in range(max_iterations):
-        # large-star over the symmetric neighborhood
+        # large-star over the symmetric neighborhood (a self-loop
+        # fails v > u and drops out here)
         sym = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
@@ -572,105 +575,25 @@ def connected_components_star(pairs: DataFrame, a_col: str = "d1",
         # eager=False: the signature aggregate below is the round's ONE
         # driver action — it materializes (and persists) the
         # checkpointed edge set as a side effect, instead of paying a
-        # separate checkpoint job barrier per round (the kcore_peel
-        # fusion, guide §1.2: one driver round trip per round, not two).
+        # separate checkpoint job barrier per round.
         new_edges = truncated_checkpoint(new_edges, eager=False)
         sig = new_edges.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h")
         ).collect()[0]
-        edges.unpersist()
+        if edges is not first:   # `nodes` still reads the input edges
+            edges.unpersist()
         edges = new_edges
         if prev_sig == (sig.n, sig.h):
             break
         prev_sig = (sig.n, sig.h)
     else:
         raise RuntimeError(
-            f"connected_components_star: max_iterations={max_iterations} "
-            f"exhausted before the edge set reached its fixpoint")
-    return (edges.select(F.col("u").alias("doc_id"),
-                         F.col("v").alias("cluster_id"))
-            .unionByName(edges.select(F.col("v").alias("doc_id"),
-                                      F.col("v").alias("cluster_id")))
-            .distinct())
-
-
-def connected_components(pairs: DataFrame, a_col: str = "d1",
-                         b_col: str = "d2",
-                         max_iterations: int = 20) -> DataFrame:
-    """Connected components over an undirected pair graph → (doc_id,
-    cluster_id = min reachable id): the step that turns near-dup PAIRS
-    into dedup GROUPS (keep one representative per cluster).
-
-    Iterative min-label propagation: each round joins current labels
-    across edges and keeps the minimum seen; terminates when no label
-    changes (components' diameters bound the rounds, ~log n with the
-    min-id shortcut in practice). Each round is one shuffle join on a
-    (node, label) table — the standard large-graph CC shape; for
-    planet-scale graphs swap in large-star/small-star contraction with
-    the same interface.
-    """
-    edges = (pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-             .unionByName(
-                 pairs.select(F.col(b_col).alias("src"),
-                              F.col(a_col).alias("dst")))
-             .distinct())
-    labels = (edges.select(F.col("src").alias("node"))
-              .distinct()
-              .withColumn("label", F.col("node")))
-    # Stats-resetting checkpoint (operators/ckpt.py; not plain cache)
-    # truncates lineage: the label plan otherwise grows by one join per
-    # round and the driver OOMs generating exponential plan trees on
-    # high-diameter graphs — and inherited Catalyst join-stat products
-    # would compound across rounds even with plain localCheckpoint.
-    edges = edges.localCheckpoint(eager=True)
-    # r13: same driver union-find gate as connected_components_star —
-    # min-label propagation converges to the identical (node →
-    # component min) labeling over the same node set (self-loop nodes
-    # included: the symmetrized edge frame retains them, so they
-    # register as singletons either way). Distributed loop below is
-    # the at-scale fallback.
-    if budget.fits_driver(edges.count() * UF_EDGE_ROW_BYTES):
-        return _driver_components(edges)
-    labels = labels.localCheckpoint(eager=True)
-    prev_sum: object = object()   # sentinel unequal to any sum
-    for _ in range(max_iterations):
-        neighbor_min = (edges.join(labels, edges.dst == labels.node)
-                        .groupBy("src")
-                        .agg(F.min("label").alias("nbr_label")))
-        new_labels = (labels.join(neighbor_min,
-                                  labels.node == neighbor_min.src, "left")
-                      .select("node",
-                              F.least("label", F.coalesce("nbr_label", "label"))
-                               .alias("label")))
-        # eager=False + sum-signature convergence (r12, guide §1.2/§2.3):
-        # labels update by least(), so the per-node label sequence is
-        # monotone non-increasing over a FIXED node set — the exact
-        # decimal sum of labels strictly decreases iff any label
-        # changed, making an equal sum a sound fixpoint test. One
-        # aggregate on the new frame (which also materializes its lazy
-        # checkpoint) replaces the old changed-count join of old×new
-        # labels PLUS the separate checkpoint job: one driver action
-        # and zero extra shuffles per round instead of two actions and
-        # a join.
-        new_labels = truncated_checkpoint(new_labels, eager=False)
-        new_sum = new_labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0].s
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        # Truncated labels would differ from the driver route's exact
-        # components: fail instead of returning a partial labeling.
-        raise RuntimeError(
             f"connected_components: max_iterations={max_iterations} "
-            f"exhausted before the labels reached their fixpoint — raise "
-            f"max_iterations (min labels move one hop per round)")
-    return labels.select(F.col("node").alias("doc_id"),
-                         F.col("label").alias("cluster_id"))
+            f"exhausted before the edge set reached its fixpoint")
+    return (nodes.join(edges, "u", "left")
+            .select(F.col("u").alias("doc_id"),
+                    F.coalesce("v", "u").alias("cluster_id")))
 
 
 # --- Sign-random-projection (hyperplane) LSH over embeddings ---------------
@@ -850,18 +773,6 @@ def hamming_signatures(emb: DataFrame, dim: int = 64, n_bits: int = 48,
         pack, f"{id_col} long, sig long")
 
 
-#: Size cutover for the Hamming shortlist kernels: if everything the
-#: driver collects fits this many bytes, the per-query top-m scan
-#: runs C-level against one broadcast array — the shuffle carries
-#: only n x m shortlist rows, never the n x n pair matrix. What
-#: counts against the budget differs per kernel: the sigs-only
-#: shortlist broadcasts n x 8 x words (1 GiB = ~33M vectors at 4
-#: words); the FUSED scan also carries the raw float64 vectors +
-#: norms + ids (560 B/vec at dim 64 → ~1.9M vectors/GiB). Above it
-#: the caller's join plan (bucket or pair shuffle) is the route,
-#: same discipline as knn.py.
-HAMMING_BROADCAST_BYTES = 1 << 30
-
 #: uint8 LUT, NOT int64: the gather's output dtype follows the LUT,
 #: and an int64 gather over a B x n x 32 byte tensor materializes 8x
 #: the bytes — measured 22 s vs 0.6 s for the 2000x2000x4-word scan.
@@ -920,7 +831,6 @@ def hamming_signatures_wide(emb: DataFrame, dim: int = 64,
 def hamming_topk_scan(emb: DataFrame, n_bits: int = 192,
                       word_bits: int = 48, m: int = 64,
                       id_col: str = "vec_id", vec_col: str = "embedding",
-                      broadcast_budget: int = HAMMING_BROADCAST_BYTES,
                       queries: DataFrame | None = None,
                       exclude_self: bool = True
                       ) -> DataFrame | None:
@@ -938,8 +848,9 @@ def hamming_topk_scan(emb: DataFrame, n_bits: int = 192,
     shortlist pass -> two embedding fetch-joins -> pandas-UDF rerank)
     pays five Spark stages of overhead for work that is one C-level
     scan at this size — measured 15 s -> ~3 s at sf0.1. Returns None
-    above the budget; callers fall back to the relational plan,
-    which works at any n.
+    when the collected payload does not fit the driver budget
+    (``budget.fits_driver``); callers fall back to the relational
+    plan, which works at any n.
 
     ``queries`` (default: the corpus itself — the registered all-pairs
     face) restricts the SCAN side to a query batch: the serving shape,
@@ -963,11 +874,11 @@ def hamming_topk_scan(emb: DataFrame, n_bits: int = 192,
     # Budget what the driver ACTUALLY collects and broadcasts: the
     # packed signatures (8*n_words B/vec) PLUS the raw float64
     # vectors (8*dim), norms (8) and ids (8) — at dim=64 that is
-    # 560 B/vec, not 32, so ~1.9M vectors/GiB. Counting signatures
-    # alone would let the fused path OOM the driver ~16x before the
-    # relational fallback engaged.
+    # 560 B/vec, not 32, so ~0.96M vectors in the 512 MiB budget.
+    # Counting signatures alone would let the fused path OOM the
+    # driver ~16x before the relational fallback engaged.
     dim = int(emb.select(F.size(vec_col).alias("_d")).first()["_d"])
-    if n * (8 * n_words + 8 * dim + 16) > broadcast_budget:
+    if not budget.fits_driver(n * (8 * n_words + 8 * dim + 16)):
         return None
     pdf = emb.select(id_col, vec_col).toPandas()
     order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
@@ -1054,16 +965,15 @@ def hamming_topk_scan(emb: DataFrame, n_bits: int = 192,
 
 def hamming_topk_shortlist_wide(sigs: DataFrame, m: int = 64,
                                 id_col: str = "vec_id",
-                                broadcast_budget: int =
-                                HAMMING_BROADCAST_BYTES,
                                 queries: DataFrame | None = None,
                                 exclude_self: bool = True) -> DataFrame:
     """Multi-word variant of :func:`hamming_topk_shortlist` over an
     (id, sigs: array<long>) frame: per-query Hamming top-``m`` by
     (sum-of-word popcounts, neighbor_id), block-vectorized against
     one broadcast [n, words] int64 matrix. Same exact-threshold tie
-    discipline; same relational fallback above the broadcast budget
-    (words explode onto the join key and popcounts sum per pair).
+    discipline. When the n x 8 x words signature broadcast does not
+    fit the driver budget it falls back to the relational plan (words
+    explode onto the join key and popcounts sum per pair).
 
     ``queries`` (default: ``sigs`` itself — the all-pairs face)
     restricts the PROBE side to a (id, sigs) batch in BOTH routes:
@@ -1082,7 +992,7 @@ def hamming_topk_shortlist_wide(sigs: DataFrame, m: int = 64,
     first = sigs.select("sigs").first()
     n_words = len(first["sigs"]) if first else 1
     q_side = sigs if queries is None else queries
-    if n * 8 * n_words > broadcast_budget:
+    if not budget.fits_driver(n * 8 * n_words):
         ex = q_side.select(id_col,
                            F.posexplode("sigs").alias("w", "_sa"))
         nb = sigs.select(F.col(id_col).alias("neighbor_id"),

@@ -1,7 +1,7 @@
 """Graph operators over edge DataFrames: PageRank, triangle census,
 BFS levels.
 
-Companion to the connected-components operators in operators/dedup.py —
+Companion to the connected-components operator in operators/dedup.py —
 the same "iterate a join, truncate lineage" discipline. PageRank ranks
 near-duplicate clusters / citation-linked documents by centrality: the
 canonical "which copy do I keep / which doc do I trust" signal in a
@@ -21,7 +21,7 @@ from .ckpt import truncated_checkpoint
 from .dedup import (
     UF_EDGE_ROW_BYTES,
     _driver_components,
-    connected_components_star,
+    connected_components,
 )
 
 
@@ -51,7 +51,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     grid, and the loop stops the first time the signature repeats —
     the grid-stationary fixed point, reached in ~log(10^-grid_dp) /
     log(damping) rounds (≈127 at 9 dp / 0.85). ``max_rounds`` is the
-    runaway backstop for adversarial damping values.
+    runaway backstop for adversarial damping values: exhausting it
+    raises ``RuntimeError`` rather than returning unconverged ranks.
 
     Scale: the join shuffles on the edge key both ways; node/rank
     state is 16 bytes a row; hot pages skew the contribution groupBy,
@@ -103,10 +104,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # means the sequence is periodic on the grid, so the current
         # vector IS a grid-stationary state. If the backstop is hit
         # without a repeat (e.g. damping ≥ 0.9 needs ~197+ rounds at
-        # the 9-dp grid), warn loudly instead of silently returning
-        # unconverged ranks.
+        # the 9-dp grid), raise instead of returning unconverged ranks.
         recent: list = []
-        converged = False
         for _ in range(max_rounds):
             ranks = power_round(ranks)
             sig = ranks.agg(
@@ -114,18 +113,15 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                       .cast("decimal(38,0)")).alias("h")
             ).collect()[0].h
             if sig in recent:
-                converged = True
                 break
             recent.append(sig)
             if len(recent) > 4:
                 recent.pop(0)
-        if not converged:
-            import logging
-            logging.getLogger(__name__).warning(
-                "pagerank: max_rounds=%d exhausted without a repeated "
-                "grid signature (damping=%s, grid_dp=%d) — returning "
-                "possibly-unconverged ranks; raise max_rounds or "
-                "lower grid_dp", max_rounds, damping, grid_dp)
+        else:
+            raise RuntimeError(
+                f"pagerank: max_rounds={max_rounds} exhausted without a "
+                f"repeated grid signature (damping={damping}, "
+                f"grid_dp={grid_dp}) — raise max_rounds or lower grid_dp")
     else:
         for _ in range(iterations):
             ranks = power_round(ranks)
@@ -533,13 +529,13 @@ def boruvka_msf(edges: DataFrame, src: str = "s", dst: str = "d",
         # microseconds (r12, guide §1.2: the decision data is tiny,
         # only the relabel join is data-proportional). Both routes
         # return the (doc_id -> component min) map;
-        # connected_components_star remains the over-budget 100 TB
+        # connected_components remains the over-budget 100 TB
         # fallback, gated on the count this round already holds.
         pairs = chosen.select(F.col("cs").alias("d1"),
                               F.col("cd").alias("d2"))
         driver = budget.fits_driver(n_chosen * UF_EDGE_ROW_BYTES)
         cc = (_driver_components(pairs) if driver
-              else connected_components_star(pairs, "d1", "d2"))
+              else connected_components(pairs))
         # Broadcast only the driver route's map: the star route's
         # round-1 map is ~n/2 rows (AQE broadcasts it only once
         # contraction shrinks it).

@@ -218,8 +218,7 @@ CODE_BLOCK_ROWS = 4_000_000
 def pq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
               codebook: np.ndarray, k: int = 1, shortlist: int = 32,
               id_col: str = "vec_id", vec_col: str = "embedding",
-              exclude_self: bool = False,
-              code_block_rows: int = CODE_BLOCK_ROWS) -> DataFrame:
+              exclude_self: bool = False) -> DataFrame:
     """ADC scan + exact rerank: queries build m × ksub inner-product
     LUTs once, every code row is scored by m table lookups (no float
     math per pair), a window keeps the top-``shortlist`` candidates per
@@ -236,7 +235,7 @@ def pq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
     1e9-vector posture) computes LUT rows executor-side and scores them
     against hash-blocked code groups in a cogrouped grid — no driver
     collect of anything query-sized, per-task residency bounded by the
-    budget (query blocks) and ``code_block_rows`` (code blocks). Both
+    budget (query blocks) and ``CODE_BLOCK_ROWS`` (code blocks). Both
     routes produce byte-identical rows: LUTs are float64 on both,
     per-pair ADC sums are the same gather+sum, and every truncation is
     tie-exact by (quantized score DESC, id ASC) — block-level tops are
@@ -255,8 +254,7 @@ def pq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
                                      id_col, vec_col, exclude_self)
     else:
         scored = _adc_scan_blocked(codes, queries, codebook, shortlist,
-                                   id_col, vec_col, exclude_self,
-                                   nq, code_block_rows)
+                                   id_col, vec_col, exclude_self, nq)
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     w_short = Window.partitionBy("query_id").orderBy(
@@ -350,14 +348,14 @@ def _adc_scan_broadcast(codes: DataFrame, queries: DataFrame,
 def _adc_scan_blocked(codes: DataFrame, queries: DataFrame,
                       codebook: np.ndarray, shortlist: int,
                       id_col: str, vec_col: str, exclude_self: bool,
-                      nq: int, code_block_rows: int) -> DataFrame:
+                      nq: int) -> DataFrame:
     """Over-budget ADC scan: LUT rows are computed executor-side
     (mapInPandas — only the tiny codebook broadcasts) and meet the code
     table in a (query-block × code-block) cogrouped grid, the same
     two-sided blocked shape as knn.cosine_pairs_twosided / the ivfpq
     bucket cogroup. Zero driver collects of query- or corpus-sized
     data; per-task residency ≤ one query block's float64 LUTs
-    (≤ the driver budget) + one code block (≤ code_block_rows rows).
+    (≤ the driver budget) + one code block (≤ CODE_BLOCK_ROWS rows).
     Shuffle: LUT rows replicate ×n_code_blocks and code rows
     ×n_query_blocks — the price of a flat full scan at a Q that
     doesn't fit anywhere whole. Emits per-(block-pair)
@@ -377,7 +375,7 @@ def _adc_scan_blocked(codes: DataFrame, queries: DataFrame,
     n_codes = codes.count()
     qb_n = max(2, min(nq, -(-(nq * m * ksub * 8)
                           // max(1, budget.DRIVER_BUDGET_BYTES))))
-    cb_n = max(1, -(-n_codes // max(1, code_block_rows)))
+    cb_n = max(1, -(-n_codes // CODE_BLOCK_ROWS))
     # Parallelism floor (same rationale as knn.route_exact_plan): the
     # grid should yield at least ~defaultParallelism tasks.
     par = spark.sparkContext.defaultParallelism

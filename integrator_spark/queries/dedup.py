@@ -624,10 +624,11 @@ FROM reach GROUP BY src
           tags=("dedup", "neardup", "iterative"))
 def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: 0.8-Jaccard pairs → connected components →
-    (doc, cluster representative). The Spark side iterates min-label
-    propagation to a fixpoint; the oracle computes the same components
-    with a recursive transitive-closure CTE — an iterative distributed
-    algorithm checked against recursive SQL."""
+    (doc, cluster representative). The Spark side runs the one
+    connected-components operator (driver union-find under the driver
+    budget, large-star/small-star contraction past it); the oracle
+    computes the same components with a recursive transitive-closure
+    CTE — an iterative algorithm checked against recursive SQL."""
     from ..operators.dedup import connected_components
     d = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, k=3, threshold=0.8).select("d1", "d2")
@@ -637,15 +638,15 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_cluster_star", oracle=_CLUSTER_ORACLE,
           tags=("dedup", "neardup", "iterative"))
 def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering through the planet-scale path: alternating
-    large-star/small-star contraction (O(log² n) rounds independent of
-    component diameter) instead of min-label propagation. Shares
-    dedup_cluster's recursive-CTE oracle, so the driver checks both
-    algorithms against the same ground truth."""
-    from ..operators.dedup import connected_components_star
+    """Same clustering as ``dedup_cluster``, through the same operator
+    and against the same recursive-CTE oracle. It once ran the star
+    contraction while ``dedup_cluster`` ran min-label propagation;
+    the two merged into one operator, and both names stay because the
+    registry is append-only."""
+    from ..operators.dedup import connected_components
     d = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, k=3, threshold=0.8).select("d1", "d2")
-    return connected_components_star(pairs)
+    return connected_components(pairs)
 
 
 @register("dedup_substring_spans", oracle="""
@@ -1368,8 +1369,8 @@ def dedup_embedding_lsh_cluster(spark: SparkSession,
     component's canonical (minimum) id — the cluster-representative
     policy, vs keep-first's pairwise rule (they differ on chains:
     a-c, b-c with a<b<c keeps {a,b} under keep-first but canonicalizes
-    all three to a here). Spark iterates min-label propagation to a
-    fixpoint; the oracle closes the same edges with a recursive
+    all three to a here). Spark runs the connected-components
+    operator; the oracle closes the same edges with a recursive
     transitive-closure CTE — the identical cross-check shape as
     dedup_cluster, now on the embedding side."""
     from ..operators.dedup import connected_components, signlsh_pairs

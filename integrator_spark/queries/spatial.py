@@ -115,8 +115,9 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure operator composition, no bespoke clustering kernel: the
     eps-neighborhood graph comes from the grid-bucketed radius join
     (never all-pairs), core flags are one degree aggregation, clusters
-    are the existing star-contraction connected-components operator
-    over the core-core subgraph (O(log^2 n) rounds, diameter-free),
+    are the existing connected-components operator over the
+    core-core subgraph (star contraction past the driver budget:
+    O(log^2 n) rounds, diameter-free),
     and border assignment is one more equi join. The oracle recomputes
     density connectivity as a recursive-CTE transitive closure over
     the quadratic pair join — Θ(Σ|component|²) rows, tractable at the
@@ -128,7 +129,7 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     and CC rounds shuffle on cell/node keys; nothing materializes a
     closure."""
     from ..operators.ckpt import truncated_checkpoint
-    from ..operators.dedup import connected_components_star
+    from ..operators.dedup import connected_components
 
     pts = _pts(spark, sf_dir)
     # The eps-neighborhood pair set feeds degree counting, the
@@ -150,7 +151,7 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     core_edges = (both
                   .join(core.select(F.col("id").alias("i")), "i", "semi")
                   .join(core.select(F.col("id").alias("j")), "j", "semi"))
-    cc = connected_components_star(
+    cc = connected_components(
         core_edges.select(F.col("i").alias("d1"), F.col("j").alias("d2")))
     linked = cc.select(F.col("doc_id").alias("id"),
                        F.col("cluster_id"))

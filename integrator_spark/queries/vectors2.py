@@ -226,10 +226,11 @@ def vec_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     48 x top-8 measured recall 0.19, 192 x top-64 measures 0.93+
     (oracle-checked in ``vec_hamming_recall``, pinned >= 0.9).
 
-    Scale shape (``hamming_topk_shortlist_wide``, size-routed): under
-    the 1 GiB signature budget the scan is one broadcast [n, 4] int64
-    matrix + a block-vectorized XOR/LUT-popcount Arrow kernel — the
-    n x n distance matrix never materializes, the shuffle carries
+    Scale shape (``hamming_topk_scan``, size-routed): when the raw
+    vectors and signatures (560 B/vec) fit the driver budget the scan
+    is one broadcast [n, 4] int64 matrix + a block-vectorized
+    XOR/LUT-popcount Arrow kernel — the n x n distance matrix never
+    materializes, the shuffle carries
     only n x m shortlist rows, and the kernel's threshold-masked
     lexsort reproduces the window plan's (hamming, neighbor) order
     exactly (the oracle proves it every sweep). Above budget it

@@ -87,9 +87,8 @@ SLOW_NODE_PATTERNS = (
     "tests/test_plans.py::test_plan_has_no_scale_violations[text_bpe_train_deep]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_graph_det]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_graph_det_deletes]",
-    # Forced-distributed (zero driver budget) route checks that take
-    # 16-17 s each on 4 cores.
-    "tests/test_operators.py::test_boruvka_star_fallback_matches_driver_contraction",
+    # Forced-distributed (zero driver budget) route check that takes
+    # 16-17 s on 4 cores.
     "tests/test_operators.py::test_ivf_det_assign_wider_than_probe_matches_oracle",
     # One case per oracle-backed query: 361 cases, 7.6 min at sf0.001
     # on 4 cores (342 skip after building their query, 25 take > 5 s).

@@ -546,38 +546,42 @@ def test_connected_components_hand_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
 
 
-def test_cc_star_matches_label_propagation_on_fuzzed_graphs(spark):
-    # VERDICT r01 item 7: the large-star/small-star contraction must
-    # produce identical clusters to min-label propagation.
+def test_cc_star_matches_union_find_on_fuzzed_graphs(spark, monkeypatch):
+    # The distributed large-star/small-star loop (budget 0) must return
+    # exactly the driver union-find's rows (default budget): one row per
+    # id, self-loop-only ids as singletons, reversed duplicates ignored.
     import random
 
-    from integrator_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from integrator_spark.operators import budget
+    from integrator_spark.operators.dedup import connected_components
     for seed in (11, 23, 47):
         rnd = random.Random(seed)
         edges = list({(a, b) for a, b in
                       ((rnd.randrange(40), rnd.randrange(40))
                        for _ in range(45)) if a != b})
+        edges += [(b, a) for a, b in edges[:5]]             # reversed dups
+        edges += [(40 + seed, 40 + seed), (edges[0][0],) * 2]  # self-loops
         pairs = spark.createDataFrame(edges, "d1 long, d2 long")
-        prop = {(r.doc_id, r.cluster_id)
-                for r in connected_components(pairs).collect()}
-        star = {(r.doc_id, r.cluster_id)
-                for r in connected_components_star(pairs).collect()}
-        assert star == prop, f"seed {seed}: star != propagation"
+        driver = sorted(map(tuple, connected_components(pairs).collect()))
+        with monkeypatch.context() as mp:
+            mp.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+            star = sorted(map(tuple, connected_components(pairs).collect()))
+        assert star == driver, f"seed {seed}: star != union-find"
+        assert [n for n, _ in star] == sorted({x for e in edges for x in e})
+        assert (40 + seed, 40 + seed) in star
 
 
-def test_cc_star_converges_on_long_chain(spark):
-    # A 60-node path has diameter 59: label propagation needs ~59 rounds
-    # (beyond its default max_iterations) but star contraction collapses
-    # it in O(log^2 n) rounds. Ground truth: one component rooted at 0.
-    from integrator_spark.operators.dedup import connected_components_star
+def test_cc_star_converges_on_long_chain(spark, monkeypatch):
+    # A 60-node path has diameter 59: min-label propagation would need
+    # ~59 rounds, while the star loop (forced by budget 0) collapses it
+    # in O(log^2 n) rounds. Ground truth: one component rooted at 0.
+    from integrator_spark.operators import budget
+    from integrator_spark.operators.dedup import connected_components
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(59)], "d1 long, d2 long")
-    got = {r.doc_id: r.cluster_id
-           for r in connected_components_star(pairs).collect()}
-    assert got == {i: 0 for i in range(60)}
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+    got = sorted(map(tuple, connected_components(pairs).collect()))
+    assert got == [(i, 0) for i in range(60)]
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):
@@ -1172,8 +1176,7 @@ def test_pq_search_budget_routes_query_collect(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "toPandas", boom)
     got = sorted(
         (r.query_id, r.neighbor_id, r.cos_sim, r.rank)
-        for r in pq_search(codes, e, e, cb,
-                           code_block_rows=50, **kw).collect())
+        for r in pq_search(codes, e, e, cb, **kw).collect())
     assert got == want and len(got) == 2 * nq
 
 
@@ -1601,7 +1604,7 @@ def test_dbscan_composition_roles_hand_computed(spark):
     # cross at the origin (all core at minPts=4), one point 8m from
     # its edge (border: in eps of a core, too sparse to be core), one
     # far point (noise).
-    from integrator_spark.operators.dedup import connected_components_star
+    from integrator_spark.operators.dedup import connected_components
     from integrator_spark.operators.spatial import radius_pairs
 
     pts = [(0, 0.0, 0.0), (1, 5.0, 0.0), (2, -5.0, 0.0),
@@ -1619,7 +1622,7 @@ def test_dbscan_composition_roles_hand_computed(spark):
     assert core == {0, 1, 2, 3, 4}
     core_edges = both.filter(F.col("i").isin(*core)
                              & F.col("j").isin(*core))
-    cc = {r.doc_id: r.cluster_id for r in connected_components_star(
+    cc = {r.doc_id: r.cluster_id for r in connected_components(
         core_edges.selectExpr("i AS d1", "j AS d2")).collect()}
     assert cc == {i: 0 for i in core}
     # 5 is adjacent to core 1 only -> border of cluster 0; 6 touches no one
@@ -2044,23 +2047,18 @@ def test_label_propagation_separates_bridged_cliques(spark):
     assert 1 < len(sizes) < len(rows), "degenerate community structure"
 
 
-def test_pagerank_warns_when_max_rounds_exhausted(spark, caplog):
-    """Round-10 ADVICE (low): exhausting max_rounds without a repeated
-    grid signature must not be SILENT — the returned ranks may be
-    unconverged. (High damping needs ~197+ rounds at the 9-dp grid;
-    the old backstop of 200 barely cleared the default and said
-    nothing when it didn't.)"""
-    import logging
+def test_pagerank_raises_when_max_rounds_exhausted(spark):
+    """Exhausting max_rounds without a repeated grid signature must
+    raise: the ranks it holds are unconverged. (High damping needs
+    ~197+ rounds at the 9-dp grid.)"""
+    import pytest
 
     from integrator_spark.operators.graph import pagerank
 
     edges = [(i, (i + 1) % 12) for i in range(12)] + [(0, 5), (3, 9)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    with caplog.at_level(logging.WARNING,
-                         logger="integrator_spark.operators.graph"):
-        out = pagerank(df, iterations=None, max_rounds=2).collect()
-    assert len(out) == 12   # still returns ranks, just flagged
-    assert any("max_rounds" in rec.message for rec in caplog.records)
+    with pytest.raises(RuntimeError, match="max_rounds=2 exhausted"):
+        pagerank(df, iterations=None, max_rounds=2)
 
 
 def test_snap_half_up_matches_sql_round():
@@ -2208,16 +2206,17 @@ def test_hamming_recall_pinned_at_registered_dials(spark):
     assert row["recall_at_1"] >= 0.9, row
 
 
-def test_hamming_fallback_plan_equals_fused_kernel(spark):
+def test_hamming_fallback_plan_equals_fused_kernel(spark, monkeypatch):
     """The above-budget relational word-join plan must produce the
     SAME shortlist as the fused broadcast kernel — forced here by a
-    1-byte broadcast budget, so the fallback path can't bitrot while
+    zero driver budget, so the fallback path can't bitrot while
     the fixture always rides the kernel. Compares the full
     (vec_id, neighbor_id, hamming) shortlist set AND that the top-k
     query output is identical through either route."""
     import pyspark.sql.functions as F
 
     from integrator_spark.io import load_table
+    from integrator_spark.operators import budget
     from integrator_spark.operators.dedup import (
         hamming_signatures_wide, hamming_topk_scan,
         hamming_topk_shortlist_wide)
@@ -2226,9 +2225,10 @@ def test_hamming_fallback_plan_equals_fused_kernel(spark):
 
     e = load_table(spark, TEST_SF_DIR, "embeddings").limit(120)
     sigs = hamming_signatures_wide(e, n_bits=192, word_bits=48)
-    rel = {(r["vec_id"], r["neighbor_id"], r["hamming"])
-           for r in hamming_topk_shortlist_wide(
-               sigs, m=8, broadcast_budget=1).collect()}
+    with monkeypatch.context() as mp:
+        mp.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+        rel = {(r["vec_id"], r["neighbor_id"], r["hamming"])
+               for r in hamming_topk_shortlist_wide(sigs, m=8).collect()}
     fused = hamming_topk_scan(e, n_bits=192, word_bits=48, m=8)
     assert fused is not None
     kern = {(r["vec_id"], r["neighbor_id"], r["hamming"])
@@ -2251,7 +2251,7 @@ def test_hamming_fallback_plan_equals_fused_kernel(spark):
         assert r["c"] == ref[(r["vec_id"], r["neighbor_id"])]
 
 
-def test_hamming_scan_budget_counts_float_payload(spark):
+def test_hamming_scan_budget_counts_float_payload(spark, monkeypatch):
     """The fused scan toPandas-collects the RAW float64 vectors (plus
     norms and ids), not just the packed signatures — the budget gate
     must count that payload (~560 B/vec at dim 64, not 32), or the
@@ -2259,16 +2259,17 @@ def test_hamming_scan_budget_counts_float_payload(spark):
     120 vecs x 4 words: sigs alone = 3,840 B; full payload = 67,200 B.
     A 10 KiB budget must therefore route to the fallback (None)."""
     from integrator_spark.io import load_table
+    from integrator_spark.operators import budget
     from integrator_spark.operators.dedup import hamming_topk_scan
 
     from .conftest import TEST_SF_DIR
 
     e = load_table(spark, TEST_SF_DIR, "embeddings").limit(120)
-    assert hamming_topk_scan(e, n_bits=192, word_bits=48, m=8,
-                             broadcast_budget=10 * 1024) is None
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 10 * 1024)
+    assert hamming_topk_scan(e, n_bits=192, word_bits=48, m=8) is None
     # and the honest per-vector cost fits: 120 * 560 = 67,200
-    assert hamming_topk_scan(e, n_bits=192, word_bits=48, m=8,
-                             broadcast_budget=68 * 1024) is not None
+    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 68 * 1024)
+    assert hamming_topk_scan(e, n_bits=192, word_bits=48, m=8) is not None
 
 
 def test_hamming_shortlist_wide_empty_corpus(spark):
@@ -2358,8 +2359,8 @@ def test_boruvka_raises_when_rounds_exhausted_unconverged(spark):
 def test_boruvka_star_fallback_matches_driver_contraction(spark,
                                                          monkeypatch):
     """At a zero driver budget every Borůvka round contracts through
-    the star-CC fallback instead of the driver union-find; the
-    spanning forest must be the same (tied weights included)."""
+    connected_components' star loop instead of the driver union-find;
+    the spanning forest must be the same (tied weights included)."""
     from integrator_spark.operators import budget
     from integrator_spark.operators.graph import boruvka_msf
 
@@ -2375,9 +2376,10 @@ def test_boruvka_star_fallback_matches_driver_contraction(spark,
 
 def test_connected_components_raises_when_iterations_exhausted(spark,
                                                                monkeypatch):
-    """On the distributed route (budget 0) a chain longer than
-    max_iterations cannot reach its min-label fixpoint: the loop must
-    raise, not return truncated labels the driver route would not."""
+    """On the distributed route (budget 0) the star loop needs three
+    rounds for a 5-node chain (two that change the edge set, one that
+    confirms the fixpoint): with two it must raise, not return
+    truncated labels the driver route would not."""
     import pytest
 
     from integrator_spark.operators import budget
@@ -3337,15 +3339,10 @@ def test_det_fit_driver_route_parity(spark, monkeypatch):
 
 
 def test_connected_components_driver_route_parity(spark, monkeypatch):
-    """The r13 driver union-find gate must return the SAME row set as
-    both distributed CC fixpoints (star contraction and min-label
-    propagation) — including singleton-via-self-loop semantics — on a
-    graph with a long chain, two cycles, and a self-loop. (Chain
-    diameter stays under connected_components' max_iterations=20
-    propagation horizon: the driver route computes exact components,
-    while the min-label loop truncates past its round budget — on
-    convergent inputs, which is what every oracle-backed fixture is,
-    the routes are row-identical.)"""
+    """The driver union-find gate must return the SAME row set as the
+    distributed star loop — including singleton-via-self-loop
+    semantics — on a graph with a long chain, a cycle, a reversed
+    duplicate and a self-loop."""
     from integrator_spark.operators import budget
     from integrator_spark.operators import dedup as dd
 
@@ -3354,22 +3351,15 @@ def test_connected_components_driver_route_parity(spark, monkeypatch):
     edges += [(200, 201), (201, 200), (300, 300)]        # dup + self
     pairs = spark.createDataFrame(edges, "d1 long, d2 long")
 
-    fast_star = sorted(map(tuple, dd.connected_components_star(
-        pairs).collect()))
-    fast_prop = sorted(map(tuple, dd.connected_components(
-        pairs).collect()))
+    fast = sorted(map(tuple, dd.connected_components(pairs).collect()))
     monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
-    slow_star = sorted(map(tuple, dd.connected_components_star(
-        pairs).collect()))
-    slow_prop = sorted(map(tuple, dd.connected_components(
-        pairs).collect()))
-    assert fast_star == slow_star
-    assert fast_prop == slow_prop
+    slow = sorted(map(tuple, dd.connected_components(pairs).collect()))
+    assert fast == slow
     # every component labeled by its min id
-    assert all(c == 0 for n, c in fast_star if n <= 15)
-    assert {c for n, c in fast_star if 100 <= n <= 102} == {100}
-    # self-loop node kept by the propagation contract
-    assert (300, 300) in fast_prop
+    assert all(c == 0 for n, c in fast if n <= 15)
+    assert {c for n, c in fast if 100 <= n <= 102} == {100}
+    # the self-loop-only id is its own singleton on both routes
+    assert (300, 300) in fast and (300, 300) in slow
 
 
 def test_det_adc_driver_route_parity(spark, monkeypatch):
@@ -3423,6 +3413,22 @@ def test_ivf_det_assign_wider_than_probe_matches_oracle(spark, duck,
     assert len(driver) > 0
 
 
+def _record_fits_driver(monkeypatch) -> list:
+    """Wrap budget.fits_driver so each call appends its byte count to
+    the returned list; verdicts are unchanged."""
+    from integrator_spark.operators import budget
+
+    calls = []
+    fits_driver = budget.fits_driver
+
+    def recording_fits_driver(nbytes):
+        calls.append(nbytes)
+        return fits_driver(nbytes)
+
+    monkeypatch.setattr(budget, "fits_driver", recording_fits_driver)
+    return calls
+
+
 def _oracle_backed_query_names() -> list[str]:
     from integrator_spark.registry import all_specs
 
@@ -3443,14 +3449,7 @@ def test_forced_distributed_route_parity(spark, monkeypatch, name):
     from .conftest import TEST_SF_DIR
 
     fn = all_specs()[name].fn
-    calls = []
-    fits_driver = budget.fits_driver
-
-    def recording_fits_driver(nbytes):
-        calls.append(nbytes)
-        return fits_driver(nbytes)
-
-    monkeypatch.setattr(budget, "fits_driver", recording_fits_driver)
+    calls = _record_fits_driver(monkeypatch)
     built = fn(spark, TEST_SF_DIR)   # every gate runs while building
     if not calls:
         pytest.skip("takes no driver-budget route decision")
@@ -3458,3 +3457,36 @@ def test_forced_distributed_route_parity(spark, monkeypatch, name):
     monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
     forced = canonical_strings(fn(spark, TEST_SF_DIR).toPandas())
     assert forced == default
+
+
+@pytest.mark.parametrize("name", ["dedup_cluster", "spatial_dbscan",
+                                  "graph_triangles", "vec_ann_lsh",
+                                  "vec_hamming_topk"])
+def test_result_independent_of_route_and_partitions(spark, monkeypatch,
+                                                    name):
+    """One query per budget-gated family (connected components, CSR
+    triangles, cosine residual, Hamming scan) returns the same rows on
+    {default budget, budget 0} x {3, 32} initial shuffle partitions.
+    Batch shuffles start at initialPartitionNum while AQE coalescing is
+    on; each count runs in its own session so the shared conf is left
+    alone."""
+    from integrator_spark.operators import budget
+    from integrator_spark.registry import all_specs
+    from integrator_spark.session import ensure_runtime_confs
+    from integrator_spark.testing import canonical_strings
+    from .conftest import TEST_SF_DIR
+
+    fn = all_specs()[name].fn
+    calls = _record_fits_driver(monkeypatch)
+    results = []
+    for parts in (3, 32):
+        s = ensure_runtime_confs(spark.newSession())
+        s.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+                   str(parts))
+        for nbytes in (budget.DRIVER_BUDGET_BYTES, 0):
+            with monkeypatch.context() as mp:
+                mp.setattr(budget, "DRIVER_BUDGET_BYTES", nbytes)
+                results.append(canonical_strings(
+                    fn(s, TEST_SF_DIR).toPandas()))
+    assert calls, f"{name} no longer asks the driver budget"
+    assert results[0] and all(r == results[0] for r in results)
