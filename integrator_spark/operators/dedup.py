@@ -25,7 +25,7 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import budget
@@ -34,14 +34,17 @@ from .ckpt import truncated_checkpoint
 from ..functions.text import word_shingles
 
 
-def shingle_rows(docs: DataFrame, k: int = 3,
-                 id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """DISTINCT (doc_id, shingle) rows — the row form of
-    ``explode(word_shingles(text, k))``, producing byte-identical
-    shingle strings (``w[i] || '|' || ... || w[i+k-1]``, texts with
-    fewer than k tokens yield nothing; parity is symmetric-diff-0
-    tested against the array form).
+def gram_rows(docs: DataFrame, k: int, sep: str = " ",
+              id_col: str = "doc_id",
+              text_col: str = "text") -> DataFrame:
+    """ALL (doc_id, gram) occurrence rows: one row per sliding window
+    of k whitespace tokens, joined by ``sep``, duplicates preserved
+    (substring-span statistics count occurrences, not membership).
+    Byte-identical to the array form ``transform(sequence(0, size -
+    k), i -> concat_ws(sep, w[i], ..., w[i+k-1]))``: ``lead(word, j)``
+    over (doc, pos) is exactly ``w[pos + j]``, and the ``pos <= n - k``
+    filter reproduces ``sequence(0, size - k)``'s range (docs shorter
+    than k yield no positions).
 
     Why this form (r12, guide §4.1 — prefer codegen over interpreted
     HOFs): ``transform`` + k×``element_at`` + ``concat_ws`` run
@@ -49,44 +52,7 @@ def shingle_rows(docs: DataFrame, k: int = 3,
     documents; posexplode + k-1 window ``lead``s + one ``concat_ws``
     is whole-stage-codegen except the per-doc window sort and measures
     ~1.7 s. The per-doc window is bounded by document length (never a
-    global window). The trailing ``distinct()`` both matches the
-    per-doc array_distinct semantics AND ends the subtree in an
-    Exchange, so the several consumers every pairs operator has
-    (counts + both join sides) hit ReusedExchange instead of
-    re-evaluating the shingling — the old narrow form was recomputed
-    three times per query."""
-    w = F.split(F.col(text_col), " ")
-    words = docs.select(F.col(id_col).alias("doc_id"),
-                        F.posexplode(w).alias("pos", "word"),
-                        F.size(w).alias("n"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.lead("word", j).over(win).alias(f"_w{j}")
-             for j in range(1, k)]
-    return (words.select("doc_id", "pos", "word", "n", *leads)
-            .filter(F.col("pos") <= F.col("n") - k)
-            .select("doc_id",
-                    F.concat_ws("|", "word",
-                                *[f"_w{j}" for j in range(1, k)])
-                    .alias("shingle"))
-            .distinct())
-
-
-def gram_rows(docs: DataFrame, k: int, sep: str = " ",
-              id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """ALL (doc_id, gram) occurrence rows — the non-distinct sibling of
-    :func:`shingle_rows` with a caller-chosen separator: one row per
-    sliding window position, duplicates preserved (substring-span
-    statistics count occurrences, not membership).
-
-    Same r12 rewrite rationale as shingle_rows (guide §4.1): the
-    ``transform`` + k×``element_at`` + ``concat_ws`` array form runs
-    interpreted per element; posexplode + k-1 codegen window ``lead``s
-    is whole-stage-codegen except the per-doc bounded window sort.
-    Byte-identical gram strings: ``lead(word, j)`` over (doc, pos) is
-    exactly ``w[pos + j]``, and the ``pos <= n - k`` filter reproduces
-    ``sequence(0, size - k)``'s range (docs shorter than k yield no
-    positions, matching the old ``size(w) >= k`` pre-filter)."""
+    global window)."""
     w = F.split(F.col(text_col), " ")
     words = docs.select(F.col(id_col).alias("doc_id"),
                         F.posexplode(w).alias("pos", "word"),
@@ -102,23 +68,37 @@ def gram_rows(docs: DataFrame, k: int, sep: str = " ",
                     .alias("gram")))
 
 
-def ngram_jaccard_pairs(docs: DataFrame, k: int = 3,
-                        threshold: float = 0.8,
-                        id_col: str = "doc_id",
-                        text_col: str = "text",
-                        max_doc_freq: int | None = None) -> DataFrame:
-    """Exact word-k-gram Jaccard similarity for all candidate pairs.
+def shingle_rows(docs: DataFrame, k: int = 3,
+                 id_col: str = "doc_id",
+                 text_col: str = "text") -> DataFrame:
+    """DISTINCT (doc_id, shingle) rows — the row form of
+    ``explode(word_shingles(text, k))``: :func:`gram_rows` with ``|``
+    as separator, made distinct (parity is symmetric-diff-0 tested
+    against the array form). The trailing ``distinct()`` both matches
+    the per-doc array_distinct semantics AND ends the subtree in an
+    Exchange, so the several consumers every pairs operator has
+    (counts + both join sides) hit ReusedExchange instead of
+    re-evaluating the shingling."""
+    return (gram_rows(docs, k, sep="|", id_col=id_col, text_col=text_col)
+            .select("doc_id", F.col("gram").alias("shingle"))
+            .distinct())
+
+
+def _shingle_overlap(docs: DataFrame, k: int, id_col: str, text_col: str,
+                     max_doc_freq: int | None,
+                     pair: Column) -> tuple[DataFrame, DataFrame]:
+    """The shingle-equality candidate join both set-similarity
+    operators run: (d1, d2, n_inter) shared-shingle counts for the doc
+    pairs ``pair`` keeps, and the (doc_id, n_sh) set sizes. Only docs
+    sharing at least one shingle are ever paired (never all-pairs).
 
     ``max_doc_freq`` is the hot-shingle skew guard: a shingle appearing
     in more than that many documents (a stop-phrase — boilerplate
-    headers, licence blocks) is dropped from the shingle sets before
-    the equality join. Without it, one shingle shared by m documents
-    alone creates m(m-1)/2 join rows — the classic candidate-explosion
-    / skewed-key failure at corpus scale. With it, per-shingle join
-    fan-out is bounded by max_doc_freq², and Jaccard is computed
-    exactly over the FILTERED sets (standard stop-shingle semantics —
-    ubiquitous tokens carry no dedup signal anyway). ``None`` (default)
-    keeps unfiltered exact behavior."""
+    headers, licence blocks) is dropped before the join AND before the
+    set sizes are counted. Without it, one shingle shared by m
+    documents alone creates m(m-1)/2 join rows; with it, per-shingle
+    fan-out is bounded by max_doc_freq², and both ratios are exact over
+    the FILTERED sets (standard stop-shingle semantics)."""
     sh = shingle_rows(docs, k, id_col=id_col, text_col=text_col)
     if max_doc_freq is not None:
         hot = (sh.groupBy("shingle")
@@ -132,9 +112,24 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 3,
     a = sh.select(F.col("doc_id").alias("d1"), "shingle")
     b = sh.select(F.col("doc_id").alias("d2"), "shingle")
     inter = (a.join(b, "shingle")
-             .filter(F.col("d1") < F.col("d2"))
+             .filter(pair)
              .groupBy("d1", "d2")
              .agg(F.count(F.lit(1)).alias("n_inter")))
+    return inter, counts
+
+
+def ngram_jaccard_pairs(docs: DataFrame, k: int = 3,
+                        threshold: float = 0.8,
+                        id_col: str = "doc_id",
+                        text_col: str = "text",
+                        max_doc_freq: int | None = None) -> DataFrame:
+    """Exact word-k-gram Jaccard similarity for all candidate pairs
+    (d1 < d2). ``max_doc_freq`` is the hot-shingle skew guard (see
+    :func:`_shingle_overlap`); ``None`` (default) keeps unfiltered
+    exact behavior."""
+    inter, counts = _shingle_overlap(docs, k, id_col, text_col,
+                                     max_doc_freq,
+                                     F.col("d1") < F.col("d2"))
     ca = counts.select(F.col("doc_id").alias("d1"), F.col("n_sh").alias("n_a"))
     cb = counts.select(F.col("doc_id").alias("d2"), F.col("n_sh").alias("n_b"))
     jac = (F.col("n_inter")
@@ -183,26 +178,14 @@ def containment_pairs(docs: DataFrame, k: int = 3,
     subset-duplication case (quotes, mirrors, wrapper pages) a
     training-data pipeline must catch separately.
 
-    Same collide-only candidate shape as the Jaccard operator: the
-    shingle-equality join only ever pairs docs sharing a shingle (never
-    all-pairs), each unordered candidate yields both directions, and
-    ``max_doc_freq`` drops stop-phrase shingles before the join (the
-    identical skew guard, applied before counting so the containment
-    denominator uses the filtered sets on both engines)."""
-    sh = shingle_rows(docs, k, id_col=id_col, text_col=text_col)
-    if max_doc_freq is not None:
-        hot = (sh.groupBy("shingle")
-               .agg(F.count(F.lit(1)).alias("_df"))
-               .filter(F.col("_df") > max_doc_freq)
-               .select("shingle"))
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("d1"), "shingle")
-    b = sh.select(F.col("doc_id").alias("d2"), "shingle")
-    inter = (a.join(b, "shingle")
-             .filter(F.col("d1") != F.col("d2"))
-             .groupBy("d1", "d2")
-             .agg(F.count(F.lit(1)).alias("n_inter")))
+    Same collide-only candidate join as the Jaccard operator
+    (:func:`_shingle_overlap`): each unordered candidate yields both
+    directions, and ``max_doc_freq`` drops stop-phrase shingles before
+    counting, so the containment denominator uses the filtered sets on
+    both engines."""
+    inter, counts = _shingle_overlap(docs, k, id_col, text_col,
+                                     max_doc_freq,
+                                     F.col("d1") != F.col("d2"))
     ca = counts.select(F.col("doc_id").alias("d1"),
                        F.col("n_sh").alias("n_src"))
     cont = F.col("n_inter") / F.col("n_src")
@@ -424,26 +407,21 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 6,
     simhash_udf = F.pandas_udf(_simhash_series, "long")
     sh = docs.select(F.col(id_col).alias("doc_id"),
                      simhash_udf(F.col(text_col)).alias("simhash"))
-    bands = sh.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"),
-                     F.shiftright("simhash", i * _BAND_BITS)
-                      .bitwiseAND(F.lit((1 << _BAND_BITS) - 1)).alias("val"))
-            for i in range(_N_BANDS)
-        ])).alias("b"),
-    ).select("doc_id", "simhash", "b.band", "b.val")
+    # Bands are MIH chunks: (band c, 16-bit value chunk_val) rows.
+    bands = chunk_rows(sh, _N_BANDS, _BAND_BITS, code_col="simhash",
+                       keep=["doc_id", "simhash"])
     if max_band_freq is not None:
-        hot = (bands.groupBy("band", "val")
+        hot = (bands.groupBy("c", "chunk_val")
                .agg(F.count(F.lit(1)).alias("_df"))
                .filter(F.col("_df") > max_band_freq)
-               .select("band", "val"))
-        bands = bands.join(F.broadcast(hot), ["band", "val"], "left_anti")
+               .select("c", "chunk_val"))
+        bands = bands.join(F.broadcast(hot), ["c", "chunk_val"],
+                           "left_anti")
     left = bands.select(F.col("doc_id").alias("d1"),
-                        F.col("simhash").alias("h1"), "band", "val")
+                        F.col("simhash").alias("h1"), "c", "chunk_val")
     right = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("simhash").alias("h2"), "band", "val")
-    cand = (left.join(right, ["band", "val"])
+                         F.col("simhash").alias("h2"), "c", "chunk_val")
+    cand = (left.join(right, ["c", "chunk_val"])
             .filter(F.col("d1") < F.col("d2"))
             .select("d1", "d2", "h1", "h2").distinct())
     # long, not int: oracle parity (DuckDB bit_count widens to BIGINT).
@@ -729,48 +707,51 @@ def signlsh_planes(dim: int, n_planes: int) -> np.ndarray:
     return coef
 
 
+def sign_words(v: np.ndarray, planes: np.ndarray,
+               word_bits: int) -> np.ndarray:
+    """The one sign-packing kernel: [n, ceil(n_planes / word_bits)]
+    int64 words for the rows of ``v``. Components are quantized once
+    as floor(x * 2^20) and dotted exactly with the +/-1 ``planes``; bit
+    p is set iff that projection is >= 0, and lands in word
+    p // word_bits at bit p % word_bits. A single-word signature
+    (word_bits = n_bits), a band bucket (word_bits = bits_per_band)
+    and an MIH chunk word (word_bits = chunk_bits) are all this
+    little-endian packing at their own word width. Raises on a
+    dimension mismatch instead of failing inside the matmul."""
+    if v.shape[1] != planes.shape[1]:
+        raise ValueError(f"sign_words: dim mismatch {v.shape[1]} != "
+                         f"{planes.shape[1]}")
+    q = np.floor(v * float(1 << 20)).astype(np.int64)
+    bits = q @ planes.T >= 0                             # [n, n_planes]
+    n_words = -(-planes.shape[0] // word_bits)
+    bits = np.pad(bits, ((0, 0), (0, n_words * word_bits - bits.shape[1])))
+    weights = np.int64(1) << np.arange(word_bits, dtype=np.int64)
+    return (bits.reshape(len(v), n_words, word_bits) * weights).sum(axis=2)
+
+
 def hamming_signatures(emb: DataFrame, dim: int = 64, n_bits: int = 48,
                        id_col: str = "vec_id",
                        vec_col: str = "embedding") -> DataFrame:
     """(id, sig) rows — ONE packed ``n_bits``-bit sign signature per
     vector (bit p set iff the exact int-grid projection onto md5-parity
-    hyperplane p is >= 0). Same deterministic plane matrix and
-    floor(x*2^20) quantization as :func:`signlsh_buckets`, but packed
-    into a single BIGINT instead of banded buckets: the binary-sketch
-    memory form — 6 bytes/vector at 48 bits, so a 1B-vector corpus is
-    a ~6 GB signature table that broadcasts where the float vectors
-    (256 GB at dim-64 fp32) never could. Hamming distance between
-    signatures is then one XOR + popcount per pair, both engine-native
-    (Spark ``bit_count``/``^``, DuckDB ``bit_count(xor(..))``), which
-    is what makes the whole route oracle-replayable end to end.
+    hyperplane p is >= 0): :func:`hamming_signatures_wide` with a
+    single word. Same deterministic planes and floor(x*2^20)
+    quantization as :func:`signlsh_buckets`, packed into one BIGINT
+    instead of banded buckets: the binary-sketch memory form — 6
+    bytes/vector at 48 bits, so a 1B-vector corpus is a ~6 GB
+    signature table that broadcasts where the float vectors (256 GB at
+    dim-64 fp32) never could. Hamming distance between signatures is
+    then one XOR + popcount per pair, both engine-native (Spark
+    ``bit_count``/``^``, DuckDB ``bit_count(xor(..))``), which is what
+    makes the whole route oracle-replayable end to end.
 
     ``n_bits`` is capped at 62 so ``1 << p`` stays positive in signed
     int64 across both engines. One Arrow matmul pass, no shuffle."""
     if not 1 <= n_bits <= 62:
         raise ValueError(f"hamming_signatures: n_bits {n_bits} not in [1, 62]")
-    coef = signlsh_planes(dim, n_bits)
-    bc = emb.sparkSession.sparkContext.broadcast(coef)
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = bc.value
-        weights = (np.int64(1) << np.arange(n_bits, dtype=np.int64))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if v.shape[1] != planes.shape[1]:
-                raise ValueError(
-                    f"hamming_signatures: dim mismatch {v.shape[1]} != "
-                    f"{planes.shape[1]}")
-            q = np.floor(v * float(1 << 20)).astype(np.int64)
-            bits = (q @ planes.T >= 0).astype(np.int64)  # [n, n_bits]
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "sig": (bits * weights).sum(axis=1),
-            })
-
-    return emb.select(id_col, vec_col).mapInPandas(
-        pack, f"{id_col} long, sig long")
+    return (hamming_signatures_wide(emb, dim, n_bits, word_bits=n_bits,
+                                    id_col=id_col, vec_col=vec_col)
+            .select(id_col, F.col("sigs")[0].alias("sig")))
 
 
 #: uint8 LUT, NOT int64: the gather's output dtype follows the LUT,
@@ -780,25 +761,50 @@ _POPCNT8 = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None],
                          axis=1).sum(axis=1).astype(np.uint8)
 
 
+def _hamming_topm(q_words: np.ndarray, q_ids: np.ndarray,
+                  ids: np.ndarray, words: np.ndarray, m: int,
+                  exclude_self: bool) -> Iterator[tuple]:
+    """The one Hamming top-m selection: for each query row r, yields
+    (r, positions into the corpus, hamming) of its ``m`` nearest corpus
+    rows by (sum-of-word popcounts of the XOR, id). ``ids`` must be
+    sorted ascending. Exact under ties: every row at or below the m-th
+    distance survives the partition before the (hamming, id) lexsort.
+    ``exclude_self`` drops corpus rows whose id equals the query's.
+    The B x n x words XOR tensor is built in query blocks of ~64 MB."""
+    n, w = words.shape
+    blk = max(1, (64 << 20) // max(1, n * w * 8))
+    for s0 in range(0, len(q_ids), blk):
+        x = q_words[s0:s0 + blk, None, :] ^ words[None, :, :]
+        ham = _POPCNT8[x.view(np.uint8).reshape(len(x), n, w * 8)].sum(
+            axis=2, dtype=np.int32)
+        for r in range(len(x)):
+            h, pos = ham[r], np.arange(n)
+            if exclude_self:
+                keep = ids != q_ids[s0 + r]
+                h, pos = h[keep], pos[keep]
+            if len(h) > m:
+                keep = h <= np.partition(h, m - 1)[m - 1]
+                h, pos = h[keep], pos[keep]
+            sel = np.lexsort((ids[pos], h))[:m]
+            yield s0 + r, pos[sel], h[sel]
+
+
 def hamming_signatures_wide(emb: DataFrame, dim: int = 64,
                             n_bits: int = 192, word_bits: int = 48,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding") -> DataFrame:
-    """(id, sigs: array<long>) — :func:`hamming_signatures` for codes
-    wider than one int64: ``n_bits`` sign bits packed into
-    ceil(n_bits / word_bits) words (same md5-parity planes p = 0..
-    n_bits-1, word w = p // word_bits, bit p % word_bits — the layout
-    the oracle SQL regenerates). Long codes are what near-random-NN
-    corpora need: at true-NN cosine ~0.37 (this fixture) the per-bit
-    flip probability is ~0.38 vs 0.5, so separation grows only with
-    sqrt(bits) — 192 bits buys recall 0.93+ where 48 bits sat at 0.2
-    (measured; see vec_hamming_recall). Still 24 bytes/vector — a 10x
-    memory cut against dim-64 fp32."""
+    """(id, sigs: array<long>) — ``n_bits`` sign bits packed into
+    ceil(n_bits / word_bits) words by :func:`sign_words` (md5-parity
+    planes p = 0..n_bits-1, word w = p // word_bits, bit p % word_bits
+    — the layout the oracle SQL regenerates). Long codes are what
+    near-random-NN corpora need: at true-NN cosine ~0.37 (this
+    fixture) the per-bit flip probability is ~0.38 vs 0.5, so
+    separation grows only with sqrt(bits) — 192 bits buys recall 0.93+
+    where 48 bits sat at 0.2 (measured; see vec_hamming_recall). Still
+    24 bytes/vector — a 10x memory cut against dim-64 fp32."""
     if not 1 <= word_bits <= 62:
         raise ValueError(f"hamming_signatures_wide: word_bits {word_bits}")
-    n_words = -(-n_bits // word_bits)
-    coef = signlsh_planes(dim, n_bits)
-    bc = emb.sparkSession.sparkContext.broadcast(coef)
+    bc = emb.sparkSession.sparkContext.broadcast(signlsh_planes(dim, n_bits))
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = bc.value
@@ -806,22 +812,9 @@ def hamming_signatures_wide(emb: DataFrame, dim: int = 64,
             if not len(pdf):
                 continue
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if v.shape[1] != planes.shape[1]:
-                raise ValueError(
-                    f"hamming_signatures_wide: dim mismatch {v.shape[1]} "
-                    f"!= {planes.shape[1]}")
-            q = np.floor(v * float(1 << 20)).astype(np.int64)
-            bits = (q @ planes.T >= 0).astype(np.int64)  # [n, n_bits]
-            words = []
-            for w in range(n_words):
-                chunk = bits[:, w * word_bits:(w + 1) * word_bits]
-                weights = (np.int64(1)
-                           << np.arange(chunk.shape[1], dtype=np.int64))
-                words.append((chunk * weights).sum(axis=1))
-            sig_mat = np.stack(words, axis=1)  # [n, n_words]
             yield pd.DataFrame({
                 id_col: pdf[id_col].to_numpy(),
-                "sigs": list(sig_mat),
+                "sigs": list(sign_words(v, planes, word_bits)),
             })
 
     return emb.select(id_col, vec_col).mapInPandas(
@@ -855,7 +848,8 @@ def hamming_topk_scan(emb: DataFrame, n_bits: int = 192,
     ``queries`` (default: the corpus itself — the registered all-pairs
     face) restricts the SCAN side to a query batch: the serving shape,
     where per-query cost is linear in the corpus and the broadcast is
-    paid once per corpus, not per batch.
+    paid once per corpus, not per batch. Query vectors must have the
+    corpus dimension (a mismatch raises "dim mismatch").
 
     ``exclude_self`` (default True) drops any corpus row whose id
     EQUALS the query's id — correct when query ids live in the corpus
@@ -885,77 +879,42 @@ def hamming_topk_scan(emb: DataFrame, n_bits: int = 192,
     ids_c = pdf[id_col].to_numpy()[order]
     v_raw = np.array(pdf[vec_col].tolist(), dtype=np.float64)[order]
     planes = signlsh_planes(v_raw.shape[1], n_bits)
-    q_int = np.floor(v_raw * float(1 << 20)).astype(np.int64)
-    bits = (q_int @ planes.T >= 0).astype(np.int64)
-    words = []
-    for w in range(n_words):
-        chunk = bits[:, w * word_bits:(w + 1) * word_bits]
-        weights = (np.int64(1) << np.arange(chunk.shape[1],
-                                            dtype=np.int64))
-        words.append((chunk * weights).sum(axis=1))
-    mat = np.stack(words, axis=1)
+    mat = sign_words(v_raw, planes, word_bits)
     norms = np.linalg.norm(v_raw, axis=1)
     bc = spark.sparkContext.broadcast(
         (ids_c, mat, v_raw, norms, planes))
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_cc, mat_c, v_c, norms_c, pl = bc.value
-        nn, ww = mat_c.shape
-        blk = max(1, (64 << 20) // max(1, nn * ww * 8))
         for b in batches:
             if not len(b):
                 continue
             q_ids = b[id_col].to_numpy()
             vq = np.array(b[vec_col].tolist(), dtype=np.float64)
-            qi_int = np.floor(vq * float(1 << 20)).astype(np.int64)
-            qbits = (qi_int @ pl.T >= 0).astype(np.int64)
-            qwords = []
-            for w in range(ww):
-                chunk = qbits[:, w * word_bits:(w + 1) * word_bits]
-                weights = (np.int64(1)
-                           << np.arange(chunk.shape[1], dtype=np.int64))
-                qwords.append((chunk * weights).sum(axis=1))
-            qmat = np.stack(qwords, axis=1)
+            qmat = sign_words(vq, pl, word_bits)
             qnorm = np.linalg.norm(vq, axis=1)
-            for s0 in range(0, len(b), blk):
-                qi = q_ids[s0:s0 + blk]
-                x = qmat[s0:s0 + blk, None, :] ^ mat_c[None, :, :]
-                ham = _POPCNT8[x.view(np.uint8)
-                               .reshape(len(qi), nn, ww * 8)].sum(
-                    axis=2, dtype=np.int32)
-                out_q, out_n, out_h, out_c = [], [], [], []
-                for r in range(len(qi)):
-                    h, ii = ham[r], ids_cc
-                    pos = np.arange(nn)
-                    if exclude_self:
-                        mask = ii != qi[r]
-                        h, ii, pos = h[mask], ii[mask], pos[mask]
-                    if len(h) > m:
-                        thr = np.partition(h, m - 1)[m - 1]
-                        keep = h <= thr
-                        h, ii, pos = h[keep], ii[keep], pos[keep]
-                    sel = np.lexsort((ii, h))[:m]
-                    cand = pos[sel]
-                    xq = vq[s0 + r]
-                    # (A*x).sum(1), NOT gemv: keep the exact summation
-                    # shape _cosine_residual proved engine-parity for.
-                    num = (v_c[cand] * xq).sum(axis=1)
-                    den = norms_c[cand] * qnorm[s0 + r]
-                    # -2.0 sentinel for zero-norm pairs, same as
-                    # _cosine_residual: both size-routed faces must
-                    # rank degenerate (all-zero) vectors LAST, below
-                    # any real cosine.
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = np.where(den > 0, num / den, -2.0)
-                    out_q.extend([qi[r]] * len(sel))
-                    out_n.extend(ii[sel])
-                    out_h.extend(h[sel])
-                    out_c.extend(cos)
-                yield pd.DataFrame({
-                    id_col: np.array(out_q, dtype=np.int64),
-                    "neighbor_id": np.array(out_n, dtype=np.int64),
-                    "hamming": np.array(out_h, dtype=np.int32),
-                    "cos_raw": np.array(out_c, dtype=np.float64)})
+            out_q, out_n, out_h, out_c = [], [], [], []
+            for r, cand, h in _hamming_topm(qmat, q_ids, ids_cc, mat_c,
+                                            m, exclude_self):
+                # (A*x).sum(1), NOT gemv: keep the exact summation
+                # shape _cosine_residual proved engine-parity for.
+                num = (v_c[cand] * vq[r]).sum(axis=1)
+                den = norms_c[cand] * qnorm[r]
+                # -2.0 sentinel for zero-norm pairs, same as
+                # _cosine_residual: both size-routed faces must
+                # rank degenerate (all-zero) vectors LAST, below
+                # any real cosine.
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = np.where(den > 0, num / den, -2.0)
+                out_q.extend([q_ids[r]] * len(cand))
+                out_n.extend(ids_cc[cand])
+                out_h.extend(h)
+                out_c.extend(cos)
+            yield pd.DataFrame({
+                id_col: np.array(out_q, dtype=np.int64),
+                "neighbor_id": np.array(out_n, dtype=np.int64),
+                "hamming": np.array(out_h, dtype=np.int32),
+                "cos_raw": np.array(out_c, dtype=np.float64)})
 
     q_side = emb if queries is None else queries
     return q_side.select(id_col, vec_col).mapInPandas(
@@ -967,13 +926,13 @@ def hamming_topk_shortlist_wide(sigs: DataFrame, m: int = 64,
                                 id_col: str = "vec_id",
                                 queries: DataFrame | None = None,
                                 exclude_self: bool = True) -> DataFrame:
-    """Multi-word variant of :func:`hamming_topk_shortlist` over an
-    (id, sigs: array<long>) frame: per-query Hamming top-``m`` by
-    (sum-of-word popcounts, neighbor_id), block-vectorized against
-    one broadcast [n, words] int64 matrix. Same exact-threshold tie
-    discipline. When the n x 8 x words signature broadcast does not
-    fit the driver budget it falls back to the relational plan (words
-    explode onto the join key and popcounts sum per pair).
+    """Per-query Hamming top-``m`` over an (id, sigs: array<long>)
+    frame by (sum-of-word popcounts, neighbor_id): the
+    :func:`_hamming_topm` selection against one broadcast [n, words]
+    int64 matrix, ties cut exactly at the m-th distance. When the
+    n x 8 x words signature broadcast does not fit the driver budget
+    it falls back to the relational plan (words explode onto the join
+    key and popcounts sum per pair).
 
     ``queries`` (default: ``sigs`` itself — the all-pairs face)
     restricts the PROBE side to a (id, sigs) batch in BOTH routes:
@@ -1018,42 +977,65 @@ def hamming_topk_shortlist_wide(sigs: DataFrame, m: int = 64,
 
     def shortlist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_c, mat_c = bc.value
-        nn, ww = mat_c.shape
-        # Block size: keep the B x n x w xor tensor under ~64 MB.
-        blk = max(1, (64 << 20) // max(1, nn * ww * 8))
         for b in batches:
             if not len(b):
                 continue
             q_ids = b[id_col].to_numpy()
             q_mat = np.array(b["sigs"].tolist(), dtype=np.int64)
-            for s0 in range(0, len(b), blk):
-                qi = q_ids[s0:s0 + blk]
-                qm = q_mat[s0:s0 + blk]
-                x = qm[:, None, :] ^ mat_c[None, :, :]
-                ham = _POPCNT8[x.view(np.uint8)
-                               .reshape(len(qi), nn, ww * 8)].sum(
-                    axis=2, dtype=np.int32)
-                out_q, out_n, out_h = [], [], []
-                for r in range(len(qi)):
-                    h, ii = ham[r], ids_c
-                    if exclude_self:
-                        mask = ii != qi[r]
-                        h, ii = h[mask], ii[mask]
-                    if len(h) > m:
-                        thr = np.partition(h, m - 1)[m - 1]
-                        keep = h <= thr
-                        h, ii = h[keep], ii[keep]
-                    sel = np.lexsort((ii, h))[:m]
-                    out_q.extend([qi[r]] * len(sel))
-                    out_n.extend(ii[sel])
-                    out_h.extend(h[sel])
-                yield pd.DataFrame({
-                    id_col: np.array(out_q, dtype=np.int64),
-                    "neighbor_id": np.array(out_n, dtype=np.int64),
-                    "hamming": np.array(out_h, dtype=np.int32)})
+            out_q, out_n, out_h = [], [], []
+            for r, pos, h in _hamming_topm(q_mat, q_ids, ids_c, mat_c,
+                                           m, exclude_self):
+                out_q.extend([q_ids[r]] * len(pos))
+                out_n.extend(ids_c[pos])
+                out_h.extend(h)
+            yield pd.DataFrame({
+                id_col: np.array(out_q, dtype=np.int64),
+                "neighbor_id": np.array(out_n, dtype=np.int64),
+                "hamming": np.array(out_h, dtype=np.int32)})
 
     return q_side.select(id_col, "sigs").mapInPandas(
         shortlist, f"{id_col} long, neighbor_id long, hamming int")
+
+
+def chunk_rows(codes: DataFrame, n_chunks: int, chunk_bits: int,
+               code_col: str = "code",
+               keep: Sequence[str] = ()) -> DataFrame:
+    """The one MIH chunk index builder: (*keep, c, chunk_val) rows, one
+    per chunk c in 0..n_chunks-1 of each row's integer code, with
+    chunk_val = (code >> chunk_bits * c) & (2^chunk_bits - 1) — the
+    inverted-index key of every multi-index Hamming plan and of
+    SimHash banding. ``keep`` names the columns carried through (ids,
+    alignment keys, the code itself)."""
+    mask = (1 << chunk_bits) - 1
+    return (codes.select(*keep, F.explode(F.array(*[
+        F.struct(F.lit(c).alias("c"),
+                 F.shiftright(code_col, chunk_bits * c)
+                 .bitwiseAND(F.lit(mask)).alias("chunk_val"))
+        for c in range(n_chunks)])).alias("ch"))
+        .select(*keep, "ch.c", "ch.chunk_val"))
+
+
+def _mih_candidates(idx: DataFrame, id_col: str,
+                    probe_ids: DataFrame | None,
+                    align: Sequence[str] = ()) -> DataFrame:
+    """Distinct (id_a, id_b, *align) candidate pairs of an
+    (id, *align, c, chunk_val) chunk index — pairs sharing a chunk
+    value at the same chunk (and alignment keys). Without ``probe_ids``
+    the self-join keeps id_a < id_b; with it, the batch ids it lists
+    probe the rest of the index only (id_a = batch id, id_b = corpus
+    id), so corpus-corpus pairs never form."""
+    join_keys = [*align, "c", "chunk_val"]
+    if probe_ids is None:
+        probe = idx.select(F.col(id_col).alias("id_b"), *join_keys)
+        pairs = (idx.join(probe, join_keys)
+                 .filter(F.col(id_col) < F.col("id_b")))
+    else:
+        batch_ids = F.broadcast(probe_ids.select(id_col))
+        corpus = (idx.join(batch_ids, id_col, "left_anti")
+                  .select(F.col(id_col).alias("id_b"), *join_keys))
+        pairs = idx.join(batch_ids, id_col).join(corpus, join_keys)
+    return (pairs.select(F.col(id_col).alias("id_a"), "id_b", *align)
+            .distinct())
 
 
 def mih_radius_pairs_codes(codes: DataFrame, n_chunks: int,
@@ -1065,9 +1047,8 @@ def mih_radius_pairs_codes(codes: DataFrame, n_chunks: int,
                            ) -> DataFrame:
     """Multi-index Hamming radius search over PRE-COMPUTED integer
     codes (an (id, code int64) frame — perceptual image hashes,
-    simhashes, any <= 62-bit binary sketch), the code-level core of
-    the embedding-facing ``_mih_radius_pairs`` plan: the code splits
-    into ``n_chunks`` exact-match ``chunk_bits``-bit chunks; by
+    simhashes, sign signatures, any <= 62-bit binary sketch): the code
+    splits into ``n_chunks`` exact-match ``chunk_bits``-bit chunks; by
     pigeonhole a pair within Hamming ``radius <= n_chunks - 1`` cannot
     differ in every chunk, so the (chunk_idx, chunk_value)
     inverted-index join is a PROVABLY COMPLETE candidate generator —
@@ -1101,35 +1082,13 @@ def mih_radius_pairs_codes(codes: DataFrame, n_chunks: int,
         raise ValueError("codes wider than 62 bits need the "
                          "array-of-words plan (hamming_signatures_wide)")
     align = list(align_cols)
-    mask = (1 << chunk_bits) - 1
-    idx = codes.select(
-        id_col, *align,
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("c"),
-                     (F.shiftright(code_col, chunk_bits * c)
-                      .bitwiseAND(F.lit(mask))).alias("chunk_val"))
-            for c in range(n_chunks)])).alias("ch"))
-    idx = idx.select(id_col, *align, F.col("ch.c").alias("c"),
-                     F.col("ch.chunk_val").alias("chunk_val"))
+    idx = chunk_rows(codes, n_chunks, chunk_bits, code_col,
+                     keep=[id_col, *align])
+    cand = _mih_candidates(idx, id_col, probe_ids, align)
     ca = codes.select(F.col(id_col).alias("id_a"), *align,
                       F.col(code_col).alias("_ca"))
     cb = codes.select(F.col(id_col).alias("id_b"), *align,
                       F.col(code_col).alias("_cb"))
-    join_keys = align + ["c", "chunk_val"]
-    if probe_ids is None:
-        probe = idx.select(F.col(id_col).alias("id_b"), *join_keys)
-        cand = (idx.join(probe, join_keys)
-                .filter(F.col(id_col) < F.col("id_b"))
-                .select(F.col(id_col).alias("id_a"), "id_b", *align)
-                .distinct())
-    else:
-        batch = idx.join(F.broadcast(probe_ids.select(id_col)), id_col)
-        corpus = (idx.join(F.broadcast(probe_ids.select(id_col)),
-                           id_col, "left_anti")
-                  .select(F.col(id_col).alias("id_b"), *join_keys))
-        cand = (batch.join(corpus, join_keys)
-                .select(F.col(id_col).alias("id_a"), "id_b", *align)
-                .distinct())
     return (cand.join(ca, ["id_a", *align]).join(cb, ["id_b", *align])
             .withColumn("hamming",
                         F.bit_count(F.col("_ca").bitwiseXOR(F.col("_cb")))
@@ -1162,22 +1121,11 @@ def mih_radius_pairs_codes_wide(codes: DataFrame, radius: int,
             f"(got {n_words})")
     idx = codes.select(id_col,
                        F.posexplode(words_col).alias("c", "chunk_val"))
+    cand = _mih_candidates(idx, id_col, probe_ids)
     ca = codes.select(F.col(id_col).alias("id_a"),
                       F.col(words_col).alias("_wa"))
     cb = codes.select(F.col(id_col).alias("id_b"),
                       F.col(words_col).alias("_wb"))
-    if probe_ids is None:
-        probe = idx.select(F.col(id_col).alias("id_b"), "c", "chunk_val")
-        cand = (idx.join(probe, ["c", "chunk_val"])
-                .filter(F.col(id_col) < F.col("id_b"))
-                .select(F.col(id_col).alias("id_a"), "id_b").distinct())
-    else:
-        batch = idx.join(F.broadcast(probe_ids.select(id_col)), id_col)
-        corpus = (idx.join(F.broadcast(probe_ids.select(id_col)),
-                           id_col, "left_anti")
-                  .select(F.col(id_col).alias("id_b"), "c", "chunk_val"))
-        cand = (batch.join(corpus, ["c", "chunk_val"])
-                .select(F.col(id_col).alias("id_a"), "id_b").distinct())
     ham = F.aggregate(
         F.zip_with("_wa", "_wb",
                    lambda a, b: F.bit_count(a.bitwiseXOR(b))),
@@ -1192,9 +1140,11 @@ def signlsh_buckets(emb: DataFrame, dim: int,
                     bits_per_band: int | None = None,
                     n_bands: int = 12, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> DataFrame:
-    """(id, band, bucket) rows — one integer bucket per band per vector.
-    One Arrow-batched int64 matmul per batch against the broadcast
-    plane matrix; no shuffle, cost n x planes x dim integer MACs.
+    """(id, band, bucket) rows — one integer bucket per band per vector:
+    band b's bucket is :func:`sign_words` word b at word width
+    ``bits_per_band``. One Arrow-batched int64 matmul per batch against
+    the broadcast plane matrix; no shuffle, cost n x planes x dim
+    integer MACs.
 
     ``bits_per_band=None`` (the default) sizes the band keyspace to the
     corpus via :func:`signlsh_adaptive_bits` — callers using fixture
@@ -1206,28 +1156,18 @@ def signlsh_buckets(emb: DataFrame, dim: int,
     DuckDB oracle regenerates identical planes)."""
     if bits_per_band is None:
         bits_per_band = signlsh_adaptive_bits(emb.count())
-    n_planes = bits_per_band * n_bands
-    coef = signlsh_planes(dim, n_planes)
-    bc = emb.sparkSession.sparkContext.broadcast(coef)
+    bc = emb.sparkSession.sparkContext.broadcast(
+        signlsh_planes(dim, bits_per_band * n_bands))
 
     def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = bc.value
-        weights = (1 << np.arange(bits_per_band, dtype=np.int64))
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].to_numpy()
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if v.shape[1] != planes.shape[1]:
-                raise ValueError(
-                    f"signlsh_buckets: dim mismatch {v.shape[1]} != "
-                    f"{planes.shape[1]}")
-            q = np.floor(v * float(1 << 20)).astype(np.int64)
-            bits = (q @ planes.T >= 0).astype(np.int64)  # [n, planes]
-            buckets = (bits.reshape(len(pdf), n_bands, bits_per_band)
-                       * weights).sum(axis=2)            # [n, bands]
+            buckets = sign_words(v, planes, bits_per_band)  # [n, bands]
             yield pd.DataFrame({
-                id_col: np.repeat(ids, n_bands),
+                id_col: np.repeat(pdf[id_col].to_numpy(), n_bands),
                 "band": np.tile(np.arange(n_bands, dtype=np.int32),
                                 len(pdf)),
                 "bucket": buckets.reshape(-1),

@@ -200,38 +200,21 @@ def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
 
 def knn_blocked(emb: DataFrame, id_col: str = "vec_id",
                 vec_col: str = "embedding", k: int = 1) -> DataFrame:
-    """Exact top-k via broadcast matrix + per-batch numpy matmul."""
+    """Exact top-k via broadcast matrix + per-batch ``_chunked_topk_rows``."""
     spark = emb.sparkSession
     ids, mat = _collect_matrix(emb, id_col, vec_col)
     bc = spark.sparkContext.broadcast((ids, mat))
 
     def topk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cand_ids, cand = bc.value
-        # Stable order: ties in similarity resolve to the smallest id.
-        order = np.lexsort((cand_ids,))
-        cand_ids, cand = cand_ids[order], cand[order]
         for pdf in batches:
-            all_ids = pdf[id_col].to_numpy()
-            all_q = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            all_q /= np.linalg.norm(all_q, axis=1, keepdims=True)
-            out_rows = []
-            for lo, hi in _q_chunks(len(all_ids), len(cand_ids)):
-                q_ids, q = all_ids[lo:hi], all_q[lo:hi]
-                # Grid-before-select, same as _chunked_topk_rows.
-                sims = np.round(q @ cand.T, 6)            # [chunk, n_cand]
-                self_mask = q_ids[:, None] == cand_ids[None, :]
-                sims[self_mask] = -np.inf
-                for r in range(sims.shape[0]):
-                    row = sims[r]
-                    if k == 1:
-                        j = int(row.argmax())             # first max = smallest id
-                        out_rows.append((int(q_ids[r]), int(cand_ids[j]),
-                                         round(float(row[j]), 6)))
-                    else:
-                        out_rows.extend((int(q_ids[r]), int(cand_ids[j]),
-                                         round(float(row[j]), 6))
-                                        for j in _topk_idx(row, cand_ids, k))
-            yield pd.DataFrame(out_rows,
+            if not len(pdf):
+                continue
+            q_ids = pdf[id_col].to_numpy()
+            q = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            q /= np.linalg.norm(q, axis=1, keepdims=True)
+            rows = _chunked_topk_rows(q_ids, q, cand_ids, cand, k)
+            yield pd.DataFrame(rows,
                                columns=["vec_id", "neighbor_id", "cos_sim"])
 
     return emb.select(id_col, vec_col).mapInPandas(topk_batches, KNN_SCHEMA)

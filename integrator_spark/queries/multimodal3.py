@@ -351,19 +351,12 @@ def _offset_radius_frame_pairs(codes: DataFrame,
     stays the bucket key; the offset bound is a post-join filter on
     the bucket, so cost still tracks chunk collisions x (2*max_off+1),
     never corpus^2). Output: (id_a, fa, id_b, fb, hamming) exact."""
-    mask = (1 << _CHUNK_BITS) - 1
-    idx = codes.select(
-        "doc_id", "frame_idx",
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("c"),
-                     (F.shiftright("code", _CHUNK_BITS * c)
-                      .bitwiseAND(F.lit(mask))).alias("v"))
-            for c in range(_N_CHUNKS)])).alias("ch"))
-    idx = idx.select("doc_id", "frame_idx",
-                     F.col("ch.c").alias("c"), F.col("ch.v").alias("v"))
+    from ..operators.dedup import chunk_rows
+    idx = chunk_rows(codes, _N_CHUNKS, _CHUNK_BITS,
+                     keep=["doc_id", "frame_idx"])
     b = idx.select(F.col("doc_id").alias("id_b"),
-                   F.col("frame_idx").alias("fb"), "c", "v")
-    cand = (idx.join(b, ["c", "v"])
+                   F.col("frame_idx").alias("fb"), "c", "chunk_val")
+    cand = (idx.join(b, ["c", "chunk_val"])
             .filter((F.col("doc_id") < F.col("id_b"))
                     & (F.col("fb") - F.col("frame_idx"))
                     .between(-max_off, max_off))

@@ -44,7 +44,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..operators.dedup import _cosine_residual, hamming_signatures
+from ..operators.dedup import (_cosine_residual, chunk_rows,
+                               hamming_signatures, hamming_signatures_wide,
+                               mih_radius_pairs_codes,
+                               mih_radius_pairs_codes_wide)
 from ..registry import register
 
 _N_BITS = 48          # MIH radius-search code width (single int64)
@@ -237,8 +240,7 @@ def vec_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrades to the relational word-join + window plan; float vectors
     are only ever fetched for the m-row shortlist. The indexed face
     is ``vec_hamming_mih`` below."""
-    from ..operators.dedup import (hamming_signatures_wide,
-                                   hamming_topk_scan,
+    from ..operators.dedup import (hamming_topk_scan,
                                    hamming_topk_shortlist_wide)
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -303,8 +305,7 @@ def vec_hamming_topk_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates shrink to |batch| x n and only the corpus side of the
     join stays corpus-sized (the regime where the MIH index is the
     answer)."""
-    from ..operators.dedup import (hamming_signatures_wide,
-                                   hamming_topk_scan,
+    from ..operators.dedup import (hamming_topk_scan,
                                    hamming_topk_shortlist_wide)
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -353,19 +354,20 @@ def _mih_radius_pairs(e: DataFrame, n_chunks: int, chunk_bits: int,
                       radius: int) -> DataFrame:
     """Shared MIH radius-search plan over an embeddings frame (the
     vec_hamming_mih pipeline, parameterized by the chunk dial):
-    (n_chunks * chunk_bits)-bit signatures -> (chunk, value) inverted
-    index -> chunk-equality candidate join -> exact popcount radius
-    filter -> exact-cosine attach. EXACT at any dial with
-    radius <= n_chunks - 1 (pigeonhole); the dial only moves the
-    candidate volume. Output: undirected (vec_id < neighbor_id) pairs
-    with exact Hamming distance and raw-vector cosine.
+    (n_chunks * chunk_bits)-bit sign signatures ->
+    ``mih_radius_pairs_codes`` (chunk index, chunk-equality candidate
+    join, exact popcount radius filter) -> exact-cosine attach. EXACT
+    at any dial with radius <= n_chunks - 1 (pigeonhole); the dial only
+    moves the candidate volume. Output: undirected
+    (vec_id < neighbor_id) pairs with exact Hamming distance and
+    raw-vector cosine.
 
     Codes wider than one int64 (the production dials past n ~ 200k:
     8 chunks x ceil(log2(n/32)) bits) pack EACH CHUNK AS ITS OWN
     SIGNATURE WORD (hamming_signatures_wide with word_bits =
-    chunk_bits), so the inverted index is a posexplode and the exact
-    distance a zip_with popcount sum — same join shape, no type
-    ceiling."""
+    chunk_bits) and run ``mih_radius_pairs_codes_wide`` — same join
+    shape, no type ceiling. The radius is checked before any
+    signature is built."""
     if radius > n_chunks - 1:
         raise ValueError(
             f"_mih_radius_pairs: radius {radius} needs >= {radius + 1} "
@@ -374,43 +376,15 @@ def _mih_radius_pairs(e: DataFrame, n_chunks: int, chunk_bits: int,
     total_bits = n_chunks * chunk_bits
     if total_bits <= 62:
         sig = hamming_signatures(e, dim=64, n_bits=total_bits)
-        idx = sig.select(
-            "vec_id",
-            F.explode(F.array(*[
-                F.struct(F.lit(c).alias("c"),
-                         (F.shiftright("sig", chunk_bits * c)
-                          .bitwiseAND(F.lit(2 ** chunk_bits - 1)))
-                         .alias("chunk_val"))
-                for c in range(n_chunks)])).alias("ch"))
-        idx = idx.select("vec_id", F.col("ch.c").alias("c"),
-                         F.col("ch.chunk_val").alias("chunk_val"))
-        sa = sig.select("vec_id", F.col("sig").alias("_sa"))
-        sb = sig.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("sig").alias("_sb"))
-        ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
+        pairs = mih_radius_pairs_codes(sig, n_chunks, chunk_bits, radius,
+                                       id_col="vec_id", code_col="sig")
     else:
-        from ..operators.dedup import hamming_signatures_wide
         sig = hamming_signatures_wide(e, dim=64, n_bits=total_bits,
                                       word_bits=chunk_bits)
-        idx = sig.select("vec_id",
-                         F.posexplode("sigs").alias("c", "chunk_val"))
-        sa = sig.select("vec_id", F.col("sigs").alias("_sa"))
-        sb = sig.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("sigs").alias("_sb"))
-        ham = F.aggregate(
-            F.zip_with("_sa", "_sb",
-                       lambda a, b: F.bit_count(a.bitwiseXOR(b))),
-            F.lit(0), lambda acc, x: acc + x)
-    probe = idx.select(F.col("vec_id").alias("neighbor_id"), "c",
-                       "chunk_val")
-    cand = (idx.join(probe, ["c", "chunk_val"])
-            .filter(F.col("vec_id") < F.col("neighbor_id"))
-            .select("vec_id", "neighbor_id").distinct())
-    within = (cand.join(F.broadcast(sa), "vec_id")
-              .join(F.broadcast(sb), "neighbor_id")
-              .withColumn("hamming", ham.cast("int"))
-              .filter(F.col("hamming") <= radius)
-              .select("vec_id", "neighbor_id", "hamming"))
+        pairs = mih_radius_pairs_codes_wide(sig, radius, id_col="vec_id",
+                                            words_col="sigs")
+    within = pairs.select(F.col("id_a").alias("vec_id"),
+                          F.col("id_b").alias("neighbor_id"), "hamming")
     scored = _cosine_residual(
         within.select("vec_id", "neighbor_id"), e, e, -2.0,
         "vec_id", "neighbor_id", "vec_id", "embedding")
@@ -509,16 +483,8 @@ def vec_hamming_incremental(spark: SparkSession,
     e = load_table(spark, sf_dir, "embeddings")
     is_new = F.col("vec_id") % _INGEST_EVERY == _INGEST_EVERY - 1
     sig = hamming_signatures(e, dim=64, n_bits=_N_BITS)
-    idx = sig.select(
-        "vec_id", "sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("c"),
-                     (F.shiftright("sig", _CHUNK_BITS * c)
-                      .bitwiseAND(F.lit(2 ** _CHUNK_BITS - 1)))
-                     .alias("chunk_val"))
-            for c in range(_N_CHUNKS)])).alias("ch"))
-    idx = idx.select("vec_id", "sig", F.col("ch.c").alias("c"),
-                     F.col("ch.chunk_val").alias("chunk_val"))
+    idx = chunk_rows(sig, _N_CHUNKS, _CHUNK_BITS, code_col="sig",
+                     keep=["vec_id", "sig"])
     new_side = (idx.filter(is_new)
                 .select(F.col("vec_id").alias("new_id"),
                         F.col("sig").alias("_sa"), "c", "chunk_val"))
@@ -596,16 +562,8 @@ def vec_hamming_serve_deletes(spark: SparkSession,
     tomb = (e.filter(F.col("vec_id") % _DELETE_MOD == _DELETE_REM)
             .select("vec_id"))
     sig = hamming_signatures(e, dim=64, n_bits=_N_BITS)
-    idx = sig.select(
-        "vec_id", "sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("c"),
-                     (F.shiftright("sig", _CHUNK_BITS * c)
-                      .bitwiseAND(F.lit(2 ** _CHUNK_BITS - 1)))
-                     .alias("chunk_val"))
-            for c in range(_N_CHUNKS)])).alias("ch"))
-    idx = idx.select("vec_id", "sig", F.col("ch.c").alias("c"),
-                     F.col("ch.chunk_val").alias("chunk_val"))
+    idx = chunk_rows(sig, _N_CHUNKS, _CHUNK_BITS, code_col="sig",
+                     keep=["vec_id", "sig"])
     live = idx.join(F.broadcast(tomb), "vec_id", "left_anti")
     queries = (live.filter(F.col("vec_id") % 4 == 0)
                .select(F.col("vec_id").alias("_qid"),

@@ -1871,6 +1871,7 @@ def _imgdedup_process_batch(batch_df: DataFrame, batch_id: int,
     overwrite. Probes read batch ids STRICTLY BELOW this one
     (_semdedup_prior_batches, shared protocol), so crash replay is
     idempotent — pinned by test_imgdedup_batch_replay_is_idempotent."""
+    from ..operators.dedup import chunk_rows
     from ..queries.multimodal2 import (_CHUNK_BITS, _N_CHUNKS,
                                        _dhash_images, _synth_images)
 
@@ -1881,17 +1882,8 @@ def _imgdedup_process_batch(batch_df: DataFrame, batch_id: int,
     codes = bmps.mapInPandas(
         _dhash_images, "doc_id long, code long").localCheckpoint(
         eager=True)
-    mask = (1 << _CHUNK_BITS) - 1
-    chunks = codes.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("c"),
-                     (F.shiftright("code", _CHUNK_BITS * c)
-                      .bitwiseAND(F.lit(mask))).alias("chunk_val"))
-            for c in range(_N_CHUNKS)])).alias("ch"))
-    chunks = chunks.select("doc_id", F.col("ch.c").alias("c"),
-                           F.col("ch.chunk_val").alias("chunk_val")) \
-        .localCheckpoint(eager=True)
+    chunks = chunk_rows(codes, _N_CHUNKS, _CHUNK_BITS,
+                        keep=["doc_id"]).localCheckpoint(eager=True)
     ham = F.bit_count(F.col("_ca").bitwiseXOR(F.col("_cb"))).cast("int")
     ca = codes.select(F.col("doc_id").alias("id_a"),
                       F.col("code").alias("_ca"))

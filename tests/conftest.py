@@ -59,13 +59,11 @@ SLOW_NODE_PATTERNS = (
     "tests/test_property.py::test_minhash_det_matches_python_reference",
     "tests/test_property.py::test_grid_long_sum_equals_decimal_sum",
     "tests/test_property.py::test_kcore_peel_matches_python_reference",
-    "tests/test_property.py::test_signlsh_buckets_match_python_reference",
     "tests/test_foundations.py::test_bpe_train_deep_prefix_stable_and_deterministic",
     "tests/test_operators.py::test_label_propagation_separates_bridged_cliques",
     "tests/test_operators.py::test_graph_delete_consolidation_semantics",
     "tests/test_operators.py::test_pca_power_direction_matches_numpy",
     "tests/test_operators.py::test_ann_lsh_adaptive_dial_recall_and_determinism",
-    "tests/test_operators.py::test_knn_blocked_tie_break_matches_bruteforce",
     "tests/test_operators.py::test_ivf_tombstone_promotes_runner_up",
     "tests/test_analytics.py::test_ml_silhouette_range_reference_and_separation_response",
     # Second shave (measured 14m28s gated — still past the driver's

@@ -276,6 +276,30 @@ def test_knn_blocked_tie_break_matches_bruteforce(spark):
             key(knn_bruteforce(emb, k=k).collect())
 
 
+def test_knn_exact_zero_vector_same_rows_on_both_routes(spark, monkeypatch):
+    # An all-zero vector has no cosine: neither route may return it as
+    # a neighbour (with a NaN score) or give it neighbours of its own.
+    # The broadcast route (default budget) and the two-sided route
+    # (zero budget) must return the same rows.
+    from integrator_spark.operators import budget
+    from integrator_spark.operators.knn import knn_exact
+
+    data = [(i, [float((i * 5 + j * 3) % 7) + 1.0 for j in range(6)])
+            for i in range(8)]
+    data.append((8, [0.0] * 6))
+    emb = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+    key = lambda df: sorted(  # noqa: E731
+        (r.vec_id, r.neighbor_id, r.cos_sim) for r in df.collect())
+    for k in (1, 3):
+        default = key(knn_exact(emb, k=k))
+        with monkeypatch.context() as mp:
+            mp.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+            forced = key(knn_exact(emb, k=k))
+        assert default == forced, k
+        assert len(default) == 8 * k
+        assert all(8 not in (q, n) for q, n, _ in default)
+
+
 def test_pipeline_validates_and_publishes(spark, tmp_path):
     from integrator_spark.pipeline import IntegrationPipeline
     df = spark.createDataFrame(
@@ -2249,6 +2273,23 @@ def test_hamming_fallback_plan_equals_fused_kernel(spark, monkeypatch):
                                      "embedding").collect()}
     for r in one:
         assert r["c"] == ref[(r["vec_id"], r["neighbor_id"])]
+
+
+def test_hamming_scan_rejects_query_dim_mismatch(spark):
+    """A query frame whose vectors do not have the corpus dimension
+    fails with a "dim mismatch" error from the sign-packing kernel,
+    not with numpy's matmul shape error."""
+    from integrator_spark.operators.dedup import hamming_topk_scan
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(8)]) for i in range(6)],
+        "vec_id long, embedding array<float>")
+    queries = spark.createDataFrame(
+        [(100, [1.0] * 4)], "vec_id long, embedding array<float>")
+    scan = hamming_topk_scan(corpus, n_bits=16, word_bits=8, m=2,
+                             queries=queries)
+    with pytest.raises(Exception, match="dim mismatch"):
+        scan.collect()
 
 
 def test_hamming_scan_budget_counts_float_payload(spark, monkeypatch):

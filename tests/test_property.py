@@ -289,15 +289,16 @@ vec_corpus = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(vecs=vec_corpus)
 def test_signlsh_buckets_match_python_reference(vecs, spark):
-    # The sign-LSH bucket pipeline (md5-parity planes, floor(x*2^20)
-    # int64 quantization, >= 0 sign bits, little-endian band packing)
-    # must agree with a direct scalar Python reference on fuzzed
+    # The sign-LSH bucket pipeline and the wide Hamming signatures
+    # (md5-parity planes, floor(x*2^20) int64 quantization, >= 0 sign
+    # bits, little-endian word packing) must agree with a direct scalar Python reference on fuzzed
     # vectors — including exact zeros (sign convention: 0 -> bit 1)
     # and float32-boundary values. This is the engine-independence
     # property the DuckDB oracle checks at fixture scale.
     import hashlib
 
-    from integrator_spark.operators.dedup import signlsh_buckets
+    from integrator_spark.operators.dedup import (hamming_signatures_wide,
+                                                  signlsh_buckets)
 
     DIM, BITS, BANDS = 8, 3, 4
 
@@ -331,6 +332,13 @@ def test_signlsh_buckets_match_python_reference(vecs, spark):
             for i, v in enumerate(vecs)
             for band, val in ref_buckets(v)}
     assert got == want
+    # Signature words at word width BITS are the same packing: word w
+    # of a BITS*BANDS-bit signature equals band w's bucket.
+    words = {(r.vec_id, w): s
+             for r in hamming_signatures_wide(
+                 emb, DIM, BITS * BANDS, word_bits=BITS).collect()
+             for w, s in enumerate(r.sigs)}
+    assert words == want
 
 
 @given(edges=st.lists(

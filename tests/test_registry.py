@@ -103,3 +103,34 @@ def test_cited_scripts_exist():
                if not os.path.isfile(os.path.join(repo, "scripts",
                                                   f"{name}.py"))}
     assert not missing, f"cited scripts that do not exist: {missing}"
+
+
+def test_count_code_lines_skips_docstrings_comments_and_blanks(tmp_path):
+    """scripts/count_code_lines.py counts code only: docstrings,
+    comments and blank lines do not count; a multi-line string that
+    is not a docstring does."""
+    import importlib.util
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "count_code_lines", os.path.join(repo, "scripts",
+                                         "count_code_lines.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    src = tmp_path / "sample.py"
+    src.write_text(
+        '"""Module docstring,\n'
+        'two lines."""\n'
+        "\n"
+        "# a comment\n"
+        "import os  # trailing comment\n"
+        "\n"
+        "\n"
+        "def f(x):\n"
+        '    """Function docstring."""\n'
+        "    sql = \"\"\"SELECT 1\n"
+        "FROM t\"\"\"\n"
+        "    return x + 1\n")
+    assert mod.count_code_lines(src.read_text()) == 5
+    assert mod.main([str(src)]) == 0
