@@ -142,10 +142,9 @@ def register_views(spark: SparkSession, sf_dir: str,
     fixture name is NOT detectable this way (the name still exists,
     pointing at other data) — the engine's contract is that fixture
     view names belong to this registry (query-private views use '_'
-    prefixes); code that intentionally replaces one must call
-    ``invalidate_views`` first. Single-threaded per session by design,
-    like the SparkSession catalog API itself: concurrent builders
-    should derive per-thread sessions via ``spark.newSession()``."""
+    prefixes). Single-threaded per session by design, like the
+    SparkSession catalog API itself: concurrent builders should derive
+    per-thread sessions via ``spark.newSession()``."""
     try:
         cache = spark._integrator_view_dirs
     except AttributeError:
@@ -161,20 +160,6 @@ def register_views(spark: SparkSession, sf_dir: str,
             dfs[name].createOrReplaceTempView(name)
             cache[name] = sf_dir
     return dfs
-
-
-def invalidate_views(spark: SparkSession,
-                     tables: list[str] | None = None) -> None:
-    """Drop the registry's memo for the given fixture view names (all
-    by default) so the next register_views re-binds them. Call this
-    before intentionally re-pointing a fixture-named temp view at other
-    data — the memo cannot detect a same-name replacement on its own
-    (see register_views)."""
-    cache = getattr(spark, "_integrator_view_dirs", None)
-    if cache is None:
-        return
-    for name in (tables or list(cache)):
-        cache.pop(name, None)
 
 
 def derived_dir(sf_dir: str, *parts: str) -> str:

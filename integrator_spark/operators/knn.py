@@ -149,7 +149,9 @@ def knn_bruteforce(emb: DataFrame, id_col: str = "vec_id",
     """O(n²) crossJoin cosine top-k (deterministic tie-break on id).
 
     Norms are computed once per row pre-join; the O(n²) pair expression
-    is a single dot-product fold.
+    is a single dot-product fold. An all-zero vector has no cosine
+    (``try_divide`` gives NULL, and NULL pairs are dropped), so it is
+    neither a query nor a neighbour — as on the blocked routes.
     """
     a = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_va"),
                    _l2_expr(F.col(vec_col)).alias("_na"))
@@ -161,9 +163,11 @@ def knn_bruteforce(emb: DataFrame, id_col: str = "vec_id",
              .select("vec_id", "neighbor_id",
                      # Selection on the 6-dp output grid — matches the
                      # blocked kernels' grid-before-select tie-break.
-                     F.round(_dot_expr(F.col("_va"), F.col("_vb"))
-                             / (F.col("_na") * F.col("_nb")), 6)
-                     .alias("_cos")))
+                     F.round(F.try_divide(_dot_expr(F.col("_va"),
+                                                    F.col("_vb")),
+                                          F.col("_na") * F.col("_nb")), 6)
+                     .alias("_cos"))
+             .filter(F.col("_cos").isNotNull()))
     w = Window.partitionBy("vec_id").orderBy(F.col("_cos").desc(),
                                              F.col("neighbor_id"))
     return (pairs.withColumn("_rn", F.row_number().over(w))

@@ -26,7 +26,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Python workers (the data-source reader behind stream_custom_source)
+# get their import path from PYTHONPATH, not from this sys.path; set it
+# before the JVM starts so they find the package from any directory.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

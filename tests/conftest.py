@@ -75,10 +75,8 @@ SLOW_NODE_PATTERNS = (
     "tests/test_operators.py::test_kcore_converged_matches_python_full_peel",
     "tests/test_operators.py::test_pagerank_converged_grid_stationary",
     "tests/test_operators.py::test_pagerank_matches_numpy_power_iteration",
-    "tests/test_operators.py::test_graph_ann_search_fused_matches_relational_rounds",
     "tests/test_operators.py::test_graph_serve_deletes_promotes_and_recalls",
     "tests/test_operators.py::test_ivfpq_hot_bucket_split_is_result_invariant",
-    "tests/test_operators.py::test_graph_ann_search_nonmember_ids_agree_across_routes",
     "tests/test_analytics.py::test_survival_is_monotone_nonincreasing",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_ivfpq_det]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_pca_power]",
