@@ -103,7 +103,7 @@ def bounded_sample_matrix(emb: DataFrame, sample_rows: int,
     ``n_rows`` (a count the caller already has) skips the count pass."""
     n = emb.count() if n_rows is None else n_rows
     if n == 0:
-        raise ValueError("train_centroids: empty input DataFrame")
+        raise ValueError("bounded_sample_matrix: empty input DataFrame")
     every = max(1, -(-n // sample_rows))          # ceil: keeps <= sample_rows
     sample = emb.filter(F.col(id_col) % every == 0).select(id_col, vec_col)
     _ids, mat = _collect_matrix(sample, id_col, vec_col)  # normalized rows

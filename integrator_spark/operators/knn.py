@@ -177,6 +177,7 @@ def knn_bruteforce(emb: DataFrame, id_col: str = "vec_id",
 
 def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
     """Materialize (ids, L2-normalized float64 matrix) for broadcast.
+    All-zero vectors are left out (id and row).
 
     Arrow-batched: ``toArrow()`` streams executor-serialized Arrow
     record batches to the driver (no row pickling, no pandas object
@@ -198,7 +199,14 @@ def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
         raise ValueError("ragged embedding column")
     flat = vecs.flatten().to_numpy(zero_copy_only=False)
     mat = flat.astype(np.float64).reshape(len(ids), dim)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+    # An all-zero vector has no cosine: drop its id and row, as the
+    # relational routes drop its NULL cosines, instead of normalizing
+    # it into a NaN row that every scan would carry.
+    keep = nrm[:, 0] > 0
+    if not keep.all():
+        ids, mat, nrm = ids[keep], mat[keep], nrm[keep]
+    mat /= nrm
     return ids, mat
 
 

@@ -51,7 +51,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import budget
-from .knn import _collect_matrix, _dot_expr
+from .ivf import bounded_sample_matrix
+from .knn import _dot_expr
 
 
 def _train_codebook(mat: np.ndarray, m: int, ksub: int, iters: int,
@@ -85,20 +86,6 @@ def _train_codebook(mat: np.ndarray, m: int, ksub: int, iters: int,
                     n_empty += 1
         codebook[j, :k] = cent
     return codebook
-
-
-def _bounded_sample_matrix(emb: DataFrame, sample_rows: int,
-                           id_col: str, vec_col: str) -> np.ndarray:
-    """Deterministic modulo-on-id sample collected as an L2-normalized
-    float64 matrix — the shared bounded-collect contract of every
-    trainer in the vector family (≤ sample_rows × dim on the driver).
-    Delegates to ivf.bounded_sample_matrix (single definition of the
-    sampling rule — callers fusing several trainers collect it once)."""
-    from .ivf import bounded_sample_matrix
-    try:
-        return bounded_sample_matrix(emb, sample_rows, id_col, vec_col)
-    except ValueError:
-        raise ValueError("pq_train: empty input DataFrame") from None
 
 
 #: ADC scores are quantized to this grid (2^-40 ≈ 9e-13) before ANY
@@ -164,7 +151,7 @@ def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16,
     ``sample_mat`` (a precollected bounded sample) skips the count +
     collect passes — see train_centroids for the fusion contract."""
     mat = (sample_mat if sample_mat is not None
-           else _bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
+           else bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
     return _train_codebook(mat, m, ksub, iters, seed)
 
 
@@ -520,7 +507,7 @@ def ivfpq_train(emb: DataFrame, centroids: np.ndarray, m: int = 8,
     to train the coarse centroids, so passing it here removes two full
     corpus passes per index build."""
     mat = (sample_mat if sample_mat is not None
-           else _bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
+           else bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
     assign = (mat @ centroids.T).argmax(axis=1)
     return _train_codebook(mat - centroids[assign], m, ksub, iters, seed)
 

@@ -1127,8 +1127,8 @@ def dedup_semantic_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationship dedup_minhash_det has to dedup_minhash: the float
     spark.ml k-means stays registered as the production face
     (adaptive cell count), while this twin runs the integer-grid
-    md5-seeded Lloyd fit (queries/scale.py::_ivf_det_fit, shared with
-    vec_ann_ivf_det) so DuckDB replays the ENTIRE pipeline — all 4
+    md5-seeded Lloyd fit (operators/det_ann.py::_ivf_det_fit_ranked,
+    shared with vec_ann_ivf_det) so DuckDB replays the ENTIRE pipeline — all 4
     Lloyd rounds, the 3-nearest-cell multi-assignment, the same-cell
     candidate join, and the exact-cosine >= 0.45 residual (dials
     k=8/assign=3: the 0.45-threshold boundary pairs this isotropic
@@ -1142,7 +1142,7 @@ def dedup_semantic_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-assignment recovers boundary pairs. Static k=8 pinned for
     the oracle — the adaptive-cell dial lives on the float twin, same
     split as vec_ann_lsh (bits=3 oracle) vs vec_ann_lsh_adaptive."""
-    from .scale import _ivf_det_fit_ranked
+    from ..operators.det_ann import _ivf_det_fit_ranked
 
     e = load_table(spark, sf_dir, "embeddings")
     if not e.head(1):

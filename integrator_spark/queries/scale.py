@@ -2,6 +2,12 @@
 binary-file ingest, salted aggregation, IVF approximate NN — each the
 pattern that keeps its operator family viable at 100 TB, verified at
 fixture scale.
+
+The deterministic ANN family (vec_ann_ivf_det, vec_ann_ivf_deletes,
+vec_ann_pq_det, vec_ann_ivfpq_det, ml_silhouette) keeps only its
+registered functions and DuckDB oracle builders here; the kernels they
+run (integer-grid quantize, Lloyd fits, ranking, serve, the PQ
+pipeline and the exact rerank) live in ``operators/det_ann.py``.
 """
 
 from __future__ import annotations
@@ -13,7 +19,10 @@ from pyspark.sql import functions as F
 
 from ..functions.num import DEC, dsum, sql_dsum
 from ..io import derived_dir, load_table
-from ..operators import budget
+from ..operators.det_ann import (_centroid_frame, _det_collect_q, _det_fit,
+                                 _det_pq_search, _ivf_det_fit,
+                                 _ivf_det_fit_ranked, _ivf_det_quantize,
+                                 _ivf_det_serve)
 from ..operators.skew import salted_aggregate
 from ..registry import register
 
@@ -322,497 +331,6 @@ ORDER BY vec_id
     return _ivf_det_chain_sql(k, iters) + tail
 
 
-def _ivf_det_quantize(e: DataFrame) -> DataFrame:
-    """The shared floor(x·2²⁰) integer-grid projection (eagerly
-    checkpointed: every fit/serve consumer re-reads it)."""
-    return e.select(
-        "vec_id",
-        F.transform(F.col("embedding").cast("array<double>"),
-                    lambda x: F.floor(x * F.lit(1048576.0)).cast("long"))
-        .alias("q")).localCheckpoint(eager=True)
-
-
-def _det_collect_q(q: DataFrame, dim: int):
-    """Bounded collect of the quantized frame for the driver-side
-    Lloyd kernel (r13: one Arrow collect replaces ~6 driver-synchronized
-    jobs per fit; k-means training at 100 TB samples to a bounded set
-    anyway, and this gate IS that bound): (ids int64[n], mat
-    int64[n×dim]) when n×dim×8 fits the driver budget, else None
-    (callers take the distributed route). One cheap count job (q is
-    checkpointed) gates the Arrow transfer so the over-budget case
-    never ships data."""
-    import numpy as np
-
-    if not budget.fits_driver(q.count() * dim * 8):
-        return None
-    pdf = q.select("vec_id", "q").toPandas()
-    ids = pdf["vec_id"].to_numpy()
-    if len(pdf) == 0:
-        return ids, np.zeros((0, dim), dtype=np.int64)
-    return ids, np.array(pdf["q"].tolist(), dtype=np.int64)
-
-
-def _np_cent_sims(mat, cent: dict[int, list[int]]):
-    """n×k similarity matrix of the det chain — the SAME ops in the
-    same order as _ivf_det_rank / _det_assign_fold_sql: exact int64
-    dots (values ≤2²⁰, dim 64 → |dot| ≤ 2⁴⁶, no overflow), centroid
-    norms via math.sqrt of exact integer squares, one IEEE double
-    division per cell, -inf for zero-norm centroids. Returns
-    (sorted bucket ids, sims float64[n×k])."""
-    import math
-
-    import numpy as np
-
-    buckets = sorted(cent)
-    cmat = np.array([cent[b] for b in buckets], dtype=np.int64)
-    nrm = np.array([math.sqrt(sum(int(v) * int(v) for v in cent[b]))
-                    for b in buckets], dtype=np.float64)
-    dots = mat @ cmat.T
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = dots.astype(np.float64) / nrm[None, :]
-    sims[:, nrm == 0.0] = float("-inf")
-    return buckets, sims
-
-
-def _np_lloyd(ids, mat, k: int, iters: int) -> dict[int, list[int]]:
-    """Driver replay of :func:`_ivf_det_fit_q_dist` — identical seeds
-    (k smallest (md5(str(id)), id)), identical assignment (argmax of
-    dot/nrm, ties → lowest bucket: np.argmax's first-max matches the
-    fold's strict->), identical means (exact int64 sums, Python
-    int/int true division then floor — the same arithmetic the
-    distributed loop does on its collected sums), empty buckets keep
-    the old centroid. Bit-equality with the distributed route is
-    pinned in tests."""
-    import hashlib
-    import math
-
-    import numpy as np
-
-    order = sorted(range(len(ids)),
-                   key=lambda i: (hashlib.md5(str(int(ids[i])).encode())
-                                  .hexdigest(), int(ids[i])))
-    cent = {i: [int(v) for v in mat[order[i]]]
-            for i in range(min(k, len(ids)))}
-    if not cent:
-        # Empty corpus → empty seed set; the distributed loop's rounds
-        # are all no-ops in that case, so return the (empty) dict now.
-        return cent
-    for _ in range(iters):
-        buckets, sims = _np_cent_sims(mat, cent)
-        asg = sims.argmax(axis=1)
-        sums = np.zeros((len(buckets), mat.shape[1]), dtype=np.int64)
-        np.add.at(sums, asg, mat)
-        cnts = np.bincount(asg, minlength=len(buckets))
-        new = {}
-        for bi, b in enumerate(buckets):
-            if cnts[bi]:
-                new[b] = [math.floor(int(s) / int(cnts[bi]))
-                          for s in sums[bi]]
-        cent.update(new)
-    return cent
-
-
-def _np_det_rank_pdf(ids, mat, cent: dict[int, list[int]], max_rn: int):
-    """Driver twin of :func:`_ivf_det_rank` truncated to the top
-    ``max_rn`` buckets per vector: a stable argsort on -sim reproduces
-    the window's (sim DESC, bucket ASC) order exactly (negation is an
-    exact sign flip; stable ties keep the bucket-ascending column
-    order; -inf for zero-norm centroids sorts last). Returns a pandas
-    frame (vec_id, bucket, _rn) — row-identical to the relational
-    ranking filtered to _rn <= max_rn."""
-    import numpy as np
-    import pandas as pd
-
-    if len(ids) == 0 or not cent:
-        # Mirror _ivf_det_rank on empty input: zero ranked rows.
-        return pd.DataFrame({
-            "vec_id": np.array([], dtype=np.int64),
-            "bucket": np.array([], dtype=np.int32),
-            "_rn": np.array([], dtype=np.int32)})
-    buckets, sims = _np_cent_sims(mat, cent)
-    order = np.argsort(-sims, axis=1, kind="stable")[:, :max_rn]
-    n, r = order.shape
-    return pd.DataFrame({
-        "vec_id": np.repeat(np.asarray(ids, dtype=np.int64), r),
-        "bucket": np.asarray(buckets, dtype=np.int32)[order.ravel()],
-        "_rn": np.tile(np.arange(1, r + 1, dtype=np.int32), n),
-    })
-
-
-def _np_codebook_arrays(cent: dict[int, list[int]]):
-    """(codeword matrix int64[ksub×sub_dim], norms float64[ksub]) in
-    bucket order — the literal arrays _det_assign_fold_sql embeds."""
-    import math
-
-    import numpy as np
-
-    buckets = sorted(cent)
-    w = np.array([cent[b] for b in buckets], dtype=np.int64)
-    nrm = np.array([math.sqrt(sum(int(v) * int(v) for v in cent[b]))
-                    for b in buckets], dtype=np.float64)
-    return w, nrm
-
-
-def _np_sub_codes(vecs, w, nrm):
-    """Per-row nearest codeword of one subspace — identical selection
-    to _det_assign_fold_sql / _ivf_det_rank rn=1 (exact int64 dots,
-    dot/nrm IEEE division, -inf for zero norms, first-max argmax ==
-    lowest-bucket tie)."""
-    import numpy as np
-
-    dots = vecs @ w.T
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = dots.astype(np.float64) / nrm[None, :]
-    sims[:, nrm == 0.0] = float("-inf")
-    return sims.argmax(axis=1)
-
-
-def _np_topk_pairs(q_arr, x_arr, v_arr, shortlist: int):
-    """(q, x, v) triplets → the per-q top-``shortlist`` pairs under
-    (v DESC, x ASC) after a max-per-(q,x) reduction — the numpy twin
-    of the relational bst→window chain (row_number ties identical:
-    lexsort is stable and keys are exact copies of the SQL sort keys).
-    Returns a pandas frame (vec_id, neighbor_id)."""
-    import numpy as np
-    import pandas as pd
-
-    # bst: max v per (q, x) — first row of each (q, x) run under
-    # (q, x, -v) ascending.
-    order = np.lexsort((-v_arr, x_arr, q_arr))
-    q_arr, x_arr, v_arr = q_arr[order], x_arr[order], v_arr[order]
-    first = np.ones(len(q_arr), dtype=bool)
-    first[1:] = (q_arr[1:] != q_arr[:-1]) | (x_arr[1:] != x_arr[:-1])
-    q_arr, x_arr, v_arr = q_arr[first], x_arr[first], v_arr[first]
-    # shortlist: rank within q under (v DESC, x ASC).
-    order = np.lexsort((x_arr, -v_arr, q_arr))
-    q_arr, x_arr = q_arr[order], x_arr[order]
-    starts = np.ones(len(q_arr), dtype=bool)
-    starts[1:] = q_arr[1:] != q_arr[:-1]
-    run_start = np.maximum.accumulate(
-        np.where(starts, np.arange(len(q_arr)), 0))
-    rank = np.arange(len(q_arr)) - run_start + 1
-    keep = rank <= shortlist
-    return pd.DataFrame({"vec_id": q_arr[keep],
-                         "neighbor_id": x_arr[keep]})
-
-
-def _np_ivfpq_shortlist(ids, mat, coarse, rcents, n_assign, n_probe,
-                        shortlist, m, sub_dim):
-    """Driver replay of vec_ann_ivfpq_det's compressed-domain scan —
-    codes, reconstruction norms, LUTs, probe-bounded residual-ADC
-    scoring, best-per-pair, top-``shortlist`` — all exact int64 (plus
-    the same one IEEE division per score the relational plan does).
-    Returns the shortlist pairs; the exact-cosine rerank stays in
-    Spark. Route parity with the relational scan is pinned end-to-end
-    in tests."""
-    import numpy as np
-
-    ids = np.asarray(ids, dtype=np.int64)
-    n = len(ids)
-    cbuckets, csims = _np_cent_sims(mat, coarse)
-    corder = np.argsort(-csims, axis=1, kind="stable")
-    cmat = np.array([coarse[b] for b in cbuckets], dtype=np.int64)
-    Ws, Wnrms = zip(*[_np_codebook_arrays(rcents[s]) for s in range(m)])
-    # Per (x, assignment slot): subspace codes + exact reconstruction
-    # norm  Σ_j (cell_j + w_j)².
-    codes = np.zeros((n, n_assign, m), dtype=np.int64)
-    nrm2 = np.zeros((n, n_assign), dtype=np.int64)
-    for a in range(n_assign):
-        cells_a = corder[:, a]
-        rq = mat - cmat[cells_a]
-        recon = np.zeros_like(mat)
-        for s in range(m):
-            cs = _np_sub_codes(rq[:, s * sub_dim:(s + 1) * sub_dim],
-                               Ws[s], Wnrms[s])
-            codes[:, a, s] = cs
-            recon[:, s * sub_dim:(s + 1) * sub_dim] = Ws[s][cs]
-        full = cmat[cells_a] + recon
-        nrm2[:, a] = np.einsum("ij,ij->i", full, full)
-    # Query-side LUTs (n × m × ksub int64 dots) and coarse dots.
-    luts = np.stack([mat[:, s * sub_dim:(s + 1) * sub_dim] @ Ws[s].T
-                     for s in range(m)], axis=1)
-    cdots = mat @ cmat.T
-    # Probe scan, cell by cell: queries probing c × members assigned
-    # to c (any slot), rd = Σ_s lut[q, s, code], v = (rd + cdot)/|x̂|.
-    probe_cells = corder[:, :n_probe]
-    qs_parts, xs_parts, vs_parts = [], [], []
-    for ci in range(len(cbuckets)):
-        q_idx = np.nonzero((probe_cells == ci).any(axis=1))[0]
-        x_idx, x_slot = np.nonzero(corder[:, :n_assign] == ci)
-        if len(q_idx) == 0 or len(x_idx) == 0:
-            continue
-        rd = np.zeros((len(q_idx), len(x_idx)), dtype=np.int64)
-        xc = codes[x_idx, x_slot]                        # nx × m
-        for s in range(m):
-            rd += luts[q_idx][:, s, :][:, xc[:, s]]
-        xn = nrm2[x_idx, x_slot].astype(np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            v = ((rd + cdots[q_idx, ci][:, None]).astype(np.float64)
-                 / np.sqrt(xn)[None, :])
-        v[:, xn == 0.0] = float("-inf")
-        qq = np.repeat(ids[q_idx], len(x_idx))
-        xx = np.tile(ids[x_idx], len(q_idx))
-        keep = qq != xx                                  # q_id <> x_id
-        qs_parts.append(qq[keep])
-        xs_parts.append(xx[keep])
-        vs_parts.append(v.ravel()[keep])
-    if not qs_parts:
-        import pandas as pd
-        return pd.DataFrame({"vec_id": np.array([], dtype=np.int64),
-                             "neighbor_id": np.array([], dtype=np.int64)})
-    return _np_topk_pairs(np.concatenate(qs_parts),
-                          np.concatenate(xs_parts),
-                          np.concatenate(vs_parts), shortlist)
-
-
-def _np_pq_shortlist(ids, mat, cents, shortlist, m, sub_dim):
-    """Driver replay of vec_ann_pq_det's exhaustive compressed-domain
-    ADC scan (codes, LUT dots, score/|x̂| ranking) → top-``shortlist``
-    pairs. Flat PQ scans every (q, x) pair BY DESIGN, so the n×n score
-    matrix is the computation itself — gated on its n×n×8 bytes by the
-    driver budget, with the relational scan as the over-budget route."""
-    import numpy as np
-
-    ids = np.asarray(ids, dtype=np.int64)
-    n = len(ids)
-    Ws, Wnrms = zip(*[_np_codebook_arrays(cents[s]) for s in range(m)])
-    codes = np.stack([_np_sub_codes(mat[:, s * sub_dim:(s + 1) * sub_dim],
-                                    Ws[s], Wnrms[s])
-                      for s in range(m)], axis=1)         # n × m
-    n2 = [np.einsum("ij,ij->i", Ws[s], Ws[s]) for s in range(m)]
-    xnorm = np.zeros(n, dtype=np.int64)
-    for s in range(m):
-        xnorm += n2[s][codes[:, s]]
-    luts = np.stack([mat[:, s * sub_dim:(s + 1) * sub_dim] @ Ws[s].T
-                     for s in range(m)], axis=1)          # n × m × ksub
-    dot = np.zeros((n, n), dtype=np.int64)
-    for s in range(m):
-        dot += luts[:, s, :][:, codes[:, s]]
-    xnf = xnorm.astype(np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        v = dot.astype(np.float64) / np.sqrt(xnf)[None, :]
-    v[:, xnf == 0.0] = float("-inf")
-    np.fill_diagonal(v, np.nan)                           # q_id <> x_id
-    qq = np.repeat(ids, n)
-    xx = np.tile(ids, n)
-    vv = v.ravel()
-    keep = ~np.isnan(vv)
-    return _np_topk_pairs(qq[keep], xx[keep], vv[keep], shortlist)
-
-
-def _ivf_det_fit(e: DataFrame, k: int, iters: int,
-                 dim: int = 64) -> tuple[DataFrame, dict[int, list[int]]]:
-    """Deterministic integer-grid Lloyd k-means shared by
-    vec_ann_ivf_det and the dedup twin (queries/dedup.py): quantize
-    the corpus to the floor(x·2²⁰) grid (checkpointed once), then fit
-    via the driver numpy kernel when the matrix fits the driver
-    budget (one Arrow collect, r13 optimization round —
-    guide §1.2: the per-round job barriers were the wall, not the
-    arithmetic), else the distributed loop (seed TakeOrdered + per-
-    round bounded k×dim collects — the documented ml_logreg posture).
-    Returns (quantized frame, centroid dict) — identical on both
-    routes (parity-tested)."""
-    q = _ivf_det_quantize(e)
-    return q, _ivf_det_fit_q(q, k, iters, dim)
-
-
-def _ivf_det_fit_q(q: DataFrame, k: int, iters: int,
-                   dim: int) -> dict[int, list[int]]:
-    """The Lloyd fit on an ALREADY-quantized (vec_id, q: array<long>)
-    frame — also the entry point for fits over derived integer vectors
-    (e.g. IVF-PQ residuals, which are integer differences and never
-    pass through the float grid). Routes to the driver kernel under
-    budget, else the distributed loop."""
-    got = _det_collect_q(q, dim)
-    if got is not None:
-        return _np_lloyd(got[0], got[1], k, iters)
-    return _ivf_det_fit_q_dist(q, k, iters, dim)
-
-
-def _ivf_det_fit_ranked(
-        e: DataFrame, k: int, iters: int, max_rn: int, dim: int = 64,
-) -> tuple[DataFrame, dict[int, list[int]], DataFrame]:
-    """Fit + centroid ranking in ONE bounded collect: returns
-    (quantized frame, centroids, ranked) where ranked is the
-    (vec_id, bucket, _rn <= max_rn) frame every det-IVF serve path
-    filters from. Under budget the ranking is the driver twin of
-    _ivf_det_rank (no crossJoin, no window exchange — and the ranked
-    subtree is consumed twice by every caller, so the relational form
-    paid that plan twice); over budget it IS _ivf_det_rank filtered
-    to max_rn. Row-identical either way (parity-tested)."""
-    q = _ivf_det_quantize(e)
-    got = _det_collect_q(q, dim)
-    if got is None:
-        cent = _ivf_det_fit_q_dist(q, k, iters, dim)
-        return q, cent, _ivf_det_rank(q, cent).filter(
-            F.col("_rn") <= max_rn)
-    ids, mat = got
-    cent = _np_lloyd(ids, mat, k, iters)
-    ranked = q.sparkSession.createDataFrame(
-        _np_det_rank_pdf(ids, mat, cent, max_rn),
-        "vec_id long, bucket int, _rn int")
-    return q, cent, ranked
-
-
-def _ivf_det_fit_q_dist(q: DataFrame, k: int, iters: int,
-                        dim: int) -> dict[int, list[int]]:
-    """The distributed Lloyd loop (the at-scale route of
-    _ivf_det_fit_q): seed from the k smallest (md5(id), id) keys via a
-    distributed TakeOrderedAndProject, then ``iters`` rounds of
-    assign → per-component integer means. The ONLY driver collects are
-    the k seed rows and k×dim component sums per round."""
-    import math
-
-    seed_rows = (q.select(F.md5(F.col("vec_id").cast("string"))
-                          .alias("_h"), "vec_id", "q")
-                 .orderBy("_h", "vec_id").limit(k).collect())
-    cent: dict[int, list[int]] = {i: list(r.q)
-                                  for i, r in enumerate(seed_rows)}
-    for _ in range(iters):
-        # _ivf_det_assign: selection-identical to the old
-        # _ivf_det_rank(...)._rn==1 slice, but a narrow projection
-        # that carries q along — the per-iteration job is one
-        # aggregation instead of crossJoin + window exchange + join.
-        # The component sums are dim COLUMN-WISE F.sum(q[j]) aggs (r12,
-        # guide §2.3 "aggregate before you shuffle"): no posexplode
-        # row blow-up, map-side partial aggregation, and the shuffle
-        # carries k rows of dim+1 longs. int64 addition is exact and
-        # order-free, so sums are bit-identical to the exploded form.
-        sums = (_ivf_det_assign(q, cent)
-                .groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("cnt"),
-                     *[F.sum(F.col("q").getItem(j)).alias(f"_s{j}")
-                       for j in range(dim)])
-                .collect())           # k x dim ints — bounded, documented
-        new: dict[int, list[int]] = {}
-        for r in sums:
-            new[r.bucket] = [math.floor(r[f"_s{j}"] / r.cnt)
-                             for j in range(dim)]
-        cent.update(new)              # empty buckets keep old centroid
-    return cent
-
-
-def _ivf_det_assign(q: DataFrame, cent: dict[int, list[int]],
-                    out_col: str = "bucket") -> DataFrame:
-    """Top-1 bucket of :func:`_ivf_det_rank` (the ``_rn == 1`` slice)
-    WITHOUT the crossJoin + window: the centroids become one literal
-    array in the plan and each row walks it with a strict-``>``
-    accumulator fold — selection is identical to the window's
-    (``_sim`` DESC, bucket ASC) rule because the array is sorted by
-    bucket and ties keep the earlier entry, and every arithmetic op
-    (int64 zip_with dot, one double division by the driver-computed
-    norm) is the same IEEE op in the same order as _ivf_det_rank's.
-
-    Why it exists (r12 optimization round, guide §2.4): assignment is
-    the inner step of every det-k-means iteration and of every
-    per-subspace code pass; through _ivf_det_rank it cost a broadcast
-    crossJoin, a full window sort-exchange, and (for the Lloyd sums) a
-    join back to ``q`` — 3 stages and 2 shuffles per use, ~3 s/job at
-    sf0.1 measured almost entirely as stage overhead. This form is a
-    single narrow projection: zero shuffle, zero join; callers keep
-    ``q`` alongside the bucket, so the Lloyd sum needs no join either.
-    Output keeps (vec_id, q, bucket) — project as needed."""
-    if not cent:
-        # Empty-centroid parity with _ivf_det_rank: a crossJoin against
-        # zero centroid rows yields zero assignment rows (empty-input
-        # queries reach this through _ivf_det_fit's empty seed set).
-        return (q.select("vec_id", "q",
-                         F.lit(0).cast("int").alias(out_col))
-                .filter(F.lit(False)))
-    best, first_b = _det_assign_fold_sql(cent, "q")
-    return (q.select("vec_id", "q", F.expr(best).alias("_best"))
-            .select("vec_id", "q",
-                    F.when(F.col("_best.b") == -1,
-                           F.lit(first_b))
-                    .otherwise(F.col("_best.b")).cast("int")
-                    .alias(out_col)))
-
-
-def _det_assign_fold_sql(cent: dict[int, list[int]],
-                         vec_expr: str) -> tuple[str, int]:
-    """SQL text of the argmax-centroid fold over ``vec_expr`` (an
-    array<long> SQL expression) — see :func:`_ivf_det_assign` for the
-    selection-equivalence argument. Returns (fold_sql, first_bucket);
-    the fold yields named_struct('s' double, 'b' int) with b = -1 when
-    every centroid is zero-norm (callers coalesce to first_bucket,
-    the window tie rule's pick).
-
-    The whole centroid array + fold is ONE SQL string: building it
-    from F.lit()/F.struct() Columns costs one py4j round trip per
-    literal (measured 10.5 s of pure driver time for 16×64 ints); one
-    expr() is a single round trip + parse. repr() round-trips doubles
-    exactly and Spark's string→double cast parses them exactly, so
-    the norms are the same IEEE doubles _ivf_det_rank computes."""
-    import math
-
-    entries = [(b, vals, math.sqrt(sum(v * v for v in vals)))
-               for b, vals in sorted(cent.items())]
-    structs = ",".join(
-        "named_struct('b',{b},'c',array({c}),'nrm',CAST('{n!r}' AS DOUBLE))"
-        .format(b=int(b), c=",".join(f"{int(v)}L" for v in vals), n=nrm)
-        for b, vals, nrm in entries)
-    sim_x = ("CASE WHEN x.nrm = 0.0D THEN CAST('-Infinity' AS DOUBLE) "
-             f"ELSE CAST(aggregate(zip_with({vec_expr}, x.c, "
-             "(a, bb) -> a * bb), "
-             "0L, (a2, v) -> a2 + v) AS DOUBLE) / x.nrm END")
-    best = (f"aggregate(array({structs}), "
-            "named_struct('s', CAST('-Infinity' AS DOUBLE), 'b', -1), "
-            f"(acc, x) -> CASE WHEN ({sim_x}) > acc.s "
-            f"THEN named_struct('s', {sim_x}, 'b', x.b) ELSE acc END)")
-    return best, int(entries[0][0])
-
-
-def _ivf_det_rank(q: DataFrame, cent: dict[int, list[int]]) -> DataFrame:
-    """Rank every (vector, centroid) pair of the deterministic IVF:
-    exact int64 dot against the broadcast integer centroids, divided
-    by the (driver-computed, IEEE-exact) centroid norm — |q| is
-    constant per vector so dot/|c| orders buckets identically to
-    cosine. Returns (vec_id, bucket, _rn)."""
-    import math
-
-    spark = q.sparkSession
-    rows = [(b, [int(v) for v in vals],
-             math.sqrt(sum(v * v for v in vals)))
-            for b, vals in sorted(cent.items())]
-    cdf = spark.createDataFrame(rows, "bucket int, c array<long>, nrm double")
-    dot = F.aggregate(F.zip_with("q", "c", lambda a, b: a * b),
-                      F.lit(0).cast("long"), lambda acc, x: acc + x)
-    sim = F.when(F.col("nrm") == 0.0, F.lit(float("-inf"))) \
-        .otherwise(dot.cast("double") / F.col("nrm"))
-    w = Window.partitionBy("vec_id").orderBy(F.col("_sim").desc(), "bucket")
-    return (q.crossJoin(F.broadcast(cdf))
-            .select("vec_id", "bucket", sim.alias("_sim"))
-            .withColumn("_rn", F.row_number().over(w))
-            .select("vec_id", "bucket", "_rn"))
-
-
-def _ivf_det_serve(e: DataFrame, ranked: DataFrame, n_assign: int,
-                   n_probe: int) -> DataFrame:
-    """The det-IVF serve tail: candidates are the members of each
-    vector's ``n_assign`` buckets met through its ``n_probe`` probed
-    buckets, scored by exact cosine, top-1 per vector (ties by
-    neighbor_id). ``ranked`` is _ivf_det_fit_ranked's frame, possibly
-    with rows already removed (the tombstone anti-join)."""
-    from ..operators.dedup import _cosine_residual
-
-    assigned = (ranked.filter(F.col("_rn") <= n_assign)
-                .select(F.col("vec_id").alias("neighbor_id"), "bucket"))
-    probed = (ranked.filter(F.col("_rn") <= n_probe)
-              .select("vec_id", "bucket"))
-    cand = (probed.join(assigned, "bucket")
-            .filter(F.col("vec_id") != F.col("neighbor_id"))
-            .select("vec_id", "neighbor_id").distinct())
-    scored = _cosine_residual(cand, e, e, -1.0, "vec_id", "neighbor_id",
-                              "vec_id", "embedding")
-    w2 = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(),
-                                              "neighbor_id")
-    return (scored.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") == 1)
-            .select("vec_id", "neighbor_id",
-                    F.col("cos_sim").alias("approx_cos"))
-            .orderBy("vec_id"))
-
-
 @register("vec_ann_ivf_det", oracle=_ivf_det_oracle_sql(),
           tags=("vector", "knn", "approx", "ivf"))
 def vec_ann_ivf_det(spark: SparkSession, sf_dir: str, k: int = 16,
@@ -1026,109 +544,26 @@ def vec_ann_pq_det(spark: SparkSession, sf_dir: str, m: int = 8,
     spark.ml k-means, byte-packed codes) stay registered; this twin
     completes the det story across the quantized family (LSH, IVF,
     semantic dedup, PQ). Recall pinned >= 0.9 in tests at these
-    dials."""
-    from functools import reduce
+    dials.
 
-    from ..operators.dedup import _cosine_residual
-
+    Flat PQ is IVF-PQ with ONE all-zero coarse cell, so it runs
+    vec_ann_ivfpq_det's pipeline (operators/det_ann.py
+    ``_det_pq_search``) with ``{0: [0] * dim}``, n_assign = n_probe = 1,
+    ``k`` codewords and ``iters`` rounds: each residual is the
+    quantized vector, each cell score adds 0 and the reconstruction
+    norm is Σ|codeword|² — the same int64 values and IEEE operations
+    as the oracle's flat scan. Routes: driver fits and driver ADC
+    under the budget, else the relational wide-fold scan, else
+    distributed fits too."""
     e = load_table(spark, sf_dir, "embeddings")
     if e.isEmpty():
         return spark.createDataFrame(
             [], "vec_id long, neighbor_id long, approx_cos double")
-    # r13 (guide §1.2): quantize the FULL-dim corpus once — each
-    # subspace's integer grid is exactly the slice of the full grid
-    # (floor(x·2²⁰) is elementwise, so slice∘floor == floor∘slice) —
-    # and run the m codebook fits in the driver numpy kernel from ONE
-    # Arrow collect. The old shape paid m separate quantize-checkpoint
-    # + seed + iters×collect chains (~48 driver-synchronized jobs,
-    # thread-pooled but still the query's wall). Over budget: the
-    # distributed fits over slices of the shared quantized frame,
-    # overlapped by a small thread pool (guide §2.6).
     dim = m * sub_dim
     q = _ivf_det_quantize(e)
-    got = _det_collect_q(q, dim)
-    if got is not None:
-        ids, mat = got
-        cents = [_np_lloyd(ids, mat[:, s * sub_dim:(s + 1) * sub_dim],
-                           k, iters) for s in range(m)]
-        # Driver ADC (r13): flat PQ's compressed-domain scan is an
-        # exhaustive (q, x) pass BY DESIGN — the relational form
-        # shuffled |n|²·m LUT-contribution rows through a (sub, code)
-        # join + two aggregation exchanges, the query's wall. The same
-        # exact-int64 codes/LUTs/score arithmetic over the collected
-        # matrix is gated by the n×n score-matrix budget; the
-        # exact-cosine rerank stays in Spark. Over budget (or over the
-        # fit budget) → the relational scan below, unchanged.
-        if budget.fits_driver(len(ids) * len(ids) * 8):
-            short = spark.createDataFrame(
-                _np_pq_shortlist(ids, mat, cents, shortlist, m, sub_dim),
-                "vec_id long, neighbor_id long")
-            return _det_exact_rerank(short, e)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            cents = list(pool.map(
-                lambda s: _ivf_det_fit_q_dist(
-                    q.select("vec_id",
-                             F.slice("q", s * sub_dim + 1, sub_dim)
-                             .alias("q")),
-                    k=k, iters=iters, dim=sub_dim),
-                range(m)))
-
-    def _sub_relations(s: int):
-        cent = cents[s]
-        q_s = q.select("vec_id",
-                       F.slice("q", s * sub_dim + 1, sub_dim).alias("q"))
-        code_s = (_ivf_det_assign(q_s, cent)
-                  .select("vec_id", F.lit(s).alias("sub"), "bucket"))
-        rows = [(b, [int(v) for v in vals])
-                for b, vals in sorted(cent.items())]
-        cdf = spark.createDataFrame(rows, "bucket int, c array<long>")
-        dot = F.aggregate(F.zip_with("q", "c", lambda a, b: a * b),
-                          F.lit(0).cast("long"), lambda acc, x: acc + x)
-        lut_s = (q_s.crossJoin(F.broadcast(cdf))
-                 .select("vec_id", F.lit(s).alias("sub"), "bucket",
-                         dot.alias("d")))
-        n2 = F.aggregate(F.transform("c", lambda x: x * x),
-                         F.lit(0).cast("long"), lambda acc, x: acc + x)
-        cn2_s = cdf.select(F.lit(s).alias("sub"), "bucket",
-                           n2.alias("n2"))
-        return code_s, lut_s, cn2_s
-
-    parts = [_sub_relations(s) for s in range(m)]
-    codes = [p[0] for p in parts]
-    luts = [p[1] for p in parts]
-    cn2s = [p[2] for p in parts]
-    codes_df = reduce(lambda a, b: a.unionByName(b), codes)
-    lut_df = reduce(lambda a, b: a.unionByName(b), luts)
-    cn2_df = reduce(lambda a, b: a.unionByName(b), cn2s)
-    xnorm = (codes_df.join(cn2_df, ["sub", "bucket"])
-             .groupBy("vec_id").agg(F.sum("n2").alias("nrm2")))
-    score = (codes_df.withColumnRenamed("vec_id", "x_id")
-             .join(lut_df.withColumnRenamed("vec_id", "q_id"),
-                   ["sub", "bucket"])
-             .filter(F.col("q_id") != F.col("x_id"))
-             .groupBy("q_id", "x_id").agg(F.sum("d").alias("dot")))
-    val = (F.when(F.col("nrm2") == 0, F.lit(float("-inf")))
-           .otherwise(F.col("dot").cast("double")
-                      / F.sqrt(F.col("nrm2").cast("double"))))
-    w = Window.partitionBy("q_id").orderBy(val.desc(), "x_id")
-    short = (score.join(xnorm, score.x_id == xnorm.vec_id)
-             .withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") <= shortlist)
-             .select(F.col("q_id").alias("vec_id"),
-                     F.col("x_id").alias("neighbor_id")))
-    scored = _cosine_residual(short, e, e, -1.0, "vec_id", "neighbor_id",
-                              "vec_id", "embedding")
-    w2 = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(),
-                                              "neighbor_id")
-    return (scored.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") == 1)
-            .select("vec_id", "neighbor_id",
-                    F.col("cos_sim").alias("approx_cos"))
-            .orderBy("vec_id"))
-
-
+    return _det_pq_search(e, q, _det_collect_q(q, dim), {0: [0] * dim},
+                          n_assign=1, n_probe=1, m=m, sub_dim=sub_dim,
+                          ksub=k, r_iters=iters, shortlist=shortlist)
 
 
 def _ivfpq_det_oracle_sql(n_cells: int = 16, c_iters: int = 4,
@@ -1335,10 +770,10 @@ def vec_ann_ivfpq_det(spark: SparkSession, sf_dir: str,
     probe 8 / shortlist 64):
 
     - coarse quantizer: the shared integer-grid det k-means
-      (_ivf_det_fit), multi-assignment to 3 cells;
+      (operators/det_ann.py ``_det_fit``), multi-assignment to 3 cells;
     - RESIDUALS are integer differences (quantized vector minus
       integer cell centroid) — they never pass through the float
-      grid, so the per-subspace residual codebooks (_ivf_det_fit_q,
+      grid, so the per-subspace residual codebooks (``_det_fit``,
       64 codewords each) stay exact;
     - search is probe-bounded residual-ADC: score(q, x via cell) =
       dot(q, cell) + Σ_sub lut[q, sub, code(x, cell, sub)] — pure
@@ -1353,210 +788,17 @@ def vec_ann_ivfpq_det(spark: SparkSession, sf_dir: str,
     shape matches the production twin: each query meets only its
     probed cells' codes; nothing corpus-sized is broadcast (the
     codebooks are k·dim ints)."""
-    from functools import reduce
-
-    from ..operators.dedup import _cosine_residual
-
     e = load_table(spark, sf_dir, "embeddings")
     if e.isEmpty():
         return spark.createDataFrame(
             [], "vec_id long, neighbor_id long, approx_cos double")
-    # r13 (guide §1.2): the whole training side — coarse fit, cell
-    # ranking, top-1 residuals, all m residual codebook fits — runs in
-    # the driver numpy kernel from ONE Arrow collect when the corpus
-    # fits the driver budget. The old shape paid the coarse fit's 6
-    # jobs + 2 checkpoint jobs + m×(r_iters+1) residual-fit collects
-    # (~40 driver-synchronized jobs — the query's wall at sf0.1, where
-    # every job is fixed scheduling overhead). Residuals are exact
-    # int64 differences in both routes; route parity is pinned in
-    # tests. Over budget: the distributed chain below, unchanged.
     dim = m * sub_dim
     q = _ivf_det_quantize(e)
     got = _det_collect_q(q, dim)
-    if got is not None:
-        import numpy as np
-
-        ids, mat = got
-        coarse = _np_lloyd(ids, mat, n_cells, c_iters)
-        cbuckets, csims = _np_cent_sims(mat, coarse)
-        cmat = np.array([coarse[b] for b in cbuckets], dtype=np.int64)
-        r1mat = mat - cmat[csims.argmax(axis=1)]   # top-1 cell residuals
-        rcents = [_np_lloyd(ids, r1mat[:, s * sub_dim:(s + 1) * sub_dim],
-                            ksub, r_iters) for s in range(m)]
-        # Second r13 gate: the compressed-domain probe scan itself.
-        # The relational serve's codes_wide folds and LUT projections
-        # run INTERPRETED (measured: ~7 s codes_wide materialization +
-        # most of a 13.8 s final action at sf0.1 — the walls left
-        # after the fits went numpy); the same exact-int64 arithmetic
-        # over the already-collected matrix is milliseconds. Spark
-        # keeps the exact-cosine rerank. Over budget → the r12
-        # relational scan below, unchanged.
-        if budget.fits_driver(len(ids) * len(ids) * 8):
-            short = spark.createDataFrame(
-                _np_ivfpq_shortlist(ids, mat, coarse, rcents, n_assign,
-                                    n_probe, shortlist, m, sub_dim),
-                "vec_id long, neighbor_id long")
-            return _det_exact_rerank(short, e)
-        crk = spark.createDataFrame(
-            _np_det_rank_pdf(ids, mat, coarse,
-                             max_rn=max(n_assign, n_probe)),
-            "vec_id long, bucket int, _rn int")
-        ccdf = spark.createDataFrame(
-            [(b, [int(v) for v in vals])
-             for b, vals in sorted(coarse.items())],
-            "cell int, carr array<long>")
-        xasg = (crk.filter(F.col("_rn") <= n_assign)
-                .select("vec_id", F.col("bucket").alias("cell")))
-        # rq_all feeds codes_wide ONCE on this route (r1 is numpy-side)
-        # — no checkpoint needed.
-        rq_all = (xasg.join(q, "vec_id").join(F.broadcast(ccdf), "cell")
-                  .select("vec_id", "cell",
-                          F.zip_with("q", "carr", lambda a, b: a - b)
-                          .alias("rq")))
-    else:
-        coarse = _ivf_det_fit_q_dist(q, n_cells, c_iters, dim)
-        crk = _ivf_det_rank(q, coarse)
-        ccdf = spark.createDataFrame(
-            [(b, [int(v) for v in vals])
-             for b, vals in sorted(coarse.items())],
-            "cell int, carr array<long>")
-        xasg = (crk.filter(F.col("_rn") <= n_assign)
-                .select("vec_id", F.col("bucket").alias("cell")))
-        rq_all = (xasg.join(q, "vec_id").join(F.broadcast(ccdf), "cell")
-                  .select("vec_id", "cell",
-                          F.zip_with("q", "carr", lambda a, b: a - b)
-                          .alias("rq"))
-                  .localCheckpoint(eager=True))
-        # Checkpoint: the m subspace fits each run iters x 2 jobs over
-        # this frame — without truncation every one would re-derive
-        # the coarse rank window from scratch.
-        r1 = (crk.filter(F.col("_rn") == 1)
-              .select("vec_id", F.col("bucket").alias("cell"))
-              .join(rq_all, ["vec_id", "cell"])
-              .select("vec_id", F.col("rq").alias("q"))
-              .localCheckpoint(eager=True))
-        # Guide §2.6: the m residual-subspace fits are independent
-        # chains of small driver-synchronized jobs over the
-        # checkpointed r1 — overlap them with a thread pool (same
-        # rationale and identical-output argument as vec_ann_pq_det's
-        # subspace fits).
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            rcents = list(pool.map(
-                lambda s: _ivf_det_fit_q_dist(
-                    r1.select("vec_id",
-                              F.slice("q", s * sub_dim + 1, sub_dim)
-                              .alias("q")),
-                    k=ksub, iters=r_iters, dim=sub_dim),
-                range(m)))
-    probes = (crk.filter(F.col("_rn") <= n_probe)
-              .select(F.col("vec_id").alias("q_id"),
-                      F.col("bucket").alias("cell")))
-    # r12 optimization (guide §2.3/§2.4 — shuffle fewer bytes, remove
-    # shuffles): the per-subspace code/LUT/norm relations used to meet
-    # in long-format joins — codes_df (8 rows per (x, cell)) × lut_df
-    # (q × m × ksub rows) keyed on (q_id, sub, code) exploded the
-    # probe join to |pairs| × m rows through TWO aggregation
-    # exchanges (s0, xnorm) plus a per-subspace union + crossJoins.
-    # All of it is now computed WIDE, one row per entity:
-    #   codes_wide: (x_id, cell, codes[m], nrm2) in ONE narrow pass
-    #     over rq_all — the m argmax folds (_det_assign_fold_sql,
-    #     selection-identical to _ivf_det_rank rn=1) plus the exact
-    #     reconstruction norm from literal codebook arrays;
-    #   lutw: (q_id, luts[m][ksub]) — one narrow projection, replacing
-    #     the m LUT crossJoins;
-    #   the probe join then carries ONE row per (q, x, cell) and the
-    #   ADC sum is an m-lookup fold — int64 addition is exact and
-    #   order-free, so every v is bit-identical to the long-format
-    #   plan's (oracle-checked). Measured 30.6 s -> ~8 s for the
-    #   search action at sf0.1; at scale the shuffle shrinks 8×.
-    def _arr2(vec_lists):
-        return "array(" + ",".join(
-            "array(" + ",".join(f"{int(v)}L" for v in vals) + ")"
-            for vals in vec_lists) + ")"
-
-    W = [_arr2([rcents[s][b] for b in sorted(rcents[s])])
-         for s in range(m)]
-    CC = _arr2([coarse[b] for b in sorted(coarse)])
-    folds = [_det_assign_fold_sql(
-        rcents[s], f"slice(rq, {s * sub_dim + 1}, {sub_dim})")
-        for s in range(m)]
-    wide0 = rq_all.select(
-        F.col("vec_id").alias("x_id"), "cell",
-        *[F.expr(folds[s][0]).alias(f"_b{s}") for s in range(m)])
-    codes_col = F.array(*[
-        F.when(F.col(f"_b{s}.b") == -1, F.lit(folds[s][1]))
-        .otherwise(F.col(f"_b{s}.b")).cast("int") for s in range(m)])
-    wfull = "concat(" + ",".join(
-        f"element_at({W[s]}, codes[{s}] + 1)" for s in range(m)) + ")"
-    nrm2_sql = (f"aggregate(zip_with(element_at({CC}, cell + 1), "
-                f"{wfull}, (a, b) -> (a + b) * (a + b)), 0L, "
-                "(acc, v) -> acc + v)")
-    codes_wide = (wide0.select("x_id", "cell", codes_col.alias("codes"))
-                  .select("x_id", "cell", "codes",
-                          F.expr(nrm2_sql).alias("nrm2"))
-                  .localCheckpoint(eager=True))
-    luts_sql = "array(" + ",".join(
-        f"transform({W[s]}, c -> aggregate(zip_with("
-        f"slice(q, {s * sub_dim + 1}, {sub_dim}), c, "
-        "(a, bb) -> a * bb), 0L, (a2, v) -> a2 + v))"
-        for s in range(m)) + ")"
-    lutw = q.select(F.col("vec_id").alias("q_id"),
-                    F.expr(luts_sql).alias("luts"))
-    cdot = F.aggregate(F.zip_with("q", "carr", lambda a, b: a * b),
-                       F.lit(0).cast("long"), lambda acc, x: acc + x)
-    dqc = (q.crossJoin(F.broadcast(ccdf))
-           .select(F.col("vec_id").alias("q_id"), "cell",
-                   cdot.alias("cdot")))
-    # Flat left-associated sum, NOT an aggregate/zip_with fold: HOFs
-    # run interpreted and allocate a per-row array — at |pairs| rows
-    # that interpretation was the stage's wall (measured ~15 s of the
-    # 23 s post-join stage at sf0.1). element_at/getItem chains stay
-    # inside WholeStageCodegen. int64 addition in the same s=0..m-1
-    # order → bit-identical sums.
-    rd = F.expr(" + ".join(
-        f"element_at(luts[{s}], codes[{s}] + 1)" for s in range(m)))
-    # lutw/dqc are QUERY-side: |Q| × (m·ksub longs) / |Q| × n_probe
-    # skinny rows — broadcast them (guide §8: never let a pair join
-    # ship the wide per-query payload through a shuffle; without the
-    # hint Catalyst picked a sort-merge join that moved luts once per
-    # PAIR row). A serving batch's Q is bounded; at corpus-Q fixture
-    # scale this is 2000 × 4 KB ≈ 8 MB. codes_wide stays a hash join
-    # on cell — the corpus side is never broadcast.
-    vals_df = (probes.join(codes_wide, "cell")
-               .filter(F.col("q_id") != F.col("x_id"))
-               .join(F.broadcast(dqc), ["q_id", "cell"])
-               .join(F.broadcast(lutw), "q_id")
-               .select("q_id", "x_id",
-                       F.when(F.col("nrm2") == 0, F.lit(float("-inf")))
-                       .otherwise((rd + F.col("cdot"))
-                                  .cast("double")
-                                  / F.sqrt(F.col("nrm2").cast("double")))
-                       .alias("v")))
-    bst = vals_df.groupBy("q_id", "x_id").agg(F.max("v").alias("v"))
-    w = Window.partitionBy("q_id").orderBy(F.col("v").desc(), "x_id")
-    short = (bst.withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") <= shortlist)
-             .select(F.col("q_id").alias("vec_id"),
-                     F.col("x_id").alias("neighbor_id")))
-    return _det_exact_rerank(short, e)
-
-
-def _det_exact_rerank(short: DataFrame, e: DataFrame) -> DataFrame:
-    """The shared shortlist→exact-cosine-top-1 tail of the det PQ
-    family: rescore the (vec_id, neighbor_id) shortlist by exact
-    cosine and keep the best per query under (cos DESC, id ASC)."""
-    from ..operators.dedup import _cosine_residual
-
-    scored = _cosine_residual(short, e, e, -1.0, "vec_id", "neighbor_id",
-                              "vec_id", "embedding")
-    w2 = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(),
-                                              "neighbor_id")
-    return (scored.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") == 1)
-            .select("vec_id", "neighbor_id",
-                    F.col("cos_sim").alias("approx_cos"))
-            .orderBy("vec_id"))
+    coarse = _det_fit(q, got, n_cells, c_iters, dim)[0]
+    return _det_pq_search(e, q, got, coarse, n_assign=n_assign,
+                          n_probe=n_probe, m=m, sub_dim=sub_dim,
+                          ksub=ksub, r_iters=r_iters, shortlist=shortlist)
 
 
 @register("maint_compact", oracle=f"""
@@ -2182,15 +1424,9 @@ def ml_silhouette(spark: SparkSession, sf_dir: str, k: int = 8,
     keys. tests/test_analytics.py pins the [-1, 1] range, agreement
     with a NumPy re-derivation, and that planting tighter clusters
     raises the score."""
-    import math
-
     e = load_table(spark, sf_dir, "embeddings")
     q, cent = _ivf_det_fit(e, k=k, iters=iters)
-    rows = [(b, [int(v) for v in vals],
-             math.sqrt(sum(v * v for v in vals)))
-            for b, vals in sorted(cent.items())]
-    cdf = spark.createDataFrame(rows,
-                                "bucket int, c array<long>, nrm double")
+    cdf = _centroid_frame(spark, cent)
     dot = F.aggregate(F.zip_with("q", "c", lambda a, b: a * b),
                       F.lit(0).cast("long"), lambda acc, x: acc + x)
     qnrm = F.sqrt(F.aggregate(

@@ -2,6 +2,8 @@
 
 Two paths:
 - ``build_session()`` — used by tests/bench when we own the session.
+  It ends with ``ensure_runtime_confs``, so both paths apply the same
+  confs and ship the package to Python workers through one call.
 - ``ensure_runtime_confs(spark)`` — used inside every query entry point
   because the verification driver owns the session; all confs we need
   are runtime-settable SQL confs (verified on pyspark 4.1.2).
@@ -168,4 +170,8 @@ def build_session(app_name: str = "integrator-spark",
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    # The same runtime confs and package shipping as a driver-owned
+    # session: without the zip, an operator whose pandas UDF workers
+    # import ``integrator_spark`` fails when the driver did not start
+    # in the repo root and no table was loaded yet.
+    return ensure_runtime_confs(spark)

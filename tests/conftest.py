@@ -78,14 +78,10 @@ SLOW_NODE_PATTERNS = (
     "tests/test_operators.py::test_graph_serve_deletes_promotes_and_recalls",
     "tests/test_operators.py::test_ivfpq_hot_bucket_split_is_result_invariant",
     "tests/test_analytics.py::test_survival_is_monotone_nonincreasing",
-    "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_ivfpq_det]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_pca_power]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[text_bpe_train_deep]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_graph_det]",
     "tests/test_plans.py::test_plan_has_no_scale_violations[vec_ann_graph_det_deletes]",
-    # Forced-distributed (zero driver budget) route check that takes
-    # 16-17 s on 4 cores.
-    "tests/test_operators.py::test_ivf_det_assign_wider_than_probe_matches_oracle",
     # One case per oracle-backed query: 361 cases, 7.6 min at sf0.001
     # on 4 cores (342 skip after building their query, 25 take > 5 s).
     "tests/test_operators.py::test_forced_distributed_route_parity*",

@@ -495,7 +495,7 @@ def test_ml_silhouette_range_reference_and_separation_response(spark):
     import numpy as np
 
     from integrator_spark.io import load_table
-    from integrator_spark.queries.scale import _ivf_det_fit
+    from integrator_spark.operators.det_ann import _ivf_det_fit
 
     got = {r["bucket"]: (r["n_members"], r["avg_silhouette"])
            for r in SPECS["ml_silhouette"].fn(spark, TEST_SF_DIR).collect()}

@@ -32,3 +32,31 @@ def test_cli_unknown_query_fails_cleanly():
     p = _run("run", "no_such_query")
     assert p.returncode == 2
     assert "unknown query" in p.stderr
+
+
+_SHIP_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from integrator_spark.operators.knn import knn_exact
+from integrator_spark.session import build_session
+spark = build_session("ship-test", cpus=2)
+emb = spark.createDataFrame(
+    [(i, [float((i * 5 + j * 3) % 7) + 1.0 for j in range(6)])
+     for i in range(9)], "vec_id long, embedding array<float>")
+print("rows", len(knn_exact(emb, k=2).collect()))
+spark.stop()
+"""
+
+
+def test_build_session_ships_package_to_workers(tmp_path):
+    # A driver started outside the repo, with the package only on its
+    # own sys.path: the pandas-UDF workers of knn_exact must still
+    # import integrator_spark, so build_session has to ship it.
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    p = subprocess.run([sys.executable, "-c",
+                        _SHIP_SCRIPT.format(repo=REPO)],
+                       cwd=tmp_path, env=env, capture_output=True,
+                       text=True, timeout=240)
+    assert p.returncode == 0, p.stderr[-2000:]
+    assert "rows 18" in p.stdout

@@ -281,6 +281,10 @@ def test_knn_exact_zero_vector_same_rows_on_both_routes(spark, monkeypatch):
     # a neighbour (with a NaN score) or give it neighbours of its own.
     # The broadcast route (default budget), the two-sided route (zero
     # budget) and the crossJoin reference must return the same rows.
+    # The broadcast route must not normalize the zero vector into a
+    # NaN row on the driver either (numpy's invalid-divide raises).
+    import numpy as np
+
     from integrator_spark.operators import budget
     from integrator_spark.operators.knn import knn_bruteforce, knn_exact
 
@@ -291,7 +295,8 @@ def test_knn_exact_zero_vector_same_rows_on_both_routes(spark, monkeypatch):
     key = lambda df: sorted(  # noqa: E731
         (r.vec_id, r.neighbor_id, r.cos_sim) for r in df.collect())
     for k in (1, 3):
-        default = key(knn_exact(emb, k=k))
+        with np.errstate(invalid="raise"):
+            default = key(knn_exact(emb, k=k))
         with monkeypatch.context() as mp:
             mp.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
             forced = key(knn_exact(emb, k=k))
@@ -1214,6 +1219,9 @@ def test_pq_encode_shape_and_determinism(spark):
                for c in codes.values())
     codes2 = {r.vec_id: r.codes for r in pq_encode(e, cb1).collect()}
     assert codes == codes2
+    # An empty corpus fails fast with a clear error, not a NumPy crash.
+    with pytest.raises(ValueError, match="bounded_sample_matrix: empty"):
+        pq_train(e.limit(0), m=8, ksub=16, sample_rows=100, iters=5)
 
 
 def test_pq_rerank_cos_is_exact(spark):
@@ -3362,7 +3370,7 @@ def test_det_fit_driver_route_parity(spark, monkeypatch):
     route on the same data."""
     from integrator_spark.io import load_table
     from integrator_spark.operators import budget
-    from integrator_spark.queries import scale as sc
+    from integrator_spark.operators import det_ann as sc
     from .conftest import TEST_SF_DIR
 
     e = load_table(spark, TEST_SF_DIR, "embeddings")
@@ -3416,32 +3424,33 @@ def test_connected_components_driver_route_parity(spark, monkeypatch):
     assert (300, 300) in fast and (300, 300) in slow
 
 
-def test_det_adc_driver_route_parity(spark, monkeypatch):
-    """The r13 driver ADC kernels (codes/LUTs/probe scoring/shortlist
-    in exact int64 numpy) must yield the IDENTICAL final rows as the
-    relational compressed-domain scan — end-to-end equality of
-    vec_ann_pq_det and vec_ann_ivfpq_det with the budget set between
-    the n x dim fit matrix (kept on the driver) and the n x n ADC score
-    matrix (relational route) vs default (driver route)."""
+def test_det_adc_driver_route_parity(spark, duck, monkeypatch):
+    """vec_ann_pq_det (flat PQ: the IVF-PQ pipeline with one zero cell)
+    and vec_ann_ivfpq_det return IDENTICAL rows on all three routes:
+    the default (driver fits, driver ADC), the budget set between the
+    n x dim fit matrix and the n x n ADC score matrix (driver fits,
+    relational wide-fold scan) and budget 0 (distributed fits, cell
+    ranking and scan). The default rows equal each DuckDB oracle."""
     from integrator_spark.io import load_table
     from integrator_spark.operators import budget
     from integrator_spark.queries import scale as sc
+    from integrator_spark.testing import canonical_strings
     from .conftest import TEST_SF_DIR
 
-    fast_pq = sorted(map(tuple, sc.vec_ann_pq_det(
-        spark, TEST_SF_DIR).collect()))
-    fast_ivfpq = sorted(map(tuple, sc.vec_ann_ivfpq_det(
-        spark, TEST_SF_DIR).collect()))
     n = load_table(spark, TEST_SF_DIR, "embeddings").count()
     assert n * 64 * 8 < n * n * 8
-    monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", n * 64 * 8)
-    slow_pq = sorted(map(tuple, sc.vec_ann_pq_det(
-        spark, TEST_SF_DIR).collect()))
-    slow_ivfpq = sorted(map(tuple, sc.vec_ann_ivfpq_det(
-        spark, TEST_SF_DIR).collect()))
-    assert fast_pq == slow_pq
-    assert fast_ivfpq == slow_ivfpq
-    assert len(fast_pq) > 0
+    default_budget = budget.DRIVER_BUDGET_BYTES
+    for fn, oracle in ((sc.vec_ann_pq_det, sc._pq_det_oracle_sql()),
+                       (sc.vec_ann_ivfpq_det, sc._ivfpq_det_oracle_sql())):
+        pdfs = []
+        for b in (default_budget, n * 64 * 8, 0):
+            monkeypatch.setattr(budget, "DRIVER_BUDGET_BYTES", b)
+            pdfs.append(fn(spark, TEST_SF_DIR).toPandas())
+        rows = [sorted(map(tuple, p.itertuples(index=False))) for p in pdfs]
+        assert rows[0] == rows[1] == rows[2], fn.__name__
+        assert len(rows[0]) > 0
+        assert canonical_strings(pdfs[0]) == \
+            canonical_strings(duck.execute(oracle).df()), fn.__name__
 
 
 def test_ivf_det_assign_wider_than_probe_matches_oracle(spark, duck,
