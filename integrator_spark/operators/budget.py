@@ -14,8 +14,8 @@ The budget is a constant, not a function of ``spark.driver.memory``:
 the kernels hold their arrays in the Python driver process, not in the
 JVM heap. :func:`fits_driver` reads it on every call, so setting
 ``DRIVER_BUDGET_BYTES`` in-process reaches every gate; ``0`` forces
-every distributed route whose structure is non-empty (zero bytes still
-fit a zero budget).
+every distributed route, even for an empty structure (a positive
+budget still takes a structure of exactly its size on the driver).
 """
 
 from __future__ import annotations
@@ -25,5 +25,7 @@ DRIVER_BUDGET_BYTES = 512 << 20
 
 def fits_driver(nbytes: int | None) -> bool:
     """True when ``nbytes`` fit the driver budget. ``None`` (size
-    unknown) is False: an unknown size is treated as big."""
-    return nbytes is not None and nbytes <= DRIVER_BUDGET_BYTES
+    unknown) is False: an unknown size is treated as big. A zero budget
+    fits nothing."""
+    return (nbytes is not None and DRIVER_BUDGET_BYTES > 0
+            and nbytes <= DRIVER_BUDGET_BYTES)

@@ -1383,6 +1383,7 @@ def semantic_pairs_ivf(emb: DataFrame, threshold: float = 0.45,
     build pass ``n_clusters`` explicitly and accept the quantizer
     collect on first action."""
     from .ivf import bounded_sample_matrix, ivf_assign, train_centroids
+    from .knn import unit_rows
 
     n = None
     if n_clusters is None:
@@ -1411,17 +1412,15 @@ def semantic_pairs_ivf(emb: DataFrame, threshold: float = 0.45,
         assigned = assigned.join(F.broadcast(hot), "bucket", "left_anti")
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
+        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
+        keep, vn = unit_rows(
+            np.array(pdf[vec_col].tolist(), dtype=np.float64)[order])
+        ids = pdf[id_col].to_numpy()[order][keep]
+        n = len(ids)
         if n < 2:
             return pd.DataFrame({"id_a": pd.Series([], dtype="int64"),
                                  "id_b": pd.Series([], dtype="int64"),
                                  "cos_sim": pd.Series([], dtype="float64")})
-        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-        ids = pdf[id_col].to_numpy()[order]
-        v = np.array(pdf[vec_col].tolist(), dtype=np.float64)[order]
-        norms = np.linalg.norm(v, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        vn = v / norms
         chunk = max(1, chunk_cells // max(n, 1))
         outs_a, outs_b, outs_c = [], [], []
         for lo in range(0, n, chunk):

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .knn import _chunked_topk_rows, _collect_matrix
+from .knn import _chunked_topk_rows, _collect_matrix, unit_rows
 
 
 def train_centroids(emb: DataFrame, n_clusters: int = 256,
@@ -122,9 +122,9 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray, n_assign: int = 1,
     def assign_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cent = bc.value
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vn = v / np.linalg.norm(v, axis=1, keepdims=True)
+            raw = v.astype(np.float32)       # shipped as stored
+            keep, vn = unit_rows(v)
             sims = vn @ cent.T
             if n_assign == 1:
                 buckets = sims.argmax(axis=1)[:, None]
@@ -132,8 +132,8 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray, n_assign: int = 1,
                 buckets = np.argsort(-sims, axis=1)[:, :n_assign]
             reps = buckets.shape[1]
             yield pd.DataFrame({
-                id_col: np.repeat(ids, reps),
-                vec_col: list(np.repeat(v, reps, axis=0).astype(np.float32)),
+                id_col: np.repeat(pdf[id_col].to_numpy()[keep], reps),
+                vec_col: list(np.repeat(raw[keep], reps, axis=0)),
                 "bucket": buckets.reshape(-1).astype(np.int32),
             })
 
@@ -143,70 +143,48 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray, n_assign: int = 1,
 
 def ivf_search(index: DataFrame, queries: DataFrame, centroids: np.ndarray,
                n_probe: int = 8, k: int = 1,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               prune_buckets: bool = False) -> DataFrame:
+               id_col: str = "vec_id", vec_col: str = "embedding"
+               ) -> DataFrame:
     """Probe-bounded ANN search: each query meets only its n_probe
     buckets' vectors. Per-bucket cogrouped matmul (exact float64 cosine
     inside the bucket), then one window reduces bucket winners to the
     global top-k. Output: query_id, neighbor_id, approx_cos.
 
-    ``prune_buckets`` makes the probe bound an IO bound, not just a
-    compute bound: the distinct probed bucket ids (≤ |Q| × n_probe,
-    driver-bounded) become an isin filter on the index, which a
-    ``partitionBy("bucket")`` index layout turns into directory-level
-    partition pruning — the scan reads only the probed fraction of a
-    100 TB index. Without it the cogroup computes the same result but
-    SCANS the whole index (each unprobed bucket is read, shuffled, and
-    dropped as an empty cogroup).
-
-    SIDE EFFECT — why the default is False (r6 advisor): pruning runs
-    an EAGER Spark job at *call* time (localCheckpoint of the probe
-    pass + a distinct().collect() of probed bucket ids, bounded by
-    |Q| × n_probe ints) before any action on the returned DataFrame,
-    breaking the usual fully-lazy contract. Serving-style callers
-    (|Q| × n_probe far below the cluster count over a partitioned
-    index) should opt in with ``prune_buckets=True``; whole-corpus
-    callers like the registered `vec_ann_ivf_matmul` probe every
-    bucket anyway and would pay the extra job to filter nothing."""
+    Building the result starts no Spark job. The cogroup reads the
+    whole index and drops each unprobed bucket as an empty group; the
+    probe bound is a compute bound, not an IO bound (the one caller,
+    ``vec_ann_ivf_matmul``, probes every bucket anyway). All-zero
+    vectors have no cosine and get no rows (``knn.unit_rows``)."""
     spark = index.sparkSession
     bc = spark.sparkContext.broadcast(centroids)
 
     def probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cent = bc.value
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vn = v / np.linalg.norm(v, axis=1, keepdims=True)
+            raw = v.astype(np.float32)       # shipped as stored
+            keep, vn = unit_rows(v)
             sims = vn @ cent.T
             probes = np.argsort(-sims, axis=1)[:, :n_probe]
             reps = probes.shape[1]
             yield pd.DataFrame({
-                "query_id": np.repeat(ids, reps),
-                "_qv": list(np.repeat(v, reps, axis=0).astype(np.float32)),
+                "query_id": np.repeat(pdf[id_col].to_numpy()[keep], reps),
+                "_qv": list(np.repeat(raw[keep], reps, axis=0)),
                 "bucket": probes.reshape(-1).astype(np.int32),
             })
 
     probed = queries.select(id_col, vec_col).mapInPandas(
         probe_batches, "query_id long, _qv array<float>, bucket int")
 
-    if prune_buckets:
-        # Bounded driver collect (≤ |Q| × n_probe ints), then an isin
-        # filter the source can turn into partition pruning.
-        probed = probed.localCheckpoint(eager=True)  # probe once, not twice
-        bucket_ids = [int(r["bucket"]) for r in
-                      probed.select("bucket").distinct().collect()]
-        index = index.filter(F.col("bucket").isin(bucket_ids))
-
     def bucket_topk(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(q_pdf) == 0 or len(c_pdf) == 0:
             return pd.DataFrame(columns=["query_id", "neighbor_id", "approx_cos"])
-        q_ids = q_pdf["query_id"].to_numpy()
-        c_ids = c_pdf[id_col].to_numpy()
-        q = np.array(q_pdf["_qv"].tolist(), dtype=np.float64)
-        c = np.array(c_pdf[vec_col].tolist(), dtype=np.float64)
-        q /= np.linalg.norm(q, axis=1, keepdims=True)
-        c /= np.linalg.norm(c, axis=1, keepdims=True)
-        rows = _chunked_topk_rows(q_ids, q, c_ids, c, k)
+        q_keep, q = unit_rows(
+            np.array(q_pdf["_qv"].tolist(), dtype=np.float64))
+        c_keep, c = unit_rows(
+            np.array(c_pdf[vec_col].tolist(), dtype=np.float64))
+        rows = _chunked_topk_rows(q_pdf["query_id"].to_numpy()[q_keep], q,
+                                  c_pdf[id_col].to_numpy()[c_keep], c, k)
         return pd.DataFrame(rows,
                             columns=["query_id", "neighbor_id", "approx_cos"])
 

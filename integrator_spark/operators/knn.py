@@ -175,6 +175,23 @@ def knn_bruteforce(emb: DataFrame, id_col: str = "vec_id",
             .select("vec_id", "neighbor_id", F.col("_cos").alias("cos_sim")))
 
 
+def unit_rows(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The one zero-vector rule of the float-vector batch kernels:
+    returns ``(keep, unit)``, where ``keep`` marks the rows with a
+    nonzero L2 norm and ``unit`` holds those rows divided by their
+    norm. An all-zero vector has no cosine, so it is dropped, as the
+    relational routes drop its NULL cosines, instead of becoming a NaN
+    row that every scan would carry. When every row is kept, ``mat``
+    is divided in place and returned (no copy); callers that still
+    need the raw rows pass a copy or take them first."""
+    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+    keep = nrm[:, 0] > 0
+    if not keep.all():
+        mat, nrm = mat[keep], nrm[keep]
+    mat /= nrm
+    return keep, mat
+
+
 def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
     """Materialize (ids, L2-normalized float64 matrix) for broadcast.
     All-zero vectors are left out (id and row).
@@ -198,16 +215,8 @@ def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
     if not (lengths == dim).all():
         raise ValueError("ragged embedding column")
     flat = vecs.flatten().to_numpy(zero_copy_only=False)
-    mat = flat.astype(np.float64).reshape(len(ids), dim)
-    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-    # An all-zero vector has no cosine: drop its id and row, as the
-    # relational routes drop its NULL cosines, instead of normalizing
-    # it into a NaN row that every scan would carry.
-    keep = nrm[:, 0] > 0
-    if not keep.all():
-        ids, mat, nrm = ids[keep], mat[keep], nrm[keep]
-    mat /= nrm
-    return ids, mat
+    keep, mat = unit_rows(flat.astype(np.float64).reshape(len(ids), dim))
+    return ids[keep], mat
 
 
 def knn_blocked(emb: DataFrame, id_col: str = "vec_id",
@@ -222,10 +231,10 @@ def knn_blocked(emb: DataFrame, id_col: str = "vec_id",
         for pdf in batches:
             if not len(pdf):
                 continue
-            q_ids = pdf[id_col].to_numpy()
-            q = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            rows = _chunked_topk_rows(q_ids, q, cand_ids, cand, k)
+            keep, q = unit_rows(
+                np.array(pdf[vec_col].tolist(), dtype=np.float64))
+            rows = _chunked_topk_rows(pdf[id_col].to_numpy()[keep], q,
+                                      cand_ids, cand, k)
             yield pd.DataFrame(rows,
                                columns=["vec_id", "neighbor_id", "cos_sim"])
 
@@ -306,9 +315,9 @@ def cosine_pairs_blocked(emb: DataFrame, threshold: float,
     def pair_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cand_ids, cand = bc.value
         for pdf in batches:
-            all_ids = pdf[id_col].to_numpy()
-            all_q = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            all_q /= np.linalg.norm(all_q, axis=1, keepdims=True)
+            keep, all_q = unit_rows(
+                np.array(pdf[vec_col].tolist(), dtype=np.float64))
+            all_ids = pdf[id_col].to_numpy()[keep]
             for lo, hi in _q_chunks(len(all_ids), len(cand_ids)):
                 q_ids, q = all_ids[lo:hi], all_q[lo:hi]
                 sims = q @ cand.T
@@ -362,12 +371,12 @@ def cosine_pairs_twosided(emb: DataFrame, threshold: float,
                               "cos_sim": pd.Series(dtype=np.float64)})
         if len(q_pdf) == 0 or len(c_pdf) == 0:
             return empty
-        all_qids = q_pdf["vec_id"].to_numpy()
-        c_ids = c_pdf["nbr_id"].to_numpy()
-        all_q = np.array(q_pdf["_v"].tolist(), dtype=np.float64)
-        c = np.array(c_pdf["_cv"].tolist(), dtype=np.float64)
-        all_q /= np.linalg.norm(all_q, axis=1, keepdims=True)
-        c /= np.linalg.norm(c, axis=1, keepdims=True)
+        q_keep, all_q = unit_rows(
+            np.array(q_pdf["_v"].tolist(), dtype=np.float64))
+        c_keep, c = unit_rows(
+            np.array(c_pdf["_cv"].tolist(), dtype=np.float64))
+        all_qids = q_pdf["vec_id"].to_numpy()[q_keep]
+        c_ids = c_pdf["nbr_id"].to_numpy()[c_keep]
         diagonal = q_pdf["_qb"].iat[0] == q_pdf["_cb"].iat[0]
         outs = []
         for b0, b1 in _q_chunks(len(all_qids), len(c_ids)):
@@ -437,9 +446,9 @@ def knn_search_broadcast(corpus: DataFrame, queries: DataFrame,
     def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qi, qm = bc.value
         for pdf in batches:
-            c_ids = pdf[id_col].to_numpy()
-            c = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True)
+            keep, c = unit_rows(
+                np.array(pdf[vec_col].tolist(), dtype=np.float64))
+            c_ids = pdf[id_col].to_numpy()[keep]
             # queries are the small side: the kernel chunks THEM
             rows = _chunked_topk_rows(qi, qm, c_ids, c, k)
             yield pd.DataFrame(rows,
@@ -490,12 +499,12 @@ def knn_blocked_twosided(emb: DataFrame, id_col: str = "vec_id",
     def block_topk(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(q_pdf) == 0 or len(c_pdf) == 0:
             return pd.DataFrame(columns=["vec_id", "neighbor_id", "cos_sim"])
-        q_ids = q_pdf["vec_id"].to_numpy()
-        c_ids = c_pdf["nbr_id"].to_numpy()
-        q = np.array(q_pdf["_v"].tolist(), dtype=np.float64)
-        c = np.array(c_pdf["_cv"].tolist(), dtype=np.float64)
-        q /= np.linalg.norm(q, axis=1, keepdims=True)
-        c /= np.linalg.norm(c, axis=1, keepdims=True)
+        q_keep, q = unit_rows(
+            np.array(q_pdf["_v"].tolist(), dtype=np.float64))
+        c_keep, c = unit_rows(
+            np.array(c_pdf["_cv"].tolist(), dtype=np.float64))
+        q_ids = q_pdf["vec_id"].to_numpy()[q_keep]
+        c_ids = c_pdf["nbr_id"].to_numpy()[c_keep]
         rows = _chunked_topk_rows(q_ids, q, c_ids, c, k)
         return pd.DataFrame(rows, columns=["vec_id", "neighbor_id", "cos_sim"])
 

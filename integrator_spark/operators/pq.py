@@ -13,14 +13,21 @@ m=8 codes (8 B): 32× less storage AND 32× less scan IO, which at the
 a merely-large one.
 
 Search is ADC (asymmetric distance computation): each query builds an
-m × ksub lookup table of subvector inner products ONCE, then any
-corpus vector's approximate cosine is m table lookups + adds — no
-per-pair float math at all. The scan over codes is embarrassingly
-partition-parallel (broadcast LUTs, mapInPandas over the code table),
-followed by a relational top-``shortlist`` window and an EXACT rerank
-of the shortlist against the true vectors — the standard
+m × ksub lookup table of subvector inner products ONCE (``_lut``), then
+any corpus vector's approximate cosine is m table lookups + adds — no
+per-pair float math at all. One kernel, ``_adc_top``, scores every
+route: flat PQ's broadcast scan (per Arrow batch), its blocked cogroup
+grid and IVF-PQ's bucket cogroup (which adds the q·centroid offset).
+A relational top-``shortlist`` window follows, then an EXACT rerank of
+the shortlist against the true vectors — the standard
 shortlist-then-rerank recipe that restores recall lost to
 quantization.
+
+Flat PQ is IVF-PQ with one zero cell: ``pq_train`` and ``pq_encode``
+call ``ivfpq_train`` / ``ivfpq_encode`` with ``centroids`` = one zero
+row, where every residual is the vector itself (codebook and codes are
+bit-identical to a separate flat trainer). All-zero vectors have no
+cosine and get no rows on any route (``knn.unit_rows``).
 
 Determinism: k-means uses the same bounded hash-sample + seeded-RNG
 discipline as operators/ivf.train_centroids (per-subspace seed
@@ -33,12 +40,14 @@ at the registered dials; 256×256 subspace dials are < 2 MB) — always
 broadcastable. Query LUTs are Q × m × ksub doubles and are
 SIZE-ROUTED on the driver budget (operators/budget.py): under the
 budget the whole LUT block is collected + broadcast once (zero
-shuffle); above it the LUT rows are computed executor-side in a
+shuffle); above it unit query rows are computed executor-side in a
 ``mapInPandas`` and meet code blocks in a cogrouped grid — the driver
 never materializes the query set at any Q. Both routes are
 byte-identical (float64 LUTs, the same quantized tie-exact selection).
 The code table shuffles NOTHING during the broadcast-route scan; only
 (query_id, neighbor_id, adc) shortlist rows (Q × shortlist) ever move.
+IVF-PQ has no bucket-pruning or hot-cell salting option: it reads
+every cell and scores each cell in one cogroup task.
 """
 
 from __future__ import annotations
@@ -52,7 +61,7 @@ from pyspark.sql import functions as F
 
 from . import budget
 from .ivf import bounded_sample_matrix
-from .knn import _dot_expr
+from .knn import _collect_matrix, _dot_expr, unit_rows
 
 
 def _train_codebook(mat: np.ndarray, m: int, ksub: int, iters: int,
@@ -95,7 +104,7 @@ def _train_codebook(mat: np.ndarray, m: int, ksub: int, iters: int,
 #: id everywhere. Without this, argpartition's arbitrary tie handling
 #: inside a kernel could keep a different member of a tied set than
 #: the window's (adc DESC, id ASC) spec — the result would then depend
-#: on partitioning/salting (caught by the hot-bucket invariance test).
+#: on partitioning (pinned by the route/partition tests).
 _ADC_SCALE = float(1 << 40)
 
 
@@ -105,7 +114,7 @@ def _chunk_topk(c_ids: np.ndarray, kq: np.ndarray, top: int
     same ASCENDING-id candidate axis: pack (kq << 20) - position into
     one int64 key so a single argpartition is tie-exact (smaller
     position == smaller id wins equal kq). Requires chunk width < 2^20
-    (callers clamp) and |score| < 4 (true of cosine-family sums)."""
+    (``_adc_top`` clamps) and |score| < 4 (true of cosine-family sums)."""
     nq, width = kq.shape
     if width <= top:
         return np.broadcast_to(c_ids, (nq, width)), kq
@@ -148,11 +157,15 @@ def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16,
     train_centroids — the driver holds ≤ sample_rows × dim float64).
     Returns codebook [m, ksub, dsub] over L2-NORMALIZED vectors, so
     summed subspace inner products approximate full-vector cosine.
-    ``sample_mat`` (a precollected bounded sample) skips the count +
-    collect passes — see train_centroids for the fusion contract."""
+    This is :func:`ivfpq_train` with one zero cell: every residual is
+    the vector itself. ``sample_mat`` (a precollected bounded sample)
+    skips the count + collect passes — see train_centroids for the
+    fusion contract."""
     mat = (sample_mat if sample_mat is not None
            else bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
-    return _train_codebook(mat, m, ksub, iters, seed)
+    return ivfpq_train(emb, np.zeros((1, mat.shape[1])), m, ksub,
+                       sample_rows, iters, id_col, vec_col, seed,
+                       sample_mat=mat)
 
 
 def pq_encode(emb: DataFrame, codebook: np.ndarray,
@@ -165,40 +178,82 @@ def pq_encode(emb: DataFrame, codebook: np.ndarray,
     layout spends 4 B + list overhead per 1-byte code and parquet
     stores residual-ADC codes near their ~log2(ksub)-bit entropy only
     when they arrive as raw bytes (measured on the 1.1M corpus —
-    SCALING.md round 7). One broadcast + one Arrow-batched matmul per
-    subspace; zero shuffle."""
-    if codebook.shape[1] > 256:
-        raise ValueError("pq_encode: byte-packed codes need ksub <= 256")
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast(codebook)
+    SCALING.md round 7). This is :func:`ivfpq_encode` with one zero
+    cell, minus its bucket column; zero shuffle."""
+    m, _ksub, dsub = codebook.shape
+    return ivfpq_encode(emb, np.zeros((1, m * dsub)), codebook,
+                        id_col=id_col, vec_col=vec_col).drop("bucket")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cb = bc.value
-        m, _ksub, dsub = cb.shape
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            v = v / norms
-            codes = np.empty((len(v), m), dtype=np.uint8)
-            for j in range(m):
-                sub = v[:, j * dsub:(j + 1) * dsub]
-                score = 2.0 * (sub @ cb[j].T) - (cb[j] * cb[j]).sum(axis=1)
-                codes[:, j] = score.argmax(axis=1)
-            yield pd.DataFrame({id_col: ids,
-                                "codes": [r.tobytes() for r in codes]})
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        encode, f"{id_col} long, codes binary")
+def _lut(qv: np.ndarray, codebook: np.ndarray) -> np.ndarray:
+    """Query LUTs [nq, m·ksub] from unit query rows: LUT[q, j·ksub + c]
+    = q_sub_j · codebook[j, c]. Summed over j it is the ADC
+    approximation of cos(q, x) for any code row x."""
+    m, ksub, dsub = codebook.shape
+    return np.einsum("qjd,jcd->qjc", qv.reshape(len(qv), m, dsub),
+                     codebook).reshape(len(qv), m * ksub)
+
+
+def _adc_top(q_ids: np.ndarray, lut: np.ndarray, c_ids: np.ndarray,
+             codes: pd.Series, m: int, ksub: int, top: int,
+             exclude_self: bool, off: np.ndarray | None = None
+             ) -> tuple[np.ndarray, np.ndarray]:
+    """The one ADC scan kernel: every query row against every packed
+    code row, score[q, i] = off[q] + Σ_j lut[q, j·ksub + code_ij]
+    (``off`` is IVF-PQ's q·centroid term; flat PQ has none), quantized
+    to the ``_ADC_SCALE`` grid. Returns the per-query top-``top``
+    (ids, quantized scores) by (score DESC, id ASC), the order every
+    later window uses, so the top of any split of the codes merges into
+    the top of the whole (``_merge_topk``).
+
+    Candidates are sorted by id (``_chunk_topk``'s positional
+    tie-break then IS the id tie-break) and scored in chunks: the
+    gather intermediate is nq × chunk × m cells, capped at 32M
+    (≈ 256 MB) — unchunked, a 10k-row Arrow batch × 2,000 queries × m=8
+    would be a 1.3 GB buffer per task (the failure mode the 1.1M kNN
+    run exposed in round 6, see operators/knn.py). With
+    ``exclude_self`` the self-pair is masked BEFORE truncation (like
+    knn._chunked_topk_rows): a self-pair holding a slot and dying in
+    the later filter would shrink this call's top to top-1 and make
+    results depend on where the self-pair landed."""
+    o = np.argsort(c_ids, kind="stable")
+    c_ids = c_ids[o]
+    cd = (_unpack_codes(codes, m) + np.arange(m) * ksub)[o]
+    chunk = min(max(1, 32_000_000 // max(1, len(q_ids) * m)),
+                (1 << 20) - 1)
+    ids_l = [np.empty((len(q_ids), 0), dtype=np.int64)]
+    kq_l = [np.empty((len(q_ids), 0), dtype=np.int64)]
+    for s in range(0, len(c_ids), chunk):
+        score = lut[:, cd[s:s + chunk]].sum(axis=2)
+        if off is not None:
+            score = off[:, None] + score
+        kq = np.round(score * _ADC_SCALE).astype(np.int64)
+        if exclude_self:
+            kq[q_ids[:, None] == c_ids[None, s:s + chunk]] = -(1 << 41)
+        ids_c, kq_c = _chunk_topk(c_ids[s:s + chunk], kq, top)
+        ids_l.append(ids_c)
+        kq_l.append(kq_c)
+    return _merge_topk(np.concatenate(ids_l, axis=1),
+                       np.concatenate(kq_l, axis=1), top)
+
+
+_ADC_ROWS = "query_id long, neighbor_id long, _adc double"
+
+
+def _adc_rows(q_ids: np.ndarray, ids_m: np.ndarray, kq_m: np.ndarray
+              ) -> pd.DataFrame:
+    """``_ADC_ROWS`` frame of an ``_adc_top`` result."""
+    return pd.DataFrame({"query_id": np.repeat(q_ids, ids_m.shape[1]),
+                         "neighbor_id": ids_m.reshape(-1),
+                         "_adc": kq_m.reshape(-1) / _ADC_SCALE})
 
 
 #: Code rows per cogroup block on the blocked route: applyInPandas
 #: materializes one (query-block × code-block) group per task, so this
 #: bounds the per-task code residency (~(8 + m) bytes/row packed;
 #: 4M rows × m=8 ≈ 64 MB as pandas). The in-kernel scoring is further
-#: chunked (see the 32M-cell gather cap), so this only sizes the
-#: group materialization, not the score buffer.
+#: chunked (see ``_adc_top``), so this only sizes the group
+#: materialization, not the score buffer.
 CODE_BLOCK_ROWS = 4_000_000
 
 
@@ -223,12 +278,11 @@ def pq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
     against hash-blocked code groups in a cogrouped grid — no driver
     collect of anything query-sized, per-task residency bounded by the
     budget (query blocks) and ``CODE_BLOCK_ROWS`` (code blocks). Both
-    routes produce byte-identical rows: LUTs are float64 on both,
-    per-pair ADC sums are the same gather+sum, and every truncation is
-    tie-exact by (quantized score DESC, id ASC) — block-level tops are
-    supersets of the global top the final window extracts
-    (route-equivalence pinned in tests with a collect-forbidding
-    monkeypatch)."""
+    routes score with ``_adc_top`` on float64 LUTs and return the same
+    rows: every truncation is tie-exact by (quantized score DESC,
+    id ASC), so block-level tops are supersets of the global top the
+    final window extracts (route-equivalence pinned in tests with a
+    collect-forbidding monkeypatch). All-zero vectors get no rows."""
     spark = codes.sparkSession
     m, ksub, dsub = codebook.shape
     dim = m * dsub
@@ -257,102 +311,48 @@ def _adc_scan_broadcast(codes: DataFrame, queries: DataFrame,
                         id_col: str, vec_col: str,
                         exclude_self: bool) -> DataFrame:
     """Under-budget ADC scan: collect + broadcast the full query LUT
-    block, mapInPandas over the code table (zero shuffle); emits
-    per-partition top-``shortlist`` candidate rows."""
+    block, mapInPandas over the code table (zero shuffle). Each Arrow
+    batch runs ``_adc_top``; the batch tops merge into one
+    per-partition top-``shortlist``, so the relational window that
+    follows sees n_partitions × Q × shortlist rows, independent of
+    corpus size."""
     spark = codes.sparkSession
-    qpdf = (queries.select(F.col(id_col).alias("query_id"), vec_col)
-            .toPandas())
-    qids = qpdf["query_id"].to_numpy()
-    qv = np.array(qpdf[vec_col].tolist(), dtype=np.float64)
-    qn = np.linalg.norm(qv, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    qv = qv / qn
-    m, ksub, dsub = codebook.shape
-    # LUT[q, j, c] = q_sub_j · centroid_jc ; summed over j it is the
-    # ADC approximation of cos(q, x) for any code row x.
-    lut = np.einsum("qjd,jcd->qjc",
-                    qv.reshape(len(qv), m, dsub), codebook)
-    bc = spark.sparkContext.broadcast((qids, lut.reshape(len(qv), m * ksub)))
-    offsets = (np.arange(m) * ksub).astype(np.int64)
-    # Gather-buffer cap: the scoring intermediate is Q × chunk × m
-    # float64 cells; unchunked it scales with the Arrow batch size and
-    # at 10k-row batches × 2000 queries × m=8 would be a 1.3 GB buffer
-    # PER TASK (the exact failure mode the 1.1M kNN run exposed in
-    # round 6 — see operators/knn.py). 32M cells ≈ 256 MB.
-    max_cells = 32_000_000
+    q_ids, qv = _collect_matrix(queries, id_col, vec_col)
+    bc = spark.sparkContext.broadcast((q_ids, _lut(qv, codebook)))
+    m, ksub, _dsub = codebook.shape
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, lutr = bc.value
-        nq = len(q_ids)
-        top = min(shortlist, 10_000)
-        chunk = min(max(1, max_cells // max(1, nq * m)), (1 << 20) - 1)
-        # Per-PARTITION running top-`top`: chunks contribute candidate
-        # (id, kq) blocks; one merge at iterator end emits Q × top
-        # rows per partition total — the relational window that follows
-        # sees n_partitions × Q × top rows, independent of corpus size.
-        # All selection is tie-exact by (quantized score DESC, id ASC),
-        # matching the window spec (see _ADC_SCALE).
-        cand_ids: list[np.ndarray] = []
-        cand_kq: list[np.ndarray] = []
-        for pdf in batches:
-            c_ids_all = pdf[id_col].to_numpy()
-            cd_all = _unpack_codes(pdf["codes"], m) + offsets
-            # Ascending-id candidate axis: _chunk_topk's positional
-            # tiebreak then IS the id tiebreak.
-            o = np.argsort(c_ids_all, kind="stable")
-            c_ids_all, cd_all = c_ids_all[o], cd_all[o]
-            for s in range(0, len(c_ids_all), chunk):
-                c_ids = c_ids_all[s:s + chunk]
-                cd = cd_all[s:s + chunk]
-                # scores[q, i] = Σ_j lutr[q, cd[i, j]] — gather + sum.
-                kq = np.round(lutr[:, cd].sum(axis=2)
-                              * _ADC_SCALE).astype(np.int64)
-                if exclude_self:
-                    # Mask BEFORE truncation (like knn._chunked_topk_
-                    # rows): a self-pair holding a shortlist slot and
-                    # dying in the later filter would silently shrink
-                    # this kernel's contribution to top-(top-1) — and
-                    # make results depend on which shard the self-pair
-                    # landed in.
-                    kq[q_ids[:, None] == c_ids[None, :]] = -(1 << 41)
-                ids_c, kq_c = _chunk_topk(c_ids, kq, top)
-                cand_ids.append(ids_c)
-                cand_kq.append(kq_c)
-        if not cand_ids:
-            return
-        ids_m = np.concatenate(cand_ids, axis=1)      # [Q, Σ chunk tops]
-        kq_m = np.concatenate(cand_kq, axis=1)
-        ids_m, kq_m = _merge_topk(ids_m, kq_m, top)
-        width = ids_m.shape[1]
-        yield pd.DataFrame({"query_id": np.repeat(q_ids, width),
-                            "neighbor_id": ids_m.reshape(-1),
-                            "_adc": kq_m.reshape(-1) / _ADC_SCALE})
+        q_ids, lut = bc.value
+        tops = [_adc_top(q_ids, lut, pdf[id_col].to_numpy(), pdf["codes"],
+                         m, ksub, shortlist, exclude_self)
+                for pdf in batches]
+        if tops:
+            yield _adc_rows(q_ids, *_merge_topk(
+                np.concatenate([t[0] for t in tops], axis=1),
+                np.concatenate([t[1] for t in tops], axis=1), shortlist))
 
-    return codes.mapInPandas(
-        adc, "query_id long, neighbor_id long, _adc double")
+    return codes.mapInPandas(adc, _ADC_ROWS)
 
 
 def _adc_scan_blocked(codes: DataFrame, queries: DataFrame,
                       codebook: np.ndarray, shortlist: int,
                       id_col: str, vec_col: str, exclude_self: bool,
                       nq: int) -> DataFrame:
-    """Over-budget ADC scan: LUT rows are computed executor-side
+    """Over-budget ADC scan: unit query rows are computed executor-side
     (mapInPandas — only the tiny codebook broadcasts) and meet the code
     table in a (query-block × code-block) cogrouped grid, the same
     two-sided blocked shape as knn.cosine_pairs_twosided / the ivfpq
     bucket cogroup. Zero driver collects of query- or corpus-sized
     data; per-task residency ≤ one query block's float64 LUTs
     (≤ the driver budget) + one code block (≤ CODE_BLOCK_ROWS rows).
-    Shuffle: LUT rows replicate ×n_code_blocks and code rows
+    Shuffle: query rows replicate ×n_code_blocks and code rows
     ×n_query_blocks — the price of a flat full scan at a Q that
     doesn't fit anywhere whole. Emits per-(block-pair)
     top-``shortlist`` rows; every (query, code) pair is scored exactly
     once (each side lives in exactly one block), so the caller's
     global window needs no dedup."""
     spark = codes.sparkSession
-    m, ksub, dsub = codebook.shape
-    bc = spark.sparkContext.broadcast(codebook)
-    offsets = (np.arange(m) * ksub).astype(np.int64)
+    m, ksub, _dsub = codebook.shape
     # Block counts: query blocks sized so one block's LUTs fit the same
     # budget the broadcast route enforces (at most one block per query,
     # which is what a zero budget runs); code blocks by row count.
@@ -369,24 +369,20 @@ def _adc_scan_blocked(codes: DataFrame, queries: DataFrame,
     if qb_n * cb_n < par:
         cb_n = -(-par // qb_n)
 
-    def mk_lut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def unit_queries(batches: Iterator[pd.DataFrame]
+                     ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            v = v / norms
-            # Ship the normalized query vector, not the m x ksub LUT:
-            # the LUT is 8x wider at the default dials AND replicates
-            # x n_code_blocks onto the grid — block_adc recomputes it
-            # per block in float64 (NOT float32 like ivfpq's probe
-            # rows), byte-identical to the broadcast route's einsum
-            # (the route-equivalence test relies on it).
-            yield pd.DataFrame({"query_id": ids, "_qv": list(v)})
+            keep, v = unit_rows(
+                np.array(pdf[vec_col].tolist(), dtype=np.float64))
+            # Ship the unit query vector, not the m x ksub LUT: the LUT
+            # is 8x wider at the default dials AND replicates
+            # x n_code_blocks onto the grid. The kernel rebuilds it per
+            # block in float64, the broadcast route's LUT bit for bit.
+            yield pd.DataFrame({"query_id": pdf[id_col].to_numpy()[keep],
+                                "_qv": list(v)})
 
-    lut_rows = queries.select(id_col, vec_col).mapInPandas(
-        mk_lut, "query_id long, _qv array<double>")
-    q_side = (lut_rows
+    q_side = (queries.select(id_col, vec_col)
+              .mapInPandas(unit_queries, "query_id long, _qv array<double>")
               .withColumn("_qb", F.pmod(F.xxhash64("query_id"),
                                         F.lit(qb_n)).cast("int"))
               .withColumn("_cb", F.explode(F.sequence(
@@ -396,53 +392,21 @@ def _adc_scan_blocked(codes: DataFrame, queries: DataFrame,
                                         F.lit(int(cb_n))).cast("int"))
               .withColumn("_qb", F.explode(F.sequence(
                   F.lit(0), F.lit(int(qb_n) - 1)))))
+    bc = spark.sparkContext.broadcast(codebook)
 
     def block_adc(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return pd.DataFrame({
-                "query_id": pd.Series(dtype=np.int64),
-                "neighbor_id": pd.Series(dtype=np.int64),
-                "_adc": pd.Series(dtype=np.float64)})
+            return pd.DataFrame(columns=["query_id", "neighbor_id", "_adc"])
         q_ids = q_pdf["query_id"].to_numpy()
-        qv = np.array(q_pdf["_qv"].tolist(), dtype=np.float64)
-        lutr = np.einsum("qjd,jcd->qjc", qv.reshape(len(qv), m, dsub),
-                         bc.value).reshape(len(qv), m * ksub)
-        c_ids = c_pdf[id_col].to_numpy()
-        cd = _unpack_codes(c_pdf["codes"], m) + offsets
-        # Ascending-id candidate axis for tie-exact selection (see
-        # _ADC_SCALE / _chunk_topk).
-        o = np.argsort(c_ids, kind="stable")
-        c_ids, cd = c_ids[o], cd[o]
-        top = min(shortlist, 10_000)
-        # Same 32M-cell gather cap as the broadcast kernel.
-        chunk = min(max(1, 32_000_000 // max(1, len(q_ids) * m)),
-                    (1 << 20) - 1)
-        best_ids: list[np.ndarray] = []
-        best_kq: list[np.ndarray] = []
-        for s in range(0, len(c_ids), chunk):
-            kq = np.round(lutr[:, cd[s:s + chunk]].sum(axis=2)
-                          * _ADC_SCALE).astype(np.int64)
-            if exclude_self:
-                # Pre-truncation self-mask — same reasoning as the
-                # broadcast kernel: a self-pair must not hold a
-                # shortlist slot in only SOME block assignments.
-                kq[q_ids[:, None] == c_ids[s:s + chunk][None, :]] \
-                    = -(1 << 41)
-            ids_c, kq_c = _chunk_topk(c_ids[s:s + chunk], kq, top)
-            best_ids.append(ids_c)
-            best_kq.append(kq_c)
-        ids_m = np.concatenate(best_ids, axis=1)
-        kq_m = np.concatenate(best_kq, axis=1)
-        ids_m, kq_m = _merge_topk(ids_m, kq_m, top)
-        return pd.DataFrame({
-            "query_id": np.repeat(q_ids, ids_m.shape[1]),
-            "neighbor_id": ids_m.reshape(-1),
-            "_adc": kq_m.reshape(-1) / _ADC_SCALE})
+        lut = _lut(np.array(q_pdf["_qv"].tolist(), dtype=np.float64),
+                   bc.value)
+        return _adc_rows(q_ids, *_adc_top(
+            q_ids, lut, c_pdf[id_col].to_numpy(), c_pdf["codes"], m, ksub,
+            shortlist, exclude_self))
 
     return (q_side.groupBy("_qb", "_cb")
             .cogroup(c_side.groupBy("_qb", "_cb"))
-            .applyInPandas(lambda ql, cl: block_adc(ql, cl),
-                           "query_id long, neighbor_id long, _adc double"))
+            .applyInPandas(block_adc, _ADC_ROWS))
 
 
 def _exact_rerank(short: DataFrame, base: DataFrame, queries: DataFrame,
@@ -465,11 +429,10 @@ def _exact_rerank(short: DataFrame, base: DataFrame, queries: DataFrame,
             for pdf in batches:
                 if not len(pdf):
                     continue
-                v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                n = np.linalg.norm(v, axis=1, keepdims=True)
-                n[n == 0] = 1.0
-                yield pd.DataFrame({"_id": pdf[id_col].to_numpy(),
-                                    col_alias: list(v / n)})
+                keep, v = unit_rows(
+                    np.array(pdf[vec_col].tolist(), dtype=np.float64))
+                yield pd.DataFrame({"_id": pdf[id_col].to_numpy()[keep],
+                                    col_alias: list(v)})
         return norm_rows
 
     bnorm = (base.select(id_col, vec_col)
@@ -537,16 +500,13 @@ def ivfpq_encode(emb: DataFrame, centroids: np.ndarray,
         cent, cb = bc.value
         m, _ksub, dsub = cb.shape
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            v = v / norms
+            keep, v = unit_rows(
+                np.array(pdf[vec_col].tolist(), dtype=np.float64))
             sims = v @ cent.T
             na = min(n_assign, cent.shape[0])
             buckets = (sims.argmax(axis=1)[:, None] if na == 1
                        else np.argsort(-sims, axis=1)[:, :na])
-            rep_ids = np.repeat(ids, na)
+            rep_ids = np.repeat(pdf[id_col].to_numpy()[keep], na)
             rep_buckets = buckets.reshape(-1)
             resid = np.repeat(v, na, axis=0) - cent[rep_buckets]
             codes = np.empty((len(resid), m), dtype=np.uint8)
@@ -566,10 +526,7 @@ def ivfpq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
                  centroids: np.ndarray, codebook: np.ndarray,
                  n_probe: int = 8, k: int = 1, shortlist: int = 32,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 exclude_self: bool = False,
-                 split_hot_buckets: bool = False,
-                 hot_bucket_rows: int = 250_000,
-                 prune_buckets: bool = False) -> DataFrame:
+                 exclude_self: bool = False) -> DataFrame:
     """The combined 100 TB index: IVF probe pruning × PQ code
     compression (faiss IVFPQ as a DataFrame pipeline). Each query meets
     only its ``n_probe`` buckets' CODE rows — scan fraction ~n_probe /
@@ -581,54 +538,30 @@ def ivfpq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
 
     Plan shape: probe assignment is one Arrow matmul over the queries;
     the bucket-local ADC is a cogroup on bucket (co-partitioned with a
-    partitionBy("bucket") layout — no wide shuffle of codes); only
-    (query, neighbor) shortlist rows reach the global window.
-
-    SKEW: k-means cells on real corpora are heavily imbalanced (a hot
-    cell can hold 10-100× the mean), and a cogroup task processes one
-    whole key — a hot cell is one straggler doing |cell| × its-probes
-    work while 999 tasks idle. ``split_hot_buckets`` salts any bucket
-    whose code-row count exceeds ``hot_bucket_rows`` into
-    ceil(count/hot_bucket_rows) sub-keys (codes side: hash-of-id salt;
-    probe side: replicated across the salts), so the per-task bound is
-    hot_bucket_rows regardless of cell skew. Costs one bounded
-    count-by-bucket pass (≤ n_cells rows to the driver) + probe-row
-    replication on the hot cells only. With n_assign=1 indexes the
-    result is EXACTLY invariant (each pair is scored once with one
-    value; shard-level top-shortlists are supersets of bucket-level
-    ones, and both contain the true global ADC top-shortlist the
-    window extracts). With multi-assignment replicas the marginal
-    shortlist tail can differ: per-bucket truncation may drop one
-    replica of a pair that the finer shard truncation keeps, changing
-    that pair's max-ADC — recall-neutral-or-better (strictly more
-    candidates survive to the exact rerank), but not byte-identical;
-    the invariance test pins the n_assign=1 contract."""
+    partitionBy("bucket") layout — no wide shuffle of codes) scored by
+    ``_adc_top``; only (query, neighbor) shortlist rows reach the
+    global window. Building the result starts no Spark job. One cogroup
+    task scores one whole cell, and every cell is read (unprobed cells
+    drop out as empty groups). All-zero vectors get no rows."""
     spark = codes.sparkSession
-    m, ksub, dsub = codebook.shape
-    bc = spark.sparkContext.broadcast((centroids, codebook))
+    bc = spark.sparkContext.broadcast(centroids)
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cent, cb = bc.value
+        cent = bc.value
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            v = v / norms
+            keep, v = unit_rows(
+                np.array(pdf[vec_col].tolist(), dtype=np.float64))
             sims = v @ cent.T
             probes = np.argsort(-sims, axis=1)[:, :n_probe]
             reps = probes.shape[1]
-            # Ship the NORMALIZED query vector (dim doubles), not the
+            # Ship the unit query vector (dim doubles), not the
             # m x ksub LUT: the LUT is 8x wider (512 float32 vs 64
             # float64 at the default dials) and building the
             # object-array LUT column dominated the probe task's wall
             # (measured 3.7 s of a 8 s sf0.1 serve, 27 MB shuffle —
-            # round-11 serve root-cause). bucket_adc recomputes the
-            # LUT per probed row from _qv with the IDENTICAL float32
-            # rounding (einsum -> float32 -> float64), so scores are
-            # bit-for-bit what the shipped-LUT plan produced.
+            # round-11 serve root-cause).
             yield pd.DataFrame({
-                "query_id": np.repeat(ids, reps),
+                "query_id": np.repeat(pdf[id_col].to_numpy()[keep], reps),
                 "bucket": probes.reshape(-1).astype(np.int32),
                 "_off": np.take_along_axis(sims, probes, axis=1)
                           .reshape(-1),
@@ -637,110 +570,26 @@ def ivfpq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
 
     probed = queries.select(id_col, vec_col).mapInPandas(
         probe, "query_id long, bucket int, _off double, _qv array<double>")
-    offsets = (np.arange(m) * ksub).astype(np.int64)
-
-    if prune_buckets:
-        # Same opt-in (and same EAGER-job caveat) as ivf_search's
-        # pruning: the distinct probed cell ids (≤ |Q| × n_probe ints,
-        # driver-bounded) become an isin filter a partitionBy("bucket")
-        # code layout turns into directory pruning — a serving batch
-        # reads ~|Q| × n_probe / n_cells of the code table instead of
-        # scanning-and-dropping every unprobed cell as an empty
-        # cogroup. Opt-in because constructing the result then runs a
-        # probe job at call time.
-        probed = probed.localCheckpoint(eager=True)   # probe once
-        bucket_ids = [int(r["bucket"]) for r in
-                      probed.select("bucket").distinct().collect()]
-        codes = codes.filter(F.col("bucket").isin(bucket_ids))
-
-    group_keys = ["bucket"]
-    if split_hot_buckets:
-        # Bounded driver collect: one row per NON-EMPTY cell (≤ n_cells).
-        sizes = {r["bucket"]: r["n"] for r in
-                 codes.groupBy("bucket")
-                 .agg(F.count(F.lit(1)).alias("n")).collect()}
-        splits = {b: -(-n // hot_bucket_rows) for b, n in sizes.items()
-                  if n > hot_bucket_rows}
-        if splits:
-            splits_df = F.broadcast(spark.createDataFrame(
-                [(b, s) for b, s in sorted(splits.items())],
-                "bucket int, _ns int"))
-            # Codes side: deterministic hash-of-id salt in [0, _ns).
-            codes = (codes.join(splits_df, "bucket", "left")
-                     .withColumn("_salt",
-                                 F.when(F.col("_ns").isNull(), F.lit(0))
-                                 .otherwise(F.pmod(F.xxhash64(id_col),
-                                                   F.col("_ns"))
-                                            .cast("int")))
-                     .drop("_ns"))
-            # Probe side: replicate each probed (query, hot bucket) row
-            # across that bucket's salts; cold buckets keep salt 0.
-            probed = (probed.join(splits_df, "bucket", "left")
-                      .withColumn(
-                          "_salt",
-                          F.explode(F.sequence(
-                              F.lit(0),
-                              F.coalesce(F.col("_ns"), F.lit(1)) - 1)))
-                      .withColumn("_salt", F.col("_salt").cast("int"))
-                      .drop("_ns"))
-            group_keys = ["bucket", "_salt"]
+    bc_cb = spark.sparkContext.broadcast(codebook)
+    m, ksub, _dsub = codebook.shape
 
     def bucket_adc(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "neighbor_id", "_adc"]
         if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return pd.DataFrame(columns=cols)
-        c_ids = c_pdf[id_col].to_numpy()
-        cd = _unpack_codes(c_pdf["codes"], m) + offsets
-        # Ascending-id candidate axis for tie-exact selection (see
-        # _ADC_SCALE / _chunk_topk).
-        o = np.argsort(c_ids, kind="stable")
-        c_ids, cd = c_ids[o], cd[o]
+            return pd.DataFrame(columns=["query_id", "neighbor_id", "_adc"])
         q_ids = q_pdf["query_id"].to_numpy()
-        off = q_pdf["_off"].to_numpy()
-        # LUT[j, c] = q_sub_j · codebook[j, c], recomputed here from
-        # the normalized query vector. The float32 round-trip
-        # reproduces the shipped-LUT encoding exactly (the wire
-        # format was array<float>), so ADC scores are unchanged.
-        _, cbk = bc.value
-        qv = np.array(q_pdf["_qv"].tolist(), dtype=np.float64)
-        lut = (np.einsum("qjd,jcd->qjc", qv.reshape(len(qv), m, dsub),
-                         cbk)
-               .reshape(len(qv), m * ksub)
+        # IVF-PQ scores with float32-rounded LUTs: the rounding of the
+        # array<float> LUT column the probe once shipped, which its
+        # measured rows and recall keep.
+        lut = (_lut(np.array(q_pdf["_qv"].tolist(), dtype=np.float64),
+                    bc_cb.value)
                .astype(np.float32).astype(np.float64))
-        # Same gather-buffer cap as the flat-ADC kernel: a skewed cell
-        # (or a hot serving bucket) must not materialize Q × |cell| × m
-        # at once; chunk the cell and keep a running per-query top.
-        chunk = min(max(1, 32_000_000 // max(1, len(q_ids) * m)),
-                    (1 << 20) - 1)
-        top = min(shortlist, 10_000)
-        best_ids: list[np.ndarray] = []
-        best_kq: list[np.ndarray] = []
-        for s in range(0, len(c_ids), chunk):
-            # scores[q, i] = q·cent[b] + Σ_j LUT[q, cd[i, j]]
-            kq = np.round((off[:, None] + lut[:, cd[s:s + chunk]]
-                           .sum(axis=2)) * _ADC_SCALE).astype(np.int64)
-            if exclude_self:
-                # Same pre-truncation self-mask as the flat kernel —
-                # without it the result depends on which shard the
-                # self-pair lands in (see that comment).
-                kq[q_ids[:, None] == c_ids[s:s + chunk][None, :]] \
-                    = -(1 << 41)
-            ids_c, kq_c = _chunk_topk(c_ids[s:s + chunk], kq, top)
-            best_ids.append(ids_c)
-            best_kq.append(kq_c)
-        ids_m = np.concatenate(best_ids, axis=1)
-        kq_m = np.concatenate(best_kq, axis=1)
-        ids_m, kq_m = _merge_topk(ids_m, kq_m, top)
-        sc_m = kq_m / _ADC_SCALE
-        return pd.DataFrame({
-            "query_id": np.repeat(q_ids, ids_m.shape[1]),
-            "neighbor_id": ids_m.reshape(-1),
-            "_adc": sc_m.reshape(-1)})
+        return _adc_rows(q_ids, *_adc_top(
+            q_ids, lut, c_pdf[id_col].to_numpy(), c_pdf["codes"], m, ksub,
+            shortlist, exclude_self, off=q_pdf["_off"].to_numpy()))
 
-    local = (probed.groupBy(*group_keys)
-             .cogroup(codes.groupBy(*group_keys))
-             .applyInPandas(lambda ql, cl: bucket_adc(ql, cl),
-                            "query_id long, neighbor_id long, _adc double"))
+    local = (probed.groupBy("bucket")
+             .cogroup(codes.groupBy("bucket"))
+             .applyInPandas(bucket_adc, _ADC_ROWS))
     if exclude_self:
         local = local.filter(F.col("query_id") != F.col("neighbor_id"))
     # Multi-assignment replicas surface the same (query, neighbor) from

@@ -859,10 +859,7 @@ def vec_ann_ivf_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = train_centroids(e, n_clusters=16, sample_rows=2000, iters=10,
                            sample_mat=mat)
     index = ivf_assign(e, cent, n_assign=3)
-    # prune_buckets=False: queries == the whole corpus here, so every
-    # bucket is probed and the prune pass would filter nothing — the
-    # scale-safe pruning default is for serving-shaped |Q| << clusters.
-    return (ivf_search(index, e, cent, n_probe=6, k=1, prune_buckets=False)
+    return (ivf_search(index, e, cent, n_probe=6, k=1)
             .withColumnRenamed("query_id", "vec_id")
             .orderBy("vec_id"))
 
@@ -909,9 +906,10 @@ def vec_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory-prunable under a partitionBy(bucket) layout) while
     residual PQ codes bound the BYTES (~32× under raw float32), and
     residual-ADC scoring is q·centroid + m table lookups per pair. The
-    per-query LUT travels WITH the query through the bucket cogroup
-    (512 floats), so nothing corpus-sized is ever broadcast or
-    shuffled; the shortlist pays the exact rerank. Rows-only; recall@1
+    unit query vector travels WITH the query through the bucket cogroup
+    (64 doubles; the LUT is rebuilt per cell), so nothing corpus-sized
+    is ever broadcast or shuffled; the shortlist pays the exact rerank.
+    Rows-only; recall@1
     vs exact kNN pinned >= 0.9 in tests (measured 0.954 at
     n_assign=3 / n_probe=8 / shortlist=64 — multi-assignment is the
     same recall lever vec_ann_ivf uses; single-assignment measured

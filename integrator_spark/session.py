@@ -52,6 +52,39 @@ RUNTIME_CONFS: dict[str, str] = {
 STATE_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
 
 
+def _package_zip(dest_dir: str) -> str:
+    """Zip this package's ``.py`` sources into ``dest_dir`` and return
+    the zip's path. The name carries a hash of the sources, so every
+    process running the same tree shares one zip instead of leaving one
+    per process: it is written only when absent, through a temp file
+    and ``os.replace``, so no reader sees a half-written zip and two
+    concurrent writers leave the same bytes."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    files = sorted(os.path.join(root, fn)
+                   for root, _dirs, fns in os.walk(pkg_dir)
+                   for fn in fns if fn.endswith(".py"))
+    digest = hashlib.sha256()
+    for full in files:
+        with open(full, "rb") as f:
+            digest.update(os.path.relpath(full, pkg_dir).encode())
+            digest.update(hashlib.sha256(f.read()).digest())
+    zip_path = os.path.join(
+        dest_dir, f"integrator_spark_pkg_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        fd, tmp = tempfile.mkstemp(suffix=".zip", dir=dest_dir)
+        with os.fdopen(fd, "wb") as out, zipfile.ZipFile(out, "w") as zf:
+            for full in files:
+                zf.write(full, os.path.join(
+                    "integrator_spark", os.path.relpath(full, pkg_dir)))
+        os.chmod(tmp, 0o644)             # mkstemp makes it owner-only
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via addPyFile.
 
@@ -59,26 +92,16 @@ def _ship_package(spark: SparkSession) -> None:
     *reference* — so every worker must be able to import
     ``integrator_spark``. On a real cluster this zip ride-along is the
     standard deployment; in local mode it also covers driver processes
-    whose CWD isn't the repo root (e.g. the verification driver).
+    whose CWD isn't the repo root (e.g. the verification driver). The
+    zip lives in the system temp directory and must outlive this call
+    (workers fetch it lazily), so it is shared, not deleted.
     """
     sc = spark.sparkContext
     if getattr(sc, "_integrator_spark_shipped", False):
         return
     import tempfile
-    import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(),
-                            f"integrator_spark_pkg_{os.getpid()}.zip")
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    arc = os.path.join("integrator_spark",
-                                       os.path.relpath(full, pkg_dir))
-                    zf.write(full, arc)
-    sc.addPyFile(zip_path)
+    sc.addPyFile(_package_zip(tempfile.gettempdir()))
     sc._integrator_spark_shipped = True
 
 

@@ -60,3 +60,19 @@ def test_build_session_ships_package_to_workers(tmp_path):
                        text=True, timeout=240)
     assert p.returncode == 0, p.stderr[-2000:]
     assert "rows 18" in p.stdout
+
+
+def test_package_zip_is_written_once(tmp_path):
+    # Every session ships the package as a zip in the temp directory;
+    # the zip is named by a hash of the sources, so building it again
+    # (another process of the same tree) reuses it instead of leaving
+    # a second file behind.
+    import zipfile
+
+    from integrator_spark.session import _package_zip
+
+    first = _package_zip(str(tmp_path))
+    assert _package_zip(str(tmp_path)) == first
+    assert os.listdir(tmp_path) == [os.path.basename(first)]
+    names = zipfile.ZipFile(first).namelist()
+    assert "integrator_spark/session.py" in names

@@ -283,17 +283,33 @@ def test_knn_exact_zero_vector_same_rows_on_both_routes(spark, monkeypatch):
     # budget) and the crossJoin reference must return the same rows.
     # The broadcast route must not normalize the zero vector into a
     # NaN row on the driver either (numpy's invalid-divide raises).
+    # PQ and IVF-PQ follow the same rule; their shortlist holds every
+    # other vector, so the exact rerank returns the exact top-k.
     import numpy as np
 
     from integrator_spark.operators import budget
+    from integrator_spark.operators.ivf import train_centroids
     from integrator_spark.operators.knn import knn_bruteforce, knn_exact
+    from integrator_spark.operators.pq import (
+        ivfpq_encode,
+        ivfpq_search,
+        ivfpq_train,
+        pq_encode,
+        pq_search,
+        pq_train,
+    )
 
     data = [(i, [float((i * 5 + j * 3) % 7) + 1.0 for j in range(6)])
             for i in range(8)]
     data.append((8, [0.0] * 6))
     emb = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+    cb = pq_train(emb, m=3, ksub=4, sample_rows=9, iters=3)
+    codes = pq_encode(emb, cb)
+    cent = train_centroids(emb, n_clusters=2, sample_rows=9, iters=3)
+    ivf_cb = ivfpq_train(emb, cent, m=3, ksub=4, sample_rows=9, iters=3)
+    ivf_codes = ivfpq_encode(emb, cent, ivf_cb)
     key = lambda df: sorted(  # noqa: E731
-        (r.vec_id, r.neighbor_id, r.cos_sim) for r in df.collect())
+        tuple(r)[:3] for r in df.collect())
     for k in (1, 3):
         with np.errstate(invalid="raise"):
             default = key(knn_exact(emb, k=k))
@@ -304,6 +320,34 @@ def test_knn_exact_zero_vector_same_rows_on_both_routes(spark, monkeypatch):
         assert key(knn_bruteforce(emb, k=k)) == default, k
         assert len(default) == 8 * k
         assert all(8 not in (q, n) for q, n, _ in default)
+    with np.errstate(invalid="raise"):
+        pq = key(pq_search(codes, emb, emb, cb, k=3, shortlist=8,
+                           exclude_self=True))
+    with monkeypatch.context() as mp:
+        mp.setattr(budget, "DRIVER_BUDGET_BYTES", 0)
+        pq_forced = key(pq_search(codes, emb, emb, cb, k=3, shortlist=8,
+                                  exclude_self=True))
+    ivfpq = key(ivfpq_search(ivf_codes, emb, emb, cent, ivf_cb, n_probe=2,
+                             k=3, shortlist=8, exclude_self=True))
+    assert pq == pq_forced == ivfpq == default
+
+
+def test_unit_rows_drops_zero_rows_and_divides_in_place():
+    import numpy as np
+
+    from integrator_spark.operators.knn import unit_rows
+
+    mat = np.array([[3.0, 4.0], [0.0, 0.0], [0.0, 2.0]])
+    with np.errstate(invalid="raise", divide="raise"):
+        keep, unit = unit_rows(mat)
+    assert keep.tolist() == [True, False, True]
+    assert unit.tolist() == [[0.6, 0.8], [0.0, 1.0]]
+    full = np.array([[3.0, 4.0], [0.0, 2.0]])
+    keep, unit = unit_rows(full)
+    assert keep.all() and unit is full
+    assert full.tolist() == [[0.6, 0.8], [0.0, 1.0]]
+    keep, unit = unit_rows(np.zeros((2, 3)))
+    assert not keep.any() and unit.shape == (0, 3)
 
 
 def test_pipeline_validates_and_publishes(spark, tmp_path):
@@ -528,22 +572,46 @@ def test_ivf_matmul_recall_at_least_090(spark):
     assert recall >= 0.9, f"ivf_matmul recall {recall}"
 
 
-def test_ivf_search_is_lazy_by_default():
-    # Bucket pruning runs an EAGER job at call time (localCheckpoint +
-    # distinct().collect() of probed buckets), so it must be opt-in:
-    # the default call keeps the usual fully-lazy DataFrame contract
-    # (r6 advisor — external callers shouldn't trigger jobs by
-    # constructing a result they may never act on).
+def test_ivf_search_is_lazy_by_default(spark):
+    # Building either search returns a lazy DataFrame: no Spark job
+    # starts until it is acted on (external callers should not trigger
+    # jobs by constructing a result they may never use).
     import inspect
 
-    from integrator_spark.operators.ivf import ivf_search
-    assert inspect.signature(ivf_search) \
-        .parameters["prune_buckets"].default is False
+    from integrator_spark.io import load_table
+    from integrator_spark.operators.ivf import (
+        ivf_assign,
+        ivf_search,
+        train_centroids,
+    )
+    from integrator_spark.operators.pq import (
+        ivfpq_encode,
+        ivfpq_search,
+        ivfpq_train,
+    )
+    from .conftest import TEST_SF_DIR
+
+    removed = {"prune_buckets", "split_hot_buckets", "hot_bucket_rows"}
+    for fn in (ivf_search, ivfpq_search):
+        assert not removed & set(inspect.signature(fn).parameters)
+    e = load_table(spark, TEST_SF_DIR, "embeddings") \
+        .filter(F.col("vec_id") < 60)
+    cent = train_centroids(e, n_clusters=4, sample_rows=60, iters=3)
+    cb = ivfpq_train(e, cent, m=8, ksub=8, sample_rows=60, iters=3)
+    index = ivf_assign(e, cent)
+    codes = ivfpq_encode(e, cent, cb)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    ivf_out = ivf_search(index, e, cent, n_probe=2, k=1)
+    ivfpq_out = ivfpq_search(codes, e, e, cent, cb, n_probe=2, k=1,
+                             shortlist=8)
+    assert dag.nextJobId() == before
+    assert ivf_out.count() == 60 and ivfpq_out.count() == 60
 
 
 def test_minhash_signatures_lazy_by_default(spark):
-    # Same lazy-construction contract as ivf_search/ivfpq_search's
-    # opt-in pruning (r6/r7 advisors): constructing signatures must not
+    # Same lazy-construction contract as ivf_search/ivfpq_search
+    # (r6/r7 advisors): constructing signatures must not
     # run the dominant shingle-hash aggregation job; persist() is lazy,
     # the eager localCheckpoint is opt-in.
     import inspect
@@ -1190,10 +1258,11 @@ def test_pq_search_budget_routes_query_collect(spark, monkeypatch):
     nq = 120
     budget = nq * (8 * 16 * 8 + 64 * 8) - 1   # one byte under the need
 
-    def boom(self):
+    def boom(self, *args, **kwargs):
         raise AssertionError("over-budget pq_search collected to driver")
     monkeypatch.setattr(bmod, "DRIVER_BUDGET_BYTES", budget)
     monkeypatch.setattr(DataFrame, "toPandas", boom)
+    monkeypatch.setattr(DataFrame, "toArrow", boom)
     got = sorted(
         (r.query_id, r.neighbor_id, r.cos_sim, r.rank)
         for r in pq_search(codes, e, e, cb, **kw).collect())
@@ -1294,77 +1363,6 @@ def test_ivfpq_residual_adc_decomposition_is_tight(spark):
         a, b = vecs[r.query_id], vecs[r.neighbor_id]
         true = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
         assert abs(r.cos_sim - round(true, 6)) <= 1e-6, r
-
-
-def test_ivfpq_hot_bucket_split_is_result_invariant(spark):
-    # Salting hot cells (per-task bound regardless of cell skew) must
-    # not change results for single-assignment indexes: a tiny
-    # hot_bucket_rows forces every cell to split, and the output must
-    # be byte-identical to the unsplit path (each pair scored once;
-    # shard top-shortlists are supersets of bucket ones; the global
-    # window extracts the same true ADC top-shortlist either way).
-    from integrator_spark.io import load_table
-    from integrator_spark.operators.ivf import train_centroids
-    from integrator_spark.operators.pq import (
-        ivfpq_encode,
-        ivfpq_search,
-        ivfpq_train,
-    )
-    from .conftest import TEST_SF_DIR
-
-    e = load_table(spark, TEST_SF_DIR, "embeddings")
-    cent = train_centroids(e, n_clusters=8, sample_rows=2000, iters=5)
-    cb = ivfpq_train(e, cent, m=8, ksub=32, sample_rows=2000, iters=5)
-    kw = dict(n_probe=4, k=2, shortlist=16, exclude_self=True)
-    codes1 = ivfpq_encode(e, cent, cb, n_assign=1)
-    plain = sorted(map(tuple, ivfpq_search(
-        codes1, e, e, cent, cb, **kw).collect()))
-    split = sorted(map(tuple, ivfpq_search(
-        codes1, e, e, cent, cb, split_hot_buckets=True,
-        hot_bucket_rows=20, **kw).collect()))
-    assert plain == split and len(plain) == 1000
-    # Multi-assignment: the shortlist tail may differ (see docstring),
-    # but the split path must not LOSE rank-1 quality — it only ever
-    # feeds more candidates to the exact rerank.
-    codes2 = ivfpq_encode(e, cent, cb, n_assign=2)
-    p1 = {r.query_id: r.cos_sim for r in ivfpq_search(
-        codes2, e, e, cent, cb, **kw).collect() if r.rank == 1}
-    s1 = {r.query_id: r.cos_sim for r in ivfpq_search(
-        codes2, e, e, cent, cb, split_hot_buckets=True,
-        hot_bucket_rows=20, **kw).collect() if r.rank == 1}
-    assert set(p1) == set(s1)
-    assert all(s1[q] >= p1[q] - 1e-9 for q in p1)
-
-
-def test_ivfpq_prune_buckets_is_result_invariant(spark):
-    # Pruning only drops cells NO query probes (empty cogroups), so
-    # results must be byte-identical; and the default call must stay
-    # lazy (no probe job at construction) — same contract as
-    # ivf_search's opt-in pruning.
-    import inspect
-
-    from integrator_spark.io import load_table
-    from integrator_spark.operators.ivf import train_centroids
-    from integrator_spark.operators.pq import (
-        ivfpq_encode,
-        ivfpq_search,
-        ivfpq_train,
-    )
-    from .conftest import TEST_SF_DIR
-
-    assert inspect.signature(ivfpq_search) \
-        .parameters["prune_buckets"].default is False
-    e = load_table(spark, TEST_SF_DIR, "embeddings")
-    cent = train_centroids(e, n_clusters=16, sample_rows=2000, iters=5)
-    cb = ivfpq_train(e, cent, m=8, ksub=32, sample_rows=2000, iters=5)
-    codes = ivfpq_encode(e, cent, cb, n_assign=1)
-    serve = e.filter(F.col("vec_id") % 100 == 0)   # 5 queries, 2 cells
-    kw = dict(n_probe=2, k=1, shortlist=8)
-    plain = sorted(map(tuple, ivfpq_search(
-        codes, e, serve, cent, cb, **kw).collect()))
-    pruned = sorted(map(tuple, ivfpq_search(
-        codes, e, serve, cent, cb, prune_buckets=True, **kw).collect()))
-    assert plain == pruned and len(plain) == 5
 
 
 def test_knn_exact_none_estimate_falls_back_to_stats_job(spark):
@@ -3525,12 +3523,12 @@ def test_forced_distributed_route_parity(spark, monkeypatch, name):
 @pytest.mark.parametrize("name", ["dedup_cluster", "spatial_dbscan",
                                   "graph_triangles", "vec_ann_lsh",
                                   "vec_hamming_topk",
-                                  "vec_ann_graph_search"])
+                                  "vec_ann_graph_search", "vec_ann_pq"])
 def test_result_independent_of_route_and_partitions(spark, monkeypatch,
                                                     name):
     """One query per budget-gated family (connected components, CSR
     triangles, cosine residual, Hamming scan, graph ANN build and
-    search) returns the same rows on
+    search, float PQ query LUTs) returns the same rows on
     {default budget, budget 0} x {3, 32} initial shuffle partitions.
     Batch shuffles start at initialPartitionNum while AQE coalescing is
     on; each count runs in its own session so the shared conf is left
